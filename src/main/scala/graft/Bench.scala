@@ -23,67 +23,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val hostAtStart = hostStats()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle/spill temp under fast storage (graft.core.LocalDirs):
-    // the per-map-task shuffle-file I/O on the ext4 root measured as
-    // HALF the per-SQL-action floor (90.7 → 45.3 ms, FloorProbe) — a
-    // where-temp-bytes-live choice, not a change to what any query
-    // computes. SPARK_GRAFT_LOCAL_DIR=default reproduces the old path.
-    var builder = graft.core.LocalDirs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalesce posture, MEASURED (r17 A/B, 30-heavy subset,
-      // min-of-2 each side): parallelismFirst=false (the docs-
-      // recommended "respect advisory size" setting) totals 66.1 s vs
-      // 60.7 s for the default true — at sf0.1 most exchanges carry
-      // few bytes but REAL per-row compute (ordered folds, edit
-      // distances), so coalescing them to one advisory-sized task
-      // serializes that compute (rel_copurchase +1.5 s, sim_kmeans
-      // +1.1, dedup_ngram_jaccard +1.4) and only plan-heavy entries
-      // win (adv_composite_match -3.9, ta_rrf -0.8). Byte-blind
-      // coalescing is the wrong model for this catalog; the default
-      // stays parallelismFirst=true (scale-adaptive: tracks
-      // defaultParallelism, not a local constant). Env knob kept so
-      // the A/B stays reproducible.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Janino compile-cache sizing: Spark's default keeps only 100
-      // generated classes, but 270 entries × several codegen units
-      // vastly exceed that — the sf0.001 warm pass self-evicts and the
-      // measured run recompiles (r18 A/B below; knob reproduces it).
-      // Memory cost is bounded: generated classes of this catalog.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      // ObjectHashAggregate fallback sizing: Spark flips every object
-      // aggregation (top_k_structs, the collect_set/collect_list behind
-      // ordered folds and pair postings) to sort-based processing after
-      // only 128 DISTINCT KEYS per task — serializing each buffer into
-      // an external sorter whose memory tracking SizeEstimator-samples
-      // the buffers (the hottest parked frames of the r18 sampler on
-      // ta_rrf). This engine's object-agg buffers are BOUNDED by
-      // construction (k-row heaps, dfCap'd postings, per-order item
-      // sets), so hash mode costs keys/task x bounded-state memory
-      // (~80 MB at the 262144 default worst case) and the fallback is
-      // pure overhead. Measured (18-entry object-agg subset, idle host
-      // both sides, min-of-3): 8.60 -> 7.46 s. Env knob reproduces the
-      // A/B; production would size it to executor memory / state bound.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "262144"))
-      .config("spark.ui.enabled", "false")
-    // Dev-only A/B knob (default empty = no behavioral change): extra
-    // session confs as "k=v;k=v" — how the shuffle-writer/floor A/Bs
-    // below were measured without forking the harness per configuration.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").filter(_.nonEmpty)
-      .foreach(_.split(";").foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder = builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Metrics.register(spark)
+    val spark = GraftSession()
     // Warm up JVM/codegen/parquet reader so the first measured query isn't
     // charged ~5s of one-time session cost.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -160,16 +100,10 @@ object Bench {
     // big frames (PERF_NOTES "batch noise"), and re-measuring the rows
     // that dominate the total makes the artifact's minima
     // self-confirming instead of needing a manual isolated follow-up.
-    // Each isolated rep runs COLD-CACHE (session cache + DfCache bases +
-    // the graph rank memo cleared first): a warm rerun would exclude
-    // the one-time base build that a standalone entry pays, silently
-    // mixing two protocols in the committed minima series.
-    def clearSessionCaches(): Unit = {
-      graft.core.DfCache.clearAll()
-      graft.operators.Graph.rankBasesClear()
-      graft.queries.AnalysisQueries.nDocsTfMemoClear()
-      spark.catalog.clearCache()
-    }
+    // Each isolated rep runs COLD-CACHE (GraftSession.coldReset first):
+    // a warm rerun would exclude the one-time base build that a
+    // standalone entry pays, silently mixing two protocols in the
+    // committed minima series.
     val results =
       if (!sys.env.get("SPARK_GRAFT_BENCH_ISOLATED").contains("1")) batchResults
       else {
@@ -182,7 +116,7 @@ object Bench {
             // the batch number stays in the min: it measured the same
             // count() protocol, just under suite contention
             val best = (0 until 3).foldLeft(t) { (b, _) =>
-              clearSessionCaches()
+              GraftSession.coldReset(spark)
               val (tN, okN) = timed(name, fn)
               if (okN) math.min(b, tN) else b
             }

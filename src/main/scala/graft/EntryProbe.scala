@@ -1,37 +1,44 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Dev harness: run one catalog entry cold-cache with a SparkListener
-  * capturing every job's wall time, task count and stage names — the
-  * per-entry breakdown r17's throwaway profiler produced, kept this
-  * round because every target of the r18 verdict list needs one.
+/** Dev harness: run one catalog entry cold-cache (the bench's
+  * [[GraftSession.coldReset]] before every rep) and print, per rep:
   *
-  * Usage: sbt "runMain graft.EntryProbe <query> [reps]"
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_LOCAL_DIR
+  *  - every job's wall time, task count and stage names (a
+  *    SparkListener), plus the driver time between jobs;
+  *  - for streaming entries, every micro-batch's durationMs
+  *    decomposition (queryPlanning, getBatch, addBatch, walCommit,
+  *    commitOffsets, triggerExecution) and the query start/stop wall
+  *    times — most of a bounded drain's cost is driver-side machinery
+  *    between jobs, which the job listener cannot see. These lines
+  *    appear only when a micro-batch runs.
+  *
+  * With `explain`, the entry's formatted physical plan follows the reps.
+  *
+  * `SPARK_GRAFT_SAMPLE=1` adds an in-process thread sampler (no
+  * profiler attach needed): every executor thread is sampled
+  * ~50 Hz, bucketed by the deepest frame inside the state-store commit
+  * path, and the histogram printed at exit; `SPARK_GRAFT_SAMPLE_ALL=1`
+  * buckets every executor frame, not only the state path.
+  *
+  * Usage: sbt "runMain graft.EntryProbe <query> [reps=2] [explain]"
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_WARM_DIR, SPARK_GRAFT_CPUS
+  * (default: available processors), SPARK_GRAFT_LOCAL_DIR,
+  * SPARK_GRAFT_EXTRA_CONF, SPARK_GRAFT_SAMPLE, SPARK_GRAFT_SAMPLE_ALL
   */
 object EntryProbe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
-    val reps = args.drop(1).headOption.map(_.toInt).getOrElse(2)
+    val reps = args.drop(1).find(_.forall(_.isDigit)).map(_.toInt).getOrElse(2)
+    if (!SparkEntry.queries.contains(name)) {
+      System.err.println(s"unknown query '$name'; valid names:\n  " +
+        SparkEntry.queries.keys.toSeq.sorted.mkString("\n  "))
+      sys.exit(1)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.LocalDirs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000")) // see Bench
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "262144")) // see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Metrics.register(spark)
-    import org.apache.spark.sql.functions._
+    val spark = GraftSession()
     spark.range(1000000).selectExpr("sum(id)").collect()
     val fn = SparkEntry.queries(name)
     // plan/codegen warm at the smallest sf (the bench protocol)
@@ -60,19 +67,71 @@ object EntryProbe {
       }
     })
 
-    def clearSessionCaches(): Unit = {
-      graft.core.DfCache.clearAll()
-      graft.operators.Graph.rankBasesClear()
-      spark.catalog.clearCache()
+    @volatile var t0 = System.nanoTime()
+    def ms(t: Long): Double = (System.nanoTime() - t) / 1e6
+    spark.streams.addListener(new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        println(f"  [${ms(t0)}%8.1f ms] query START  ${e.name}")
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        println(f"  [${ms(t0)}%8.1f ms] query STOP")
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        val p = e.progress
+        val dur = {
+          import scala.jdk.CollectionConverters._
+          p.durationMs.asScala.toSeq.sortBy(-_._2)
+            .map { case (k, v) => s"$k=$v" }.mkString(" ")
+        }
+        val state = p.stateOperators.map(s =>
+          s"commit=${s.commitTimeMs}ms rows=${s.numRowsTotal}").mkString(",")
+        println(f"  [${ms(t0)}%8.1f ms] batch ${p.batchId}%2d " +
+          f"rows=${p.numInputRows}%6d  $dur  [$state]")
+      }
+    })
+
+    val histo = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    if (sys.env.get("SPARK_GRAFT_SAMPLE").contains("1")) {
+      val sampleAll = sys.env.get("SPARK_GRAFT_SAMPLE_ALL").contains("1")
+      val t = new Thread(() => {
+        while (true) {
+          Thread.getAllStackTraces.forEach { (th, frames) =>
+            if (th.getName.startsWith("Executor task launch")) {
+              val inCommit = if (sampleAll) 0 else frames.indexWhere(f =>
+                f.getClassName.contains("HDFSBackedStateStore") ||
+                  f.getClassName.contains("StateStoreRDD") ||
+                  f.getClassName.contains("statefulOperators") ||
+                  f.getClassName.contains("SymmetricHashJoin"))
+              if (inCommit >= 0 && frames.nonEmpty) {
+                // key = first frame that is NOT low-level parking/IO glue,
+                // plus the blocking frame itself — shows WHAT parked threads
+                // are waiting in, not just that they parked
+                val skip = Set("jdk.internal.misc.Unsafe", "java.lang.Object",
+                  "java.util.concurrent.locks.LockSupport",
+                  "java.util.concurrent.locks.AbstractQueuedSynchronizer")
+                val inf = frames.filter(f => !skip.contains(f.getClassName))
+                  .take(4)
+                  .map(f => s"${f.getClassName.replace("org.apache.spark.", "").replace("sql.execution.streaming.", "")}.${f.getMethodName}")
+                  .mkString(" < ")
+                val parked = if (frames.headOption.exists(f =>
+                  skip.contains(f.getClassName))) "PARKED: " else ""
+                histo.merge(parked + inf, 1, (a, b) => a + b)
+              }
+            }
+          }
+          Thread.sleep(20)
+        }
+      })
+      t.setDaemon(true)
+      t.start()
     }
 
     (1 to reps).foreach { i =>
-      clearSessionCaches()
+      GraftSession.coldReset(spark)
       jobs.synchronized(jobs.clear())
-      val t0 = System.nanoTime()
+      t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
-      val total = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200) // drain listener
+      val total = ms(t0) / 1e3
+      Thread.sleep(300) // drain listeners
       println(f"== $name rep $i: $total%.3f s ($n rows), ${jobs.size} jobs ==")
       jobs.foreach { j =>
         println(f"  job ${j.id}%3d ${j.ms}%8.1f ms ${j.tasks}%5dt  ${j.stages.take(120)}")
@@ -80,6 +139,14 @@ object EntryProbe {
       val accounted = jobs.map(_.ms).sum / 1e3
       println(f"  [sum of jobs: $accounted%.3f s; gaps (driver): ${total - accounted}%.3f s]")
     }
+    if (!histo.isEmpty) {
+      import scala.jdk.CollectionConverters._
+      println("== state-path sample histogram (top frame of sampled executor threads) ==")
+      histo.asScala.toSeq.sortBy(-_._2).take(25).foreach { case (k, v) =>
+        println(f"  $v%5d  $k")
+      }
+    }
+    if (args.contains("explain")) fn(spark, sfDir).explain("formatted")
     spark.stop()
   }
 }

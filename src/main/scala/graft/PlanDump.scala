@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: write `explain("formatted")` for the named queries to
   * `<outDir>/<name>_<suffix>.txt` — the judge-facing plan evidence.
   * Usage: sbt "runMain graft.PlanDump <outDir> <suffix> <q1,q2,...>"
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: available
+  * processors)
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -13,20 +13,7 @@ object PlanDump {
     // scans (see Checkpoints.planOnly) — plans here are never executed
     System.setProperty("graft.plan.nocheckpoint", "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.LocalDirs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000")) // see Bench
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "262144")) // see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     names.split(",").foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** RP-LSH index-tuning harness — the measurement behind the
@@ -21,7 +20,8 @@ import org.apache.spark.sql.functions._
   *   "n":n,"sf":dir}`.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=<frame> runMain graft.RpLshTune
-  * [bits,bits,...]` (default sweep 8,10,12). */
+  * [bits,bits,...]` (default sweep 8,10,12); `SPARK_GRAFT_CPUS`
+  * defaults to the available processors. */
 object RpLshTune {
 
   private val Threshold = 0.35 // the catalog entry's NearDupThreshold
@@ -29,17 +29,10 @@ object RpLshTune {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sweep =
       if (args.nonEmpty) args(0).split(",").map(_.trim.toInt).toSeq
       else Seq(8, 10, 12)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val emb = core.Tables.load(spark, sfDir, "embeddings")
     val n = emb.count()

@@ -17,6 +17,7 @@ import graft.sources.{BinaryDocs, Prompts, QaSources, ResultsSink}
   *   parquet] [--approach mapreduce|truncation] [--format hybrid|json|
   *   plain] [--prompt-set hybrid] [--question "..."] [--limit N]
   *   [--out runs]
+  * Env: SPARK_GRAFT_CPUS (default: available processors)
   */
 object RunPipeline {
 
@@ -91,16 +92,7 @@ object RunPipeline {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Metrics.register(spark)
+    val spark = GraftSession()
     val ts = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")
       .format(java.time.LocalDateTime.now())
     run(spark, cfg, ts)

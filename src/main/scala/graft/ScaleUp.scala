@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** 10× scale-frame generator — the measurement companion of
@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
   *  - Dimension tables (region, nation) are NOT replicated — at any
   *    scale they stay the bounded broadcast side.
   *
-  * Usage: `runMain graft.ScaleUp <srcSfDir> <outDir> [copies=10] [skew]`.
+  * Usage: `runMain graft.ScaleUp <srcSfDir> <outDir> [copies=10] [skew]`;
+  * `SPARK_GRAFT_CPUS` defaults to the available processors.
   * Writes only under <outDir> (intended: /tmp — testdata is
   * read-only).
   *
@@ -61,14 +62,7 @@ object ScaleUp {
     val out = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
     val skew = args.length > 3 && args(3) == "zipf"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // pairwise-distant copy tags: same-payload variants across copies
     // must not sit within the pair queries' small edit/Hamming radii

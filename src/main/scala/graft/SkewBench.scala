@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -37,7 +37,8 @@ import org.apache.spark.sql.types.DecimalType
   * collapses hot group keys map-side); measured to document THAT,
   * not to win.
   *
-  * Usage: `SPARK_GRAFT_SF_DIR=<skewFrame> runMain graft.SkewBench`. */
+  * Usage: `SPARK_GRAFT_SF_DIR=<skewFrame> runMain graft.SkewBench`;
+  * `SPARK_GRAFT_CPUS` defaults to the available processors. */
 object SkewBench {
 
   private val Salt = 32
@@ -80,16 +81,11 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1_skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // every variant below is a shuffle join: broadcast off, the static
+    // planner's and AQE's
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
 
     val orders = core.Tables.load(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))

@@ -1,27 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: sbt "runMain graft.Verify <sfDir> <outDir>"
+  * Env: SPARK_GRAFT_CPUS (default: available processors),
+  * SPARK_GRAFT_ONLY */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // fast shuffle/spill local dir (see graft.core.LocalDirs) — keeps
-    // the oracle dump inside the driver's budget; results unaffected
-    val spark = graft.core.LocalDirs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000")) // see Bench
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "262144")) // see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Metrics.register(spark)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names, same contract as
     // Bench); the driver leaves it unset and dumps everything.

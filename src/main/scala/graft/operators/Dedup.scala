@@ -370,20 +370,12 @@ object Dedup {
     * before y, as `struct(_1, _2)`. Shared by the postings pair join
     * here, the co-purchase pair table, and the Adamic-Adar wedge
     * expansion. r18: the interpreted higher-order-function nest
-    * ([[pairsOfLegacy]]) became the fused codegen kernel
+    * (kept as the parity oracle `LegacyOracles.pairsOfLegacy` in the
+    * test tree) became the fused codegen kernel
     * ([[PairKernels]]) — same struct sequence, whole-stage-codegen
     * participating; PairKernelsParitySpec pins kernel == legacy
     * row-for-row. */
   def pairsOf(ids: Column): Column = PairKernels.pairsOfCol(ids)
-
-  /** The pre-r18 formulation, kept VERBATIM as the parity oracle for
-    * PairKernelsParitySpec — THE one place the subtle
-    * 0-based-transform-index into 1-based-slice enumeration lives
-    * (`i + 2` skips x itself). Not on any query path. */
-  private[graft] def pairsOfLegacy(ids: Column): Column =
-    flatten(transform(ids, (x, i) =>
-      transform(slice(ids, i + 2, size(ids)), y =>
-        struct(x.as("_1"), y.as("_2")))))
 
   /** All cross pairs between two disjoint postings arrays, each emitted
     * with the smaller doc id first (ids are unique, so strict `<`). */

@@ -108,6 +108,7 @@ object AnalysisQueries extends graft.QueryModule {
   private val nDocsTfMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), java.lang.Double]()
   private[graft] def nDocsTfMemoClear(): Unit = nDocsTfMemo.clear()
+  private[graft] def nDocsTfMemoSize: Int = nDocsTfMemo.size()
   private def nDocsOfTf(spark: SparkSession, dir: String): Double =
     nDocsTfMemo.computeIfAbsent((spark, dir),
       _ => cachedTf(spark, dir).select(col("doc_id")).distinct()

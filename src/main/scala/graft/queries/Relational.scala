@@ -1905,7 +1905,8 @@ object Relational extends graft.QueryModule {
     * the replaced higher-order-function nest (CodegenFallback, ~60 µs
     * interpreted per row) is documented there, and
     * EditDistanceFuzzSpec's parity test pins kernel == legacy
-    * expression row-for-row. */
+    * expression (`LegacyOracles.legacyProbeSigsSql` in the test tree)
+    * row-for-row. */
   private[graft] def editProbe(long: DataFrame): DataFrame =
     long.select(col("p_partkey").as("part_b"),
         col("p_name").as("name_b"), col("p_size"), col("l"),
@@ -1913,47 +1914,6 @@ object Relational extends graft.QueryModule {
           col("p_name"), col("l"))).as("sg"))
       .select(col("part_b"), col("name_b"), col("p_size"),
         col("sg.ls").as("ls"), col("sg.i").as("i"), col("sg.seg").as("seg"))
-
-  /** The legacy HOF formulation of [[editProbe]]'s signature array,
-    * kept verbatim as the parity oracle for the fused kernel
-    * (EditDistanceFuzzSpec compares them element-for-element). */
-  private[graft] val legacyProbeSigsSql: String =
-    """array_distinct(transform(
-      |  filter(
-      |    flatten(transform(
-      |      array(named_struct('dl', -2, 'sh', 0),
-      |            named_struct('dl', -2, 'sh', 1),
-      |            named_struct('dl', -2, 'sh', 2),
-      |            named_struct('dl', -1, 'sh', 0),
-      |            named_struct('dl', -1, 'sh', 1),
-      |            named_struct('dl',  0, 'sh', -1),
-      |            named_struct('dl',  0, 'sh', 0),
-      |            named_struct('dl',  0, 'sh', 1),
-      |            named_struct('dl',  1, 'sh', -1),
-      |            named_struct('dl',  1, 'sh', 0),
-      |            named_struct('dl',  2, 'sh', -2),
-      |            named_struct('dl',  2, 'sh', -1),
-      |            named_struct('dl',  2, 'sh', 0)), ds ->
-      |      transform(sequence(0, 2), i -> named_struct(
-      |        'ls', CAST(l + ds.dl AS INT),
-      |        'i', CAST(i AS INT),
-      |        'st', CAST(i * ((l + ds.dl) div 3)
-      |          + greatest(0, i - (3 - (l + ds.dl) % 3)) + ds.sh AS INT),
-      |        'ln', CAST(((l + ds.dl) div 3)
-      |          + IF(i >= 3 - (l + ds.dl) % 3, 1, 0) AS INT))))),
-      |    s -> s.st >= 0 AND s.ln >= 1 AND s.st + s.ln <= l
-      |         AND s.ls >= 9),
-      |  s -> named_struct('ls', s.ls, 'i', s.i,
-      |    'seg', substring(p_name, s.st + 1, s.ln))))""".stripMargin
-
-  /** Legacy index-side segment array ([[legacyProbeSigsSql]]'s sibling
-    * parity oracle for [[graft.operators.EditKernels.segments]]). */
-  private[graft] val legacySegmentsSql: String =
-    """transform(sequence(0, 2), i -> named_struct(
-      |  'i', CAST(i AS INT),
-      |  'seg', substring(p_name,
-      |    CAST(i * (l div 3) + greatest(0, i - (3 - l % 3)) + 1 AS INT),
-      |    CAST((l div 3) + IF(i >= 3 - l % 3, 1, 0) AS INT))))""".stripMargin
 
   /** [[editDistancePairs]] over an explicit `(p_partkey, p_name,
     * p_size)` frame — the testable core (EditDistanceFuzzSpec drives it

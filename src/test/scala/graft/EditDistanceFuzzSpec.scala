@@ -155,10 +155,10 @@ class EditDistanceFuzzSpec extends SparkSpec {
     val both = names.select(
       graft.operators.EditKernels.probeSignaturesCol(col("p_name"), col("l"))
         .as("k_probe"),
-      expr(graft.queries.Relational.legacyProbeSigsSql).as("e_probe"),
+      expr(LegacyOracles.legacyProbeSigsSql).as("e_probe"),
       graft.operators.EditKernels.segmentsCol(col("p_name"), col("l"))
         .as("k_seg"),
-      expr(graft.queries.Relational.legacySegmentsSql).as("e_seg"))
+      expr(LegacyOracles.legacySegmentsSql).as("e_seg"))
       .collect()
     both.foreach { r =>
       assert(r.get(0) == r.get(1), s"probe sigs diverge: ${r.get(0)} vs ${r.get(1)}")

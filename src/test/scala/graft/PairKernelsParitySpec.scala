@@ -10,7 +10,7 @@ import graft.operators.Dedup
   * behind [[Dedup.pairsOf]] — the one idiom shared by the LSH postings
   * pair join, the co-purchase pair table and the Adamic-Adar wedge
   * expansion. These tests pin the kernel against the VERBATIM legacy
-  * expression ([[Dedup.pairsOfLegacy]]) row-for-row in explode order,
+  * expression ([[LegacyOracles.pairsOfLegacy]]) row-for-row in explode order,
   * across the element types the call sites use (bigint ids, strings,
   * (id, n) postings structs), plus the degenerate shapes (empty,
   * singleton, null array, null elements). */
@@ -31,7 +31,7 @@ class PairKernelsParitySpec extends SparkSpec {
         .sortBy(_._1)
     }
     val kernel = rows(Dedup.pairsOf(col(arr)))
-    val legacy = rows(Dedup.pairsOfLegacy(col(arr)))
+    val legacy = rows(LegacyOracles.pairsOfLegacy(col(arr)))
     assert(kernel.map(_._2.toString) == legacy.map(_._2.toString))
   }
 
@@ -77,7 +77,7 @@ class PairKernelsParitySpec extends SparkSpec {
     assertParity(df, "ids")
     val kernelNull = df.select(Dedup.pairsOf(col("ids")).as("p"))
       .filter(col("p").isNull).count()
-    val legacyNull = df.select(Dedup.pairsOfLegacy(col("ids")).as("p"))
+    val legacyNull = df.select(LegacyOracles.pairsOfLegacy(col("ids")).as("p"))
       .filter(col("p").isNull).count()
     assert(kernelNull == 1L && legacyNull == 1L)
   }
@@ -95,7 +95,7 @@ class PairKernelsParitySpec extends SparkSpec {
   test("schema matches the legacy nest exactly") {
     val df = Seq((1L, Seq(1L, 2L))).toDF("gid", "ids")
     val k = df.select(Dedup.pairsOf(col("ids")).as("p")).schema
-    val l = df.select(Dedup.pairsOfLegacy(col("ids")).as("p")).schema
+    val l = df.select(LegacyOracles.pairsOfLegacy(col("ids")).as("p")).schema
     assert(k == l)
   }
 }

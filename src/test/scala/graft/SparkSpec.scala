@@ -11,12 +11,18 @@ object SparkSpec {
     // exercise real task re-execution (plain local[n] pins
     // maxFailures = 1). Tests that assert on job failure still see the
     // same SparkException; the failing task just runs twice first.
+    //
+    // The shipped confs (GraftSession.confs) minus the extension: once
+    // graft.GraftExtensions is injected, experimental.extraOptimizations
+    // cannot switch UnionAggToGroupingSets / TokenFilterStrengthen off,
+    // and the rule-on vs rule-off comparisons (GroupingSetsFuzzSpec,
+    // PlanAuditSpec, PlanSpec) need that rule-off baseline — without it
+    // they would compare a plan with itself.
     val s = SparkSession.builder()
       .master("local[4, 2]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config(GraftSession.confs - "spark.sql.extensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
