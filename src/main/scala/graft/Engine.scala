@@ -22,8 +22,15 @@ import graft.sources.QaSources
   * val qa     = Engine.loadDataset(spark, "financebench", path, limit = Some(10))
   * val engine = Engine(format = "json", chunkSize = 512, overlap = 64)
   * val out    = engine.answers(documentsDf)       // chunk->map->filter->reduce
+  * val judg   = engine.judgedAnswers(documentsDf) // + judge
   * val judged = engine.judged(documentsDf)        // + judge + batching
   * }}}
+  *
+  * Both plan shapes (map-reduce and truncation) are unbatched judged
+  * answers with positional batching as the last step, so a caller that
+  * never reads `batch_id`/`item_number` (the one-row service ask) uses
+  * `judgedAnswers`/`truncationJudgedAnswers` and skips the global-order
+  * pass.
   */
 case class Engine(
     format: String = "hybrid",
@@ -52,6 +59,9 @@ case class Engine(
   def mapped(documents: DataFrame): DataFrame = pipeline.mapped(documents)
   /** Full MapReduce: per-doc answers + filtering stats (M3-M7/P9/A7). */
   def answers(documents: DataFrame): DataFrame = pipeline.answers(documents)
+  /** + judge (P7), without positional batching. */
+  def judgedAnswers(documents: DataFrame): DataFrame =
+    pipeline.judgedAnswers(documents)
   /** + judge & positional batching (O5/P7). */
   def judged(documents: DataFrame): DataFrame = pipeline.judged(documents)
 
@@ -88,27 +98,35 @@ case class Engine(
         col("t.truncation_applied").as("truncation_applied"),
         col("score"),
         when(col("score") > config.threshold, model.content(col("ttoks")))
-          .otherwise(lit("No answer found in document")).as("llm_answer"))
+          .otherwise(lit(MapReducePipeline.NoAnswer)).as("llm_answer"))
   }
 
-  /** Truncation pipeline + judge stage — the reference evaluates BOTH
-    * plan shapes with the same judge (async_evaluation applies to any
-    * pipeline's answers); same 5-way judgment + positional batching
-    * contract as MapReducePipeline.judged. */
-  def truncationJudged(documents: DataFrame,
+  /** Truncation pipeline + judge stage, without positional batching —
+    * the reference evaluates BOTH plan shapes with the same judge
+    * (async_evaluation applies to any pipeline's answers); same 5-way
+    * judgment as MapReducePipeline.judgedAnswers. */
+  def truncationJudgedAnswers(documents: DataFrame,
       contextWindow: Int = 128000, buffer: Int = 2000,
       strategy: String = "start"): DataFrame = {
     import org.apache.spark.sql.functions._
-    val a = truncationAnswers(documents, contextWindow, buffer, strategy)
     val scaled = qaFormat.scaleDown(col("score")) // back to 0-10
     // below-threshold scores are the truncation path's "no surviving
     // chunk"; routed through the model's judge slot like the MapReduce
     // path, so a custom model judges BOTH plan shapes
     val judgment = model.judge(scaled,
       when(col("score") <= config.threshold, lit(0)).otherwise(lit(1)))
-    MapReducePipeline.positionalBatches(
-      a.withColumn("judgment", judgment), col("doc_id"))
+    truncationAnswers(documents, contextWindow, buffer, strategy)
+      .withColumn("judgment", judgment)
   }
+
+  /** [[truncationJudgedAnswers]] + positional batching — the same
+    * contract as MapReducePipeline.judged. */
+  def truncationJudged(documents: DataFrame,
+      contextWindow: Int = 128000, buffer: Int = 2000,
+      strategy: String = "start"): DataFrame =
+    MapReducePipeline.positionalBatches(
+      truncationJudgedAnswers(documents, contextWindow, buffer, strategy),
+      org.apache.spark.sql.functions.col("doc_id"))
 }
 
 object Engine {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.pipeline.{MapReduceConfig, QaFormat, TextModel, ExtractiveModel}
+import graft.pipeline.{MapReduceConfig, MapReducePipeline, QaFormat, TextModel, ExtractiveModel}
 import graft.sources.{BinaryDocs, DocumentParser, Prompts}
 
 /** §3.3: the single-request service facade (webapp/backend/api/
@@ -11,12 +11,25 @@ import graft.sources.{BinaryDocs, DocumentParser, Prompts}
   * (the `_pipeline_cache` at endpoints.py:25-180) and the document fed
   * through the parser slot like the upload path.
   *
-  * N=1 latency posture: the plan is the same declarative pipeline as the
-  * batch path over a one-row local DataFrame — no shuffle partitions to
-  * spin up beyond the single aggregation, no scan. Engines (plan
-  * builders) are cached so repeated asks reuse analyzed fragments and
-  * the session's codegen cache; ServiceSpec asserts warm single-request
-  * latency.
+  * N=1 latency posture: the ask runs only the plan that produces its
+  * answer, over a one-row local DataFrame.
+  *  - Map-reduce runs ONE Spark job. The input is `coalesce(1)`'d, so its
+  *    partitioning is `SinglePartition` and the per-doc aggregate plans
+  *    with no Exchange: one stage, no AQE re-optimization between stages.
+  *  - Truncation runs NO job. Its plan is only Projects over the
+  *    `LocalRelation`, which `ConvertToLocalRelation` evaluates during
+  *    optimization. The input is left bare: a `coalesce` there would block
+  *    that fold and compile a codegen'd job per ask (the question tokens
+  *    are literals).
+  *  - Neither runs the judge's positional batching
+  *    (`Engine.judgedAnswers`/`truncationJudgedAnswers`): one row is
+  *    always `batch_id = 0, item_number = 1`, and [[QaAnswer]] returns
+  *    neither, so the batched plan's range-sampling and `zipWithIndex`
+  *    jobs would buy nothing.
+  * Engines (plan builders) are cached so repeated asks reuse analyzed
+  * fragments and the session's codegen cache; ServiceSpec pins the job
+  * counts, the absent shuffle, parity with the batched plans and warm
+  * single-request latency.
   */
 final case class QaAnswer(
     answer: String, score: Double, judgment: String,
@@ -87,11 +100,18 @@ class QaService(spark: SparkSession, model: TextModel = ExtractiveModel) {
     Prompts.resolve(Some(promptSet)) // fail fast on unknown set, like the factory
     val engine = engineFor(question, format, chunkSize, overlap, threshold)
     val docs = spark.createDataFrame(Seq((0L, text))).toDF("doc_id", "text")
-    val row = (pipelineType match {
+    val rows = (pipelineType match {
       case "truncation" =>
-        engine.truncationJudged(docs, contextWindow, buffer, strategy)
-      case _ => engine.judged(docs)
-    }).collect().head
+        engine.truncationJudgedAnswers(docs, contextWindow, buffer, strategy)
+      case _ => engine.judgedAnswers(docs.coalesce(1))
+    }).collect()
+    // an upload with no tokens has no chunk, so the per-doc aggregate
+    // returns no row: answer with the P9 canned row, like truncation does
+    if (rows.isEmpty) return QaAnswer(
+      answer = MapReducePipeline.NoAnswer, score = 0.0, judgment = "No answer",
+      chunksBefore = 0L, chunksAfter = 0L, retentionRate = 0.0,
+      promptSet = promptSet)
+    val row = rows.head
     def optLong(name: String): Long =
       if (row.schema.fieldNames.contains(name)) row.getAs[Long](name) else 1L
     QaAnswer(

@@ -117,6 +117,9 @@ object MapReducePipeline {
     * standalone function for callers outside a pipeline. */
   val defaultImprover: Column => Column = ExtractiveModel.improve
 
+  /** P9 canned answer for a document with no surviving chunk. */
+  val NoAnswer: String = "No answer found in document"
+
   /** O5 positional judge batching (async_evaluation.py:260, :389-404):
     * global position over `order` -> batches of `size`, 1-based item
     * numbers. Shared by the map-reduce and truncation judge paths. Uses
@@ -193,7 +196,7 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
         round(col("chunks_after") / col("chunks_before"), 4))
       // P9: error-row fabrication — no surviving chunk => canned answer
       .withColumn("llm_answer",
-        coalesce(col("top_content"), lit("No answer found in document")))
+        coalesce(col("top_content"), lit(MapReducePipeline.NoAnswer)))
       .drop("top_content")
   }
 

@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Test access to the session's listener bus, which is `private[spark]`:
+  * blocks until every event posted so far has reached every listener, so
+  * a spec can read what its listeners saw of the action it just ran. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
