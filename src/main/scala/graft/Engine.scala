@@ -26,11 +26,12 @@ import graft.sources.QaSources
   * val judged = engine.judged(documentsDf)        // + judge + batching
   * }}}
   *
-  * Both plan shapes (map-reduce and truncation) are unbatched judged
-  * answers with positional batching as the last step, so a caller that
-  * never reads `batch_id`/`item_number` (the one-row service ask) uses
-  * `judgedAnswers`/`truncationJudgedAnswers` and skips the global-order
-  * pass.
+  * Both plan shapes (map-reduce and truncation) have an unbatched form,
+  * `judgedAnswers`/`truncationJudgedAnswers`, for a caller that never
+  * reads `batch_id`/`item_number` (the one-row service ask): it skips
+  * the global-order pass. `judged` numbers the documents first and
+  * scores them above the range exchange; `truncationJudged` batches its
+  * judged answers last.
   */
 case class Engine(
     format: String = "hybrid",

@@ -12,23 +12,21 @@ import graft.sources.{BinaryDocs, DocumentParser, Prompts}
   * through the parser slot like the upload path.
   *
   * N=1 latency posture: the ask runs only the plan that produces its
-  * answer, over a one-row local DataFrame.
-  *  - Map-reduce runs ONE Spark job. The input is `coalesce(1)`'d, so its
-  *    partitioning is `SinglePartition` and the per-doc aggregate plans
-  *    with no Exchange: one stage, no AQE re-optimization between stages.
-  *  - Truncation runs NO job. Its plan is only Projects over the
-  *    `LocalRelation`, which `ConvertToLocalRelation` evaluates during
-  *    optimization. The input is left bare: a `coalesce` there would block
-  *    that fold and compile a codegen'd job per ask (the question tokens
-  *    are literals).
-  *  - Neither runs the judge's positional batching
-  *    (`Engine.judgedAnswers`/`truncationJudgedAnswers`): one row is
-  *    always `batch_id = 0, item_number = 1`, and [[QaAnswer]] returns
-  *    neither, so the batched plan's range-sampling and `zipWithIndex`
-  *    jobs would buy nothing.
+  * answer, over a one-row local DataFrame, and runs NO Spark job for
+  * either pipeline. Both plans are only a Filter and Projects over the
+  * `LocalRelation` (map-reduce scores and reduces the document inside its
+  * row, with no explode or aggregate), so `ConvertToLocalRelation`
+  * evaluates them during optimization and `collect` reads the folded
+  * rows. The input is left bare: a `coalesce` there would block that fold
+  * and compile a codegen'd job per ask (the question tokens are
+  * literals). Neither pipeline runs the judge's positional batching
+  * (`Engine.judgedAnswers`/`truncationJudgedAnswers`): one row is always
+  * `batch_id = 0, item_number = 1`, and [[QaAnswer]] returns neither, so
+  * the batched plan's range-sampling and `zipWithIndex` jobs would buy
+  * nothing.
   * Engines (plan builders) are cached so repeated asks reuse analyzed
-  * fragments and the session's codegen cache; ServiceSpec pins the job
-  * counts, the absent shuffle, parity with the batched plans and warm
+  * fragments and the session's codegen cache; ServiceSpec pins the zero
+  * job count, the folded plan, parity with the batched plans and warm
   * single-request latency.
   */
 final case class QaAnswer(
@@ -103,10 +101,10 @@ class QaService(spark: SparkSession, model: TextModel = ExtractiveModel) {
     val rows = (pipelineType match {
       case "truncation" =>
         engine.truncationJudgedAnswers(docs, contextWindow, buffer, strategy)
-      case _ => engine.judgedAnswers(docs.coalesce(1))
+      case _ => engine.judgedAnswers(docs)
     }).collect()
-    // an upload with no tokens has no chunk, so the per-doc aggregate
-    // returns no row: answer with the P9 canned row, like truncation does
+    // an upload with no tokens has no chunk, so map-reduce returns no
+    // row: answer with the P9 canned row, like truncation does
     if (rows.isEmpty) return QaAnswer(
       answer = MapReducePipeline.NoAnswer, score = 0.0, judgment = "No answer",
       chunksBefore = 0L, chunksAfter = 0L, retentionRate = 0.0,

@@ -76,16 +76,21 @@ object RunPipeline {
       case other => throw new IllegalArgumentException(
         s"unknown approach '$other' (mapreduce | truncation)")
     }
-    val runDir = ResultsSink.write(judged, cfg.outDir, Map(
-      "dataset" -> cfg.dataset, "approach" -> cfg.approach,
-      "format" -> cfg.format, "prompt_set" -> cfg.promptSet,
-      "question" -> cfg.question,
-      "prompts_json" -> Prompts.toJson(prompts)), timestampIso)
-    // the reference's end-of-run summary (base_pipeline.py:507-517):
-    // judgment distribution as one aggregation
-    val dist = judged.groupBy(col("judgment")).agg(count(lit(1)).as("n"))
-      .orderBy(col("judgment")).collect()
-      .map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(", ")
+    // two actions (the write, the summary) on one persisted result: the
+    // scoring, which `judged` runs above its range exchange, runs once
+    judged.persist()
+    val (runDir, dist) = try {
+      val runDir = ResultsSink.write(judged, cfg.outDir, Map(
+        "dataset" -> cfg.dataset, "approach" -> cfg.approach,
+        "format" -> cfg.format, "prompt_set" -> cfg.promptSet,
+        "question" -> cfg.question,
+        "prompts_json" -> Prompts.toJson(prompts)), timestampIso)
+      // the reference's end-of-run summary (base_pipeline.py:507-517):
+      // judgment distribution as one aggregation
+      (runDir, judged.groupBy(col("judgment")).agg(count(lit(1)).as("n"))
+        .orderBy(col("judgment")).collect()
+        .map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(", "))
+    } finally judged.unpersist()
     System.err.println(s"[run] $runDir  judgments: $dist")
     runDir
   }

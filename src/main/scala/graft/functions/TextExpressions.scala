@@ -90,6 +90,24 @@ object TruncateTokens {
 object TextKernels {
   import org.apache.spark.sql.catalyst.util.ArrayData
 
+  /** The token-window chunking kernel behind both forms of
+    * `split_chunks`: one (chunk_idx, chunk_text, token_count) row per
+    * chunk, where chunk_text is the source substring spanning the chunk's
+    * tokens. */
+  def splitChunks(t: UTF8String, size: Int, overlap: Int): Array[InternalRow] = {
+    val s = t.toString
+    val offs = Tokenizer.tokenize(s)
+    Tokenizer.chunkSpans(offs.length / 2, size, overlap).zipWithIndex.map {
+      case ((a, b), idx) =>
+        val chunk = s.substring(offs(2 * a), offs(2 * (b - 1) + 1))
+        new GenericInternalRow(Array[Any](
+          idx, UTF8String.fromString(chunk), b - a)): InternalRow
+    }
+  }
+
+  def splitChunksArray(t: UTF8String, size: Int, overlap: Int): ArrayData =
+    new GenericArrayData(splitChunks(t, size, overlap).asInstanceOf[Array[Any]])
+
   def truncateTokens(t: UTF8String, max: Int, mode: UTF8String): InternalRow = {
     val strategy = mode.toString
     val (out, orig, kept) = Tokenizer.truncate(t.toString, max, strategy)
@@ -530,21 +548,38 @@ case class SplitChunks(text: Expression, size: Expression, overlap: Expression)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val t = text.eval(input)
     if (t == null) return Nil
-    val s = t.asInstanceOf[UTF8String].toString
-    val sz = size.eval(input).asInstanceOf[Int]
-    val ov = overlap.eval(input).asInstanceOf[Int]
-    val offs = Tokenizer.tokenize(s)
-    val n = offs.length / 2
-    Tokenizer.chunkSpans(n, sz, ov).iterator.zipWithIndex.map {
-      case ((a, b), idx) =>
-        val chunk = s.substring(offs(2 * a), offs(2 * (b - 1) + 1))
-        new GenericInternalRow(Array[Any](
-          idx, UTF8String.fromString(chunk), b - a)): InternalRow
-    }.toSeq
+    TextKernels.splitChunks(t.asInstanceOf[UTF8String],
+      size.eval(input).asInstanceOf[Int], overlap.eval(input).asInstanceOf[Int])
+      .iterator
   }
   override protected def withNewChildrenInternal(
       cs: IndexedSeq[Expression]): SplitChunks = copy(cs(0), cs(1), cs(2))
   override def prettyName: String = "split_chunks"
+}
+
+/** `split_chunks_array(text, size, overlap)` — [[SplitChunks]]' chunks as
+  * one array value per row, from the same kernel. A projection, not a
+  * generator: the map-reduce answers score and reduce each document's
+  * chunks inside its own row (no explode, no regroup). Null text yields
+  * null. */
+case class SplitChunksArray(text: Expression, size: Expression, overlap: Expression)
+    extends TernaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] =
+    Seq(StringType, IntegerType, IntegerType)
+  override def first: Expression = text
+  override def second: Expression = size
+  override def third: Expression = overlap
+  override def dataType: DataType =
+    ArrayType(SplitChunks.elementSchema, containsNull = false)
+  override def nullSafeEval(t: Any, sz: Any, ov: Any): Any =
+    TextKernels.splitChunksArray(t.asInstanceOf[UTF8String],
+      sz.asInstanceOf[Int], ov.asInstanceOf[Int])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, sz, ov) =>
+      s"graft.functions.TextKernels.splitChunksArray($t, $sz, $ov)")
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): SplitChunksArray = copy(f, s, t)
+  override def prettyName: String = "split_chunks_array"
 }
 
 /** `split_chunks_chars(text, size, overlap, sep)` — C2, the reference's
@@ -910,6 +945,8 @@ object TextFunctions {
     col(TruncateTokens(ex(c), ex(maxTokens), ex(mode)))
   def split_chunks(c: Column, size: Column, overlap: Column): Column =
     col(SplitChunks(ex(c), ex(size), ex(overlap)))
+  def split_chunks_array(c: Column, size: Column, overlap: Column): Column =
+    col(SplitChunksArray(ex(c), ex(size), ex(overlap)))
   def split_chunks_chars(c: Column, size: Column, overlap: Column,
       sep: Column): Column =
     col(SplitChunksChars(ex(c), ex(size), ex(overlap), ex(sep)))

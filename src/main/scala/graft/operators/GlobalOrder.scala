@@ -14,6 +14,12 @@ import org.apache.spark.sql.types.LongType
   * positions. `RDD.zipWithIndex` is exactly that second half — its count job
   * and its main job share the range shuffle's map output, so the data is
   * shuffled once and no task ever holds more than one partition.
+  *
+  * Cost: `repartitionByRange` first runs a sampling job over `df`, and
+  * when `df` has no shuffle of its own that job recomputes all of it from
+  * the scan, then the shuffle's map stage computes it again. Number rows
+  * before expensive projections, not after (`MapReducePipeline.judged`
+  * numbers raw documents and scores them above the exchange).
   */
 object GlobalOrder {
 

@@ -11,9 +11,10 @@ import graft.functions.Tokenizer
   * chunk fan-out :252-268, score filter via formatters, per-QA gather
   * :151-166, reduce :270-286, stats :335-356).
   *
-  * Stages (all lazy DataFrames — Catalyst sees the whole graph):
-  *   documents --split_chunks--> chunks --map--> scored --filter-->
-  *   survivors --groupBy(doc)--> reduced answers + filtering stats
+  * Stages (all lazy DataFrames — Catalyst sees the whole graph), per
+  * document row:
+  *   text --split_chunks_array--> chunks --map--> scored --filter-->
+  *   survivors --reduce--> answer + filtering stats
   *
   * The reference's LLM call is abstracted as a [[TextModel]]. The default
   * [[ExtractiveModel]] is *column-based*: map/score/reduce are Catalyst
@@ -23,11 +24,15 @@ import graft.functions.Tokenizer
   * `mapPartitions` + connection reuse instead (SURVEY.md §2.11) — the
   * surrounding dataflow is unchanged.
   *
-  * Scale notes: chunk explosion is partition-local (no shuffle); the map
-  * phase is a scalar projection; the only shuffle is groupBy(doc_id), and
-  * what shuffles is (doc_id, score, small ints, one surviving chunk's
-  * tokens) — never the full document text. At 100 TB the chunk table is
-  * the big one; AQE coalesces the tiny post-aggregation partitions.
+  * Scale notes: every chunk of an answer comes from one document row, so
+  * [[MapReducePipeline.answers]] chunks, scores, filters and reduces
+  * inside that row — projections over the input, no shuffle, no
+  * aggregate, and no per-chunk rows at all; a task holds one document's
+  * chunks at a time. The only shuffle
+  * in the QA path is the judge's range exchange for positional batching
+  * (`judged`), which numbers the raw (doc_id, text) rows before they are
+  * scored. [[MapReducePipeline.mapped]] still emits one row per chunk for
+  * per-chunk consumers.
   */
 trait TextModel {
   /** Relevance score (0-10) of a chunk's tokens against question tokens. */
@@ -146,16 +151,23 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
   private val chunkTokens: Column =
     graft.functions.TextFunctions.regex_tokens(col("chunk_text"))
 
-  /** Stage 1-2: explode documents into scored chunks (M1 + map). Scores
-    * are scaled to the format's range (0-10 json/hybrid, 0-100 plain). */
+  /** The map step for one chunk, from its tokens: the relevance score
+    * (scaled to the format's range, 0-10 json/hybrid, 0-100 plain) and the
+    * extractive content. The one place the per-chunk formula lives:
+    * [[mapped]] applies it to chunk rows, [[answers]] inside each
+    * document's chunk array. */
+  private def mapChunk(ctoks: Column): (Column, Column) =
+    (cfg.format.scaleUp(model.score(ctoks, questionTokens)), model.content(ctoks))
+
+  /** Stage 1-2: explode documents into scored chunks (M1 + map), one row
+    * per chunk. */
   def mapped(documents: DataFrame): DataFrame = {
-    val d = documents
-    d.select(col("doc_id"),
+    val (score, content) = mapChunk(col("ctoks"))
+    documents.select(col("doc_id"),
         split_chunks(col("text"), lit(cfg.chunkSize), lit(cfg.overlap)))
       .withColumn("ctoks", chunkTokens)
-      .withColumn("score",
-        cfg.format.scaleUp(model.score(col("ctoks"), questionTokens)))
-      .withColumn("content", model.content(col("ctoks")))
+      .withColumn("score", score)
+      .withColumn("content", content)
       .drop("ctoks", "chunk_text")
   }
 
@@ -168,30 +180,43 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
     concat(lit("<chunk_"), idx, lit(">"), escaped, lit("</chunk_"), idx, lit(">"))
   }
 
-  /** Stage 3-5: filter (P4), gather per doc (M3), ordered reduce input
-    * (M4/M5/O1), extractive reduce + error-row fabrication (M6/M7/P9),
-    * filtering stats (A7/A9). One shuffle. */
-  def answers(documents: DataFrame): DataFrame = {
-    val m = mapped(documents)
-    val surviving = col("score") > cfg.threshold
-    // single-column ordering key: best score first, then lowest chunk_idx
+  /** Documents that yield at least one chunk. Tested on the raw text, not
+    * on the size of the scored array: Catalyst would push a filter on the
+    * array below its Project and score every document twice. */
+  private def withChunks(documents: DataFrame): DataFrame =
+    documents.filter(count_tokens(col("text")) > 0)
+
+  /** Stage 3-5 inside each document row: filter (P4), ordered reduce
+    * input (M4/M5/O1), extractive reduce + error-row fabrication
+    * (M6/M7/P9), filtering stats (A7/A9). `carry` columns pass through
+    * (between reduce_input and the retention_rate/llm_answer pair). */
+  private def reduced(documents: DataFrame, carry: Seq[String]): DataFrame = {
+    val chunks = split_chunks_array(col("text"), lit(cfg.chunkSize), lit(cfg.overlap))
+    // tokens once per chunk, then score and content from them
+    val scored = transform(
+      transform(chunks, c => struct(c("chunk_idx").as("chunk_idx"),
+        regex_tokens(c("chunk_text")).as("ctoks"))),
+      c => {
+        val (score, content) = mapChunk(c("ctoks"))
+        struct(c("chunk_idx").as("chunk_idx"), score.as("score"), content.as("content"))
+      })
+    // single-value ordering key: best score first, then lowest chunk_idx
     // (chunk_idx < 1e6 by construction at sane chunk sizes)
-    val ord = col("score") * 1000000L - col("chunk_idx")
-    m.groupBy(col("doc_id")).agg(
-      count(lit(1)).as("chunks_before"),
-      sum(when(surviving, 1).otherwise(0)).as("chunks_after"),
-      max(col("score")).as("best_score"),
-      // M4/M5: reduce input = surviving contents in chunk order —
-      // XML-wrapped items (json format) or bare concat (plain/hybrid)
-      array_join(
-        transform(
-          array_sort(collect_list(when(surviving,
-            struct(col("chunk_idx"), col("content"))))),
-          x => if (cfg.format.xmlReduce) xmlItem(x("chunk_idx"), x("content"))
-               else x("content")),
-        "\n").as("reduce_input"),
-      max_by(when(surviving, col("content")), when(surviving, ord))
-        .as("top_content"))
+    val top = array_max(transform(col("survivors"), c =>
+      struct((c("score") * 1000000L - c("chunk_idx")).as("ord"), c("content").as("content"))))
+    documents
+      .select(col("doc_id") +: carry.map(col) :+ scored.as("scored"): _*)
+      .withColumn("survivors", filter(col("scored"), c => c("score") > cfg.threshold))
+      .select(Seq(col("doc_id"),
+        size(col("scored")).cast("long").as("chunks_before"),
+        size(col("survivors")).cast("long").as("chunks_after"),
+        array_max(transform(col("scored"), c => c("score"))).as("best_score"),
+        // M4/M5: reduce input = surviving contents in chunk order —
+        // XML-wrapped items (json format) or bare concat (plain/hybrid)
+        array_join(transform(col("survivors"), c =>
+          if (cfg.format.xmlReduce) xmlItem(c("chunk_idx"), c("content"))
+          else c("content")), "\n").as("reduce_input"),
+        top("content").as("top_content")) ++ carry.map(col): _*)
       .withColumn("retention_rate",
         round(col("chunks_after") / col("chunks_before"), 4))
       // P9: error-row fabrication — no surviving chunk => canned answer
@@ -199,6 +224,15 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
         coalesce(col("top_content"), lit(MapReducePipeline.NoAnswer)))
       .drop("top_content")
   }
+
+  /** Stage 1-5: one answer row per input row that has at least one chunk
+    * (M1-M7/P4/P9/A7/A9). Every chunk of an answer comes from its own
+    * row: rows sharing a `doc_id` are answered separately, never merged.
+    * The plan is a Filter and Projects over the input — no explode, no
+    * shuffle, no aggregate — so over a local relation it is evaluated
+    * during optimization and runs no Spark job. */
+  def answers(documents: DataFrame): DataFrame =
+    reduced(withChunks(documents), Nil)
 
   /** M8: optional question-improvement pre-map stage (reference:
     * base_pipeline.py:521-630) — rewrites `question`, keeps
@@ -233,14 +267,11 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
           "\n").as("judge_block"))
   }
 
-  /** Answers + judgment, WITHOUT positional batching — for analytics
-    * that aggregate judgments and never look at batch keys; skips the
-    * global-order pass entirely. Judgment routed through the MODEL's
-    * judge slot (5-way as in config/prompts/judge_prompt.yml) — a custom
-    * [[TextModel]] supplies its own judge exactly like its own map/
-    * reduce. */
-  def judgedAnswers(documents: DataFrame): DataFrame =
-    answers(documents).withColumn("judgment",
+  /** Judgment routed through the MODEL's judge slot (5-way as in
+    * config/prompts/judge_prompt.yml) — a custom [[TextModel]] supplies
+    * its own judge exactly like its own map/reduce. */
+  private def withJudgment(answers: DataFrame): DataFrame =
+    answers.withColumn("judgment",
       // judge's contract is the 0-10 scale; best_score carries the
       // FORMAT's scale (0-100 for plain), so normalize before the
       // bands — without this every plain-format doc scoring >= 40/100
@@ -250,8 +281,23 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
         else cfg.format.scaleDown(col("best_score")),
         col("chunks_after")))
 
+  /** Answers + judgment, WITHOUT positional batching — for analytics
+    * that aggregate judgments and never look at batch keys; skips the
+    * global-order pass entirely. */
+  def judgedAnswers(documents: DataFrame): DataFrame =
+    withJudgment(answers(documents))
+
   /** Judge stage (O5 positional batching + P7 normalization): batches of
-    * 5 docs by doc_id order on top of [[judgedAnswers]]. */
-  def judged(documents: DataFrame): DataFrame =
-    MapReducePipeline.positionalBatches(judgedAnswers(documents), col("doc_id"))
+    * 5 docs by doc_id order, columns of [[judgedAnswers]] then
+    * `batch_id`, `item_number`. The documents are numbered BEFORE they
+    * are scored: the range partitioner's sampling job then recomputes
+    * only the scan and the token-count filter, and the scoring runs once,
+    * above the range exchange, spread over its partitions. */
+  def judged(documents: DataFrame): DataFrame = {
+    val carry = Seq("batch_id", "item_number")
+    val numbered = MapReducePipeline.positionalBatches(
+      withChunks(documents).select(col("doc_id"), col("text")), col("doc_id"))
+    val j = withJudgment(reduced(numbered, carry))
+    j.select((j.columns.toSeq.filterNot(carry.contains) ++ carry).map(col): _*)
+  }
 }

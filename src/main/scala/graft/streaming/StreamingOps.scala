@@ -831,10 +831,11 @@ object StreamingOps {
       maxFilesPerTrigger = Some(1))
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // NB deliberately NOT spreadStream'd (r18 A/B): the answers
-        // graph's own explode + shuffle already parallelize the scoring,
-        // so a pre-spread of the raw text only added its exchange cost
-        // (0.91 -> 1.02 s)
+        // NB not spreadStream'd: answers() is per-row projections, so the
+        // scoring runs in the micro-batch's one scan task. A pre-spread
+        // over 4 tasks bought only noise-sized time for its exchange
+        // (EntryProbe, sf0.1, 4 cores, reps 2-5: 1.04-1.19 s spread vs
+        // 1.11-1.20 s not)
         val out = pipe.answers(batch)
         // the work plan of this entry is the per-batch BATCH graph the
         // foreachBatch body runs — record it (the wrapper query's own

@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, TextModel}
 
 /** Reference formulations the fused codegen kernels replaced, kept
   * verbatim as parity oracles: [[pairsOfLegacy]] for
   * [[graft.operators.PairKernels]] (PairKernelsParitySpec), the two SQL
-  * strings for [[graft.operators.EditKernels]] (EditDistanceFuzzSpec).
-  * Not on any query path. */
+  * strings for [[graft.operators.EditKernels]] (EditDistanceFuzzSpec),
+  * [[LegacyMapReduce]] for the row-local map-reduce answers
+  * (MapReduceParitySpec). Not on any query path. */
 object LegacyOracles {
 
   /** The pre-r18 formulation, kept VERBATIM as the parity oracle for
@@ -59,4 +62,69 @@ object LegacyOracles {
       |  'seg', substring(p_name,
       |    CAST(i * (l div 3) + greatest(0, i - (3 - l % 3)) + 1 AS INT),
       |    CAST((l div 3) + IF(i >= 3 - l % 3, 1, 0) AS INT))))""".stripMargin
+}
+
+/** The explode -> groupBy(doc_id) -> aggregate formulation of
+  * [[MapReducePipeline]]'s `answers`/`judgedAnswers`/`judged`, kept
+  * verbatim as the parity oracle for the row-local plan
+  * (MapReduceParitySpec). `mapped` is the pipeline's own (unchanged);
+  * `xmlItem` and the judge are copies of the pipeline's private ones. */
+private[graft] class LegacyMapReduce(cfg: MapReduceConfig,
+    model: TextModel = ExtractiveModel) {
+
+  private val pipe = new MapReducePipeline(cfg, model)
+  private def mapped(documents: DataFrame): DataFrame = pipe.mapped(documents)
+
+  private def xmlItem(idx: Column, content: Column): Column = {
+    val escaped = Seq("&" -> "&amp;", "<" -> "&lt;", ">" -> "&gt;",
+      "\"" -> "&quot;", "'" -> "&apos;")
+      .foldLeft(content) { case (c, (from, to)) => replace(c, lit(from), lit(to)) }
+    concat(lit("<chunk_"), idx, lit(">"), escaped, lit("</chunk_"), idx, lit(">"))
+  }
+
+  /** Stage 3-5: filter (P4), gather per doc (M3), ordered reduce input
+    * (M4/M5/O1), extractive reduce + error-row fabrication (M6/M7/P9),
+    * filtering stats (A7/A9). One shuffle. */
+  def answers(documents: DataFrame): DataFrame = {
+    val m = mapped(documents)
+    val surviving = col("score") > cfg.threshold
+    // single-column ordering key: best score first, then lowest chunk_idx
+    // (chunk_idx < 1e6 by construction at sane chunk sizes)
+    val ord = col("score") * 1000000L - col("chunk_idx")
+    m.groupBy(col("doc_id")).agg(
+      count(lit(1)).as("chunks_before"),
+      sum(when(surviving, 1).otherwise(0)).as("chunks_after"),
+      max(col("score")).as("best_score"),
+      // M4/M5: reduce input = surviving contents in chunk order —
+      // XML-wrapped items (json format) or bare concat (plain/hybrid)
+      array_join(
+        transform(
+          array_sort(collect_list(when(surviving,
+            struct(col("chunk_idx"), col("content"))))),
+          x => if (cfg.format.xmlReduce) xmlItem(x("chunk_idx"), x("content"))
+               else x("content")),
+        "\n").as("reduce_input"),
+      max_by(when(surviving, col("content")), when(surviving, ord))
+        .as("top_content"))
+      .withColumn("retention_rate",
+        round(col("chunks_after") / col("chunks_before"), 4))
+      // P9: error-row fabrication — no surviving chunk => canned answer
+      .withColumn("llm_answer",
+        coalesce(col("top_content"), lit(MapReducePipeline.NoAnswer)))
+      .drop("top_content")
+  }
+
+  def judgedAnswers(documents: DataFrame): DataFrame =
+    answers(documents).withColumn("judgment",
+      // judge's contract is the 0-10 scale; best_score carries the
+      // FORMAT's scale (0-100 for plain), so normalize before the
+      // bands — without this every plain-format doc scoring >= 40/100
+      // judged "Correct" and the middle bands were unreachable
+      model.judge(
+        if (cfg.format.scoreScale == 10) col("best_score")
+        else cfg.format.scaleDown(col("best_score")),
+        col("chunks_after")))
+
+  def judged(documents: DataFrame): DataFrame =
+    MapReducePipeline.positionalBatches(judgedAnswers(documents), col("doc_id"))
 }

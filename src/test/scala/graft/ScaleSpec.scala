@@ -46,8 +46,11 @@ class ScaleSpec extends SparkSpec {
 
   test("flagship pipeline plan: pruned scan, single exchange") {
     val plan = SparkEntry.entry(spark).queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+    // answers reduce inside each document row: the one exchange is the
+    // scan's round-robin spread, and nothing regroups by doc_id
+    val exchanges = "Exchange ".r.findAllIn(plan).length
     assert(exchanges == 1, s"expected 1 shuffle, got $exchanges:\n$plan")
+    assert(plan.contains("Exchange RoundRobinPartitioning"), plan)
     assert(plan.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
       "scan not pruned to doc_id,text")
   }
