@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-import graft.pipeline.{MapReduceConfig, MapReducePipeline, QaFormat, TextModel, ExtractiveModel}
+import graft.functions.TextFunctions.regex_tokens
+import graft.operators.{TruncationStrategies, TruncationStrategy}
+import graft.pipeline.{MapReduceConfig, MapReducePipeline, PlanInputs, QaFormat, TextModel, ExtractiveModel}
 import graft.sources.QaSources
 
 /** Public library facade — the Spark-native equivalent of the reference's
@@ -29,9 +32,13 @@ import graft.sources.QaSources
   * Both plan shapes (map-reduce and truncation) have an unbatched form,
   * `judgedAnswers`/`truncationJudgedAnswers`, for a caller that never
   * reads `batch_id`/`item_number` (the one-row service ask): it skips
-  * the global-order pass. `judged` numbers the documents first and
-  * scores them above the range exchange; `truncationJudged` batches its
-  * judged answers last.
+  * the global-order pass. `judged` and `truncationJudged` number the raw
+  * (doc_id, text) rows first and score them above the range exchange.
+  *
+  * Every plan reads the question tokens, chunk sizes and threshold as
+  * [[PlanInputs]] columns (literals by default) and the truncation budget
+  * as a column, so [[QaService]] analyzes one plan per format and
+  * pipeline and feeds each ask's values in as data.
   */
 case class Engine(
     format: String = "hybrid",
@@ -55,14 +62,17 @@ case class Engine(
     question = question, format = qaFormat)
 
   private val pipeline = new MapReducePipeline(config, model)
+  /** The config's question, sizes and threshold as literals. */
+  private val inputs: PlanInputs = PlanInputs.literals(config)
 
   /** Map phase: scored chunks (M1/M2). */
   def mapped(documents: DataFrame): DataFrame = pipeline.mapped(documents)
   /** Full MapReduce: per-doc answers + filtering stats (M3-M7/P9/A7). */
   def answers(documents: DataFrame): DataFrame = pipeline.answers(documents)
-  /** + judge (P7), without positional batching. */
-  def judgedAnswers(documents: DataFrame): DataFrame =
-    pipeline.judgedAnswers(documents)
+  /** + judge (P7), without positional batching; `in` defaults to the
+    * config's values as literals. */
+  def judgedAnswers(documents: DataFrame, in: PlanInputs = inputs): DataFrame =
+    pipeline.judgedAnswers(documents, in)
   /** + judge & positional batching (O5/P7). */
   def judged(documents: DataFrame): DataFrame = pipeline.judged(documents)
 
@@ -71,36 +81,36 @@ case class Engine(
     * extractive call over the token-budgeted document, same answer/stats
     * contract. Budget = contextWindow - question tokens - buffer, floored
     * at 1000 (reference: truncation_formatter.py:45-73,
-    * truncation_utils.py:247-266). */
+    * truncation_utils.py:247-266). The strategy is resolved through the
+    * pluggable registry (T5), so custom registered strategies reach the
+    * Engine by name. */
   def truncationAnswers(documents: DataFrame,
       contextWindow: Int = 128000, buffer: Int = 2000,
-      strategy: String = "start"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFunctions._
-    val budget = math.max(1000,
-      contextWindow - graft.functions.Tokenizer.countTokens(question) - buffer)
-    val qtoks = array(
-      graft.functions.Tokenizer.tokens(question).distinct.toIndexedSeq.map(lit): _*)
-      .cast("array<string>") // empty question => array<null> otherwise
+      strategy: String = "start"): DataFrame =
+    truncationAnswers(documents, Nil, budgetOf(contextWindow, buffer),
+      TruncationStrategies.get(strategy), inputs)
+
+  /** [[truncationAnswers]] with the budget, the strategy and the
+    * question/threshold inputs given as columns and instances. `carry`
+    * columns pass through after `llm_answer`. */
+  private[graft] def truncationAnswers(documents: DataFrame, carry: Seq[String],
+      budget: Column, strategy: TruncationStrategy, in: PlanInputs): DataFrame =
     documents
-      // T5: resolved through the pluggable strategy registry, so custom
-      // registered strategies reach the Engine by name
-      .withColumn("t", graft.operators.TruncationStrategies.get(strategy)
-        .truncate(col("text"), lit(budget)))
+      .withColumn("t", strategy.truncate(col("text"), budget))
       .withColumn("ttoks", regex_tokens(col("t.text")))
       // same pluggable-model routing as MapReducePipeline.mapped: a custom
       // TextModel changes the truncation path too, not just answers()
       .withColumn("score",
-        qaFormat.scaleUp(model.score(col("ttoks"), qtoks)))
-      .select(col("doc_id"),
+        qaFormat.scaleUp(model.score(col("ttoks"), in.questionTokens)))
+      .select(Seq(col("doc_id"),
         col("t.original_tokens").as("original_tokens"),
         col("t.truncated_tokens").as("truncated_tokens"),
         col("t.retention_rate").as("retention_rate"),
         col("t.truncation_applied").as("truncation_applied"),
         col("score"),
-        when(col("score") > config.threshold, model.content(col("ttoks")))
+        when(col("score") > in.threshold, model.content(col("ttoks")))
           .otherwise(lit(MapReducePipeline.NoAnswer)).as("llm_answer"))
-  }
+        ++ (carry ++ in.keep).map(col): _*)
 
   /** Truncation pipeline + judge stage, without positional batching —
     * the reference evaluates BOTH plan shapes with the same judge
@@ -108,26 +118,47 @@ case class Engine(
     * judgment as MapReducePipeline.judgedAnswers. */
   def truncationJudgedAnswers(documents: DataFrame,
       contextWindow: Int = 128000, buffer: Int = 2000,
-      strategy: String = "start"): DataFrame = {
-    import org.apache.spark.sql.functions._
+      strategy: String = "start"): DataFrame =
+    truncationJudgedAnswers(documents, Nil, budgetOf(contextWindow, buffer),
+      TruncationStrategies.get(strategy), inputs)
+
+  /** [[truncationJudgedAnswers]] with column inputs, as
+    * [[truncationAnswers]]; `carry` columns come last. */
+  private[graft] def truncationJudgedAnswers(documents: DataFrame,
+      carry: Seq[String], budget: Column, strategy: TruncationStrategy,
+      in: PlanInputs): DataFrame = {
     val scaled = qaFormat.scaleDown(col("score")) // back to 0-10
     // below-threshold scores are the truncation path's "no surviving
     // chunk"; routed through the model's judge slot like the MapReduce
     // path, so a custom model judges BOTH plan shapes
     val judgment = model.judge(scaled,
-      when(col("score") <= config.threshold, lit(0)).otherwise(lit(1)))
-    truncationAnswers(documents, contextWindow, buffer, strategy)
+      when(col("score") <= in.threshold, lit(0)).otherwise(lit(1)))
+    val j = truncationAnswers(documents, carry, budget, strategy, in)
       .withColumn("judgment", judgment)
+    if (carry.isEmpty) j
+    else j.select((j.columns.toSeq.filterNot(carry.contains) ++ carry).map(col): _*)
   }
 
   /** [[truncationJudgedAnswers]] + positional batching — the same
-    * contract as MapReducePipeline.judged. */
+    * contract as MapReducePipeline.judged, built the same way: the raw
+    * (doc_id, text) rows are numbered first, so the range partitioner's
+    * sampling job reads only the scan, and truncation and scoring run
+    * once, above the range exchange. */
   def truncationJudged(documents: DataFrame,
       contextWindow: Int = 128000, buffer: Int = 2000,
       strategy: String = "start"): DataFrame =
-    MapReducePipeline.positionalBatches(
-      truncationJudgedAnswers(documents, contextWindow, buffer, strategy),
-      org.apache.spark.sql.functions.col("doc_id"))
+    truncationJudged(documents, budgetOf(contextWindow, buffer),
+      TruncationStrategies.get(strategy))
+
+  private[graft] def truncationJudged(documents: DataFrame, budget: Column,
+      strategy: TruncationStrategy): DataFrame =
+    truncationJudgedAnswers(
+      MapReducePipeline.positionalBatches(
+        documents.select(col("doc_id"), col("text")), col("doc_id")),
+      Seq("batch_id", "item_number"), budget, strategy, inputs)
+
+  private def budgetOf(contextWindow: Int, buffer: Int): Column =
+    lit(Engine.truncationBudget(question, contextWindow, buffer))
 }
 
 object Engine {
@@ -140,6 +171,11 @@ object Engine {
   /** Pipelines the engine exposes: `answers`/`judged` (mapreduce) and
     * `truncationAnswers` (truncation). */
   val supportedPipelines: Seq[String] = Seq("mapreduce", "truncation")
+
+  /** Truncation token budget: contextWindow - question tokens - buffer,
+    * floored at 1000. */
+  def truncationBudget(question: String, contextWindow: Int, buffer: Int): Int =
+    math.max(1000, contextWindow - graft.functions.Tokenizer.countTokens(question) - buffer)
 
   /** Dataset registry (factory.py:203-220 register_dataset analog). */
   def loadDataset(spark: SparkSession, dataset: String, path: String,

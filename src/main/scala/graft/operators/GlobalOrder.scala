@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.LongType
   * when `df` has no shuffle of its own that job recomputes all of it from
   * the scan, then the shuffle's map stage computes it again. Number rows
   * before expensive projections, not after (`MapReducePipeline.judged`
-  * numbers raw documents and scores them above the exchange).
+  * and `Engine.truncationJudged` number raw documents and score them
+  * above the exchange).
   */
 object GlobalOrder {
 

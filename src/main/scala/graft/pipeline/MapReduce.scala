@@ -117,6 +117,25 @@ case class MapReduceConfig(
     question: String = "spark query join data",
     format: QaFormat = QaFormat.Hybrid)
 
+/** The per-question values a QA plan reads: the question's distinct
+  * tokens (`array<string>`), `chunkSize`, `overlap` and `threshold`
+  * (`int`). Batch plans bind them as literals ([[PlanInputs.literals]]);
+  * [[graft.QaService]] binds them to columns of its placeholder row, so
+  * one analyzed plan serves every question and chunk size. `keep` names
+  * the document columns the plan must pass through its first projection
+  * because an input reads them later (the threshold's column). */
+final case class PlanInputs(questionTokens: Column, chunkSize: Column,
+    overlap: Column, threshold: Column, keep: Seq[String] = Nil)
+
+object PlanInputs {
+  /** The config's values as literals (driver-side tokenization: the
+    * question is a scalar, not data). */
+  def literals(cfg: MapReduceConfig): PlanInputs = PlanInputs(
+    array(Tokenizer.tokens(cfg.question).distinct.map(lit).toIndexedSeq: _*)
+      .cast("array<string>"), // empty question => array<null> otherwise
+    lit(cfg.chunkSize), lit(cfg.overlap), lit(cfg.threshold))
+}
+
 object MapReducePipeline {
   /** Default M8 rewriter (the [[TextModel]] default `improve`), kept as a
     * standalone function for callers outside a pipeline. */
@@ -139,11 +158,9 @@ object MapReducePipeline {
 
 class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel) {
 
-  /** Tokens of the question, as a literal array column (driver-side
-    * tokenization — the question is a scalar, not data). */
-  private val questionTokens: Column =
-    array(Tokenizer.tokens(cfg.question).distinct.map(lit).toIndexedSeq: _*)
-      .cast("array<string>") // empty question => array<null> otherwise
+  /** The config's question, sizes and threshold as literals: the
+    * default inputs of every plan below. */
+  private val literals: PlanInputs = PlanInputs.literals(cfg)
 
   /** Token regex shared with the DuckDB oracle. Applied to chunk_text with
     * Spark's codegen'd regexp_extract_all — identical semantics to the
@@ -156,15 +173,15 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
     * extractive content. The one place the per-chunk formula lives:
     * [[mapped]] applies it to chunk rows, [[answers]] inside each
     * document's chunk array. */
-  private def mapChunk(ctoks: Column): (Column, Column) =
-    (cfg.format.scaleUp(model.score(ctoks, questionTokens)), model.content(ctoks))
+  private def mapChunk(ctoks: Column, in: PlanInputs): (Column, Column) =
+    (cfg.format.scaleUp(model.score(ctoks, in.questionTokens)), model.content(ctoks))
 
   /** Stage 1-2: explode documents into scored chunks (M1 + map), one row
     * per chunk. */
   def mapped(documents: DataFrame): DataFrame = {
-    val (score, content) = mapChunk(col("ctoks"))
+    val (score, content) = mapChunk(col("ctoks"), literals)
     documents.select(col("doc_id"),
-        split_chunks(col("text"), lit(cfg.chunkSize), lit(cfg.overlap)))
+        split_chunks(col("text"), literals.chunkSize, literals.overlap))
       .withColumn("ctoks", chunkTokens)
       .withColumn("score", score)
       .withColumn("content", content)
@@ -190,14 +207,16 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
     * input (M4/M5/O1), extractive reduce + error-row fabrication
     * (M6/M7/P9), filtering stats (A7/A9). `carry` columns pass through
     * (between reduce_input and the retention_rate/llm_answer pair). */
-  private def reduced(documents: DataFrame, carry: Seq[String]): DataFrame = {
-    val chunks = split_chunks_array(col("text"), lit(cfg.chunkSize), lit(cfg.overlap))
+  private def reduced(documents: DataFrame, carry: Seq[String],
+      in: PlanInputs): DataFrame = {
+    val carried = carry ++ in.keep
+    val chunks = split_chunks_array(col("text"), in.chunkSize, in.overlap)
     // tokens once per chunk, then score and content from them
     val scored = transform(
       transform(chunks, c => struct(c("chunk_idx").as("chunk_idx"),
         regex_tokens(c("chunk_text")).as("ctoks"))),
       c => {
-        val (score, content) = mapChunk(c("ctoks"))
+        val (score, content) = mapChunk(c("ctoks"), in)
         struct(c("chunk_idx").as("chunk_idx"), score.as("score"), content.as("content"))
       })
     // single-value ordering key: best score first, then lowest chunk_idx
@@ -205,8 +224,8 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
     val top = array_max(transform(col("survivors"), c =>
       struct((c("score") * 1000000L - c("chunk_idx")).as("ord"), c("content").as("content"))))
     documents
-      .select(col("doc_id") +: carry.map(col) :+ scored.as("scored"): _*)
-      .withColumn("survivors", filter(col("scored"), c => c("score") > cfg.threshold))
+      .select(col("doc_id") +: carried.map(col) :+ scored.as("scored"): _*)
+      .withColumn("survivors", filter(col("scored"), c => c("score") > in.threshold))
       .select(Seq(col("doc_id"),
         size(col("scored")).cast("long").as("chunks_before"),
         size(col("survivors")).cast("long").as("chunks_after"),
@@ -216,7 +235,7 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
         array_join(transform(col("survivors"), c =>
           if (cfg.format.xmlReduce) xmlItem(c("chunk_idx"), c("content"))
           else c("content")), "\n").as("reduce_input"),
-        top("content").as("top_content")) ++ carry.map(col): _*)
+        top("content").as("top_content")) ++ carried.map(col): _*)
       .withColumn("retention_rate",
         round(col("chunks_after") / col("chunks_before"), 4))
       // P9: error-row fabrication — no surviving chunk => canned answer
@@ -230,9 +249,10 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
     * row: rows sharing a `doc_id` are answered separately, never merged.
     * The plan is a Filter and Projects over the input — no explode, no
     * shuffle, no aggregate — so over a local relation it is evaluated
-    * during optimization and runs no Spark job. */
-  def answers(documents: DataFrame): DataFrame =
-    reduced(withChunks(documents), Nil)
+    * during optimization and runs no Spark job. `in` defaults to the
+    * config's values as literals. */
+  def answers(documents: DataFrame, in: PlanInputs = literals): DataFrame =
+    reduced(withChunks(documents), Nil, in)
 
   /** M8: optional question-improvement pre-map stage (reference:
     * base_pipeline.py:521-630) — rewrites `question`, keeps
@@ -284,8 +304,8 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
   /** Answers + judgment, WITHOUT positional batching — for analytics
     * that aggregate judgments and never look at batch keys; skips the
     * global-order pass entirely. */
-  def judgedAnswers(documents: DataFrame): DataFrame =
-    withJudgment(answers(documents))
+  def judgedAnswers(documents: DataFrame, in: PlanInputs = literals): DataFrame =
+    withJudgment(answers(documents, in))
 
   /** Judge stage (O5 positional batching + P7 normalization): batches of
     * 5 docs by doc_id order, columns of [[judgedAnswers]] then
@@ -297,7 +317,7 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
     val carry = Seq("batch_id", "item_number")
     val numbered = MapReducePipeline.positionalBatches(
       withChunks(documents).select(col("doc_id"), col("text")), col("doc_id"))
-    val j = withJudgment(reduced(numbered, carry))
+    val j = withJudgment(reduced(numbered, carry, literals))
     j.select((j.columns.toSeq.filterNot(carry.contains) ++ carry).map(col): _*)
   }
 }

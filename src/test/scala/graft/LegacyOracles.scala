@@ -1,16 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, TextModel}
+import graft.operators.TruncationStrategy
+import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, PlanInputs, TextModel}
 
 /** Reference formulations the fused codegen kernels replaced, kept
   * verbatim as parity oracles: [[pairsOfLegacy]] for
   * [[graft.operators.PairKernels]] (PairKernelsParitySpec), the two SQL
   * strings for [[graft.operators.EditKernels]] (EditDistanceFuzzSpec),
-  * [[LegacyMapReduce]] for the row-local map-reduce answers
-  * (MapReduceParitySpec). Not on any query path. */
+  * [[LegacyMapReduce]] for the row-local map-reduce answers and
+  * [[truncationJudged]] for the raw-rows-first truncation batching
+  * (MapReduceParitySpec), [[LegacyQaAsk]] for the prepared service ask
+  * (ServiceSpec). Not on any query path. */
 object LegacyOracles {
 
   /** The pre-r18 formulation, kept VERBATIM as the parity oracle for
@@ -25,6 +28,15 @@ object LegacyOracles {
   /** The legacy HOF formulation of [[editProbe]]'s signature array,
     * kept verbatim as the parity oracle for the fused kernel
     * (EditDistanceFuzzSpec compares them element-for-element). */
+  /** `Engine.truncationJudged` as it batched its judged answers last
+    * (positional batching over the truncated, scored rows). */
+  private[graft] def truncationJudged(engine: Engine, documents: DataFrame,
+      budget: Column, strategy: TruncationStrategy): DataFrame =
+    MapReducePipeline.positionalBatches(
+      engine.truncationJudgedAnswers(documents, Nil, budget, strategy,
+        PlanInputs.literals(engine.config)),
+      col("doc_id"))
+
   private[graft] val legacyProbeSigsSql: String =
     """array_distinct(transform(
       |  filter(
@@ -127,4 +139,47 @@ private[graft] class LegacyMapReduce(cfg: MapReduceConfig,
 
   def judged(documents: DataFrame): DataFrame =
     MapReducePipeline.positionalBatches(judgedAnswers(documents), col("doc_id"))
+}
+
+/** `QaService.ask` over a Dataset, as it ran before prepared templates:
+  * an [[Engine]] per configuration with the question, sizes and threshold
+  * as literals, a one-row DataFrame, the judged-answers plan, `collect`
+  * and by-name reads. The parity oracle for the prepared ask
+  * (ServiceSpec); `text` is the parsed upload. */
+private[graft] object LegacyQaAsk {
+  def ask(spark: SparkSession, model: TextModel, text: String, question: String,
+      format: String = "hybrid", chunkSize: Int = 64, overlap: Int = 16,
+      threshold: Int = 1, pipelineType: String = "mapreduce",
+      strategy: String = "start", contextWindow: Int = 128000,
+      buffer: Int = 2000, promptSet: String = "hybrid"): QaAnswer = {
+    val engine = Engine(question = question, format = format,
+      chunkSize = chunkSize, overlap = overlap,
+      threshold = Some(threshold), model = model)
+    val docs = spark.createDataFrame(Seq((0L, text))).toDF("doc_id", "text")
+    val rows = (pipelineType match {
+      case "truncation" =>
+        engine.truncationJudgedAnswers(docs, contextWindow, buffer, strategy)
+      case _ => engine.judgedAnswers(docs)
+    }).collect()
+    // an upload with no tokens has no chunk, so map-reduce returns no
+    // row: answer with the P9 canned row, like truncation does
+    if (rows.isEmpty) return QaAnswer(
+      answer = MapReducePipeline.NoAnswer, score = 0.0, judgment = "No answer",
+      chunksBefore = 0L, chunksAfter = 0L, retentionRate = 0.0,
+      promptSet = promptSet)
+    val row = rows.head
+    def optLong(name: String): Long =
+      if (row.schema.fieldNames.contains(name)) row.getAs[Long](name) else 1L
+    QaAnswer(
+      answer = row.getAs[String]("llm_answer"),
+      score = row.getAs[Any](
+        if (row.schema.fieldNames.contains("best_score")) "best_score" else "score")
+        match { case i: Int => i.toDouble; case l: Long => l.toDouble
+                case d: Double => d },
+      judgment = row.getAs[String]("judgment"),
+      chunksBefore = optLong("chunks_before"),
+      chunksAfter = optLong("chunks_after"),
+      retentionRate = row.getAs[Double]("retention_rate"),
+      promptSet = promptSet)
+  }
 }

@@ -8,47 +8,57 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
-import graft.functions.SplitChunksArray
+import graft.functions.{SplitChunksArray, TruncateTokens}
+import graft.operators.TruncationStrategies
 import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, QaFormat, TextModel}
+
+/** Score = tokens longer than 3 chars (nested lambda inside the
+  * pipeline's own lambdas), content = reversed tokens upper-cased. */
+private[graft] object LongTokenModel extends TextModel {
+  def score(chunkTokens: Column, questionTokens: Column): Column =
+    least(lit(10), size(filter(chunkTokens, t => length(t) > 3)))
+  def content(chunkTokens: Column): Column =
+    upper(array_join(reverse(chunkTokens), "_"))
+}
+
+object MapReduceParitySpec {
+  /** Edge-case documents for chunkSize 4, overlap 1 and the question
+    * "spark query join data"; doc_id = position + 1. */
+  val edgeTexts: Seq[String] = Seq(
+    "",
+    "   \n  ",
+    "?! ... ,;",                          // tokens, no survivor
+    null,
+    "spark",                              // 1 token
+    "spark query join data",              // chunkSize tokens
+    "spark query join data more",         // chunkSize + 1 tokens
+    "alpha beta gamma delta epsilon zeta eta theta", // no survivor
+    "spark query join spark query join spark query join", // all survive, all tied
+    "spark query x y z w spark query",   // chunks 0 and 2 tie on score
+    "spark & query <join> \"data\" 'x' a&b </chunk_0>", // XML specials
+    "spark query join data across tables with window functions " * 12)
+}
 
 /** The row-local map-reduce plan (`answers`, `judgedAnswers`, `judged`)
   * against the explode -> groupBy(doc_id) formulation it replaced
   * ([[LegacyMapReduce]]): identical rows and identical schema (names,
   * types, order) for every format, on the sf0.01 corpus and on edge-case
   * documents; plus the plan shape that makes the ask fold and keeps the
-  * judge from scoring twice. */
+  * judge from scoring twice. The same for `Engine.truncationJudged`,
+  * which numbers the raw rows before truncating them, against the
+  * batch-last form ([[LegacyOracles.truncationJudged]]). */
 class MapReduceParitySpec extends SparkSpec {
 
   private val formats = Seq(QaFormat.Json, QaFormat.Plain, QaFormat.Hybrid)
   private val question = "spark query join data"
-
-  /** Score = tokens longer than 3 chars (nested lambda inside the
-    * pipeline's own lambdas), content = reversed tokens upper-cased. */
-  private object LongTokenModel extends TextModel {
-    def score(chunkTokens: Column, questionTokens: Column): Column =
-      least(lit(10), size(filter(chunkTokens, t => length(t) > 3)))
-    def content(chunkTokens: Column): Column =
-      upper(array_join(reverse(chunkTokens), "_"))
-  }
 
   // chunkSize 4, overlap 1 (stride 3); threshold 1: a chunk survives with
   // at least 2 distinct question tokens
   private val small = MapReduceConfig(chunkSize = 4, overlap = 1, threshold = 1,
     question = question)
 
-  private lazy val edgeDocs: DataFrame = spark.createDataFrame(Seq[(Long, String)](
-    1L -> "",
-    2L -> "   \n  ",
-    3L -> "?! ... ,;",                          // tokens, no survivor
-    4L -> null,
-    5L -> "spark",                              // 1 token
-    6L -> "spark query join data",              // chunkSize tokens
-    7L -> "spark query join data more",         // chunkSize + 1 tokens
-    8L -> "alpha beta gamma delta epsilon zeta eta theta", // no survivor
-    9L -> "spark query join spark query join spark query join", // all survive, all tied
-    10L -> "spark query x y z w spark query",   // chunks 0 and 2 tie on score
-    11L -> "spark & query <join> \"data\" 'x' a&b </chunk_0>", // XML specials
-    12L -> ("spark query join data across tables with window functions " * 12)))
+  private lazy val edgeDocs: DataFrame = spark.createDataFrame(
+    MapReduceParitySpec.edgeTexts.zipWithIndex.map { case (t, i) => (i + 1L, t) })
     .toDF("doc_id", "text")
 
   private def schemaOf(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
@@ -106,17 +116,18 @@ class MapReduceParitySpec extends SparkSpec {
     assert(plan.collect { case a: BaseAggregateExec => a }.isEmpty, plan.treeString)
   }
 
-  test("judged shuffles once, to number raw rows, and scores above that exchange") {
-    def shuffles(r: RDD[_]): Int = r.dependencies.map {
-      case s: ShuffleDependency[_, _, _] => 1 + shuffles(s.rdd)
-      case d => shuffles(d.rdd)
-    }.sum
-    val docs = graft.core.Tables.load(spark, sf, "documents")
-    val plan = new MapReducePipeline(MapReduceConfig()).judged(docs)
-      .queryExecution.sparkPlan
+  private def shuffles(r: RDD[_]): Int = r.dependencies.map {
+    case s: ShuffleDependency[_, _, _] => 1 + shuffles(s.rdd)
+    case d => shuffles(d.rdd)
+  }.sum
+
+  /** The plan numbers the raw rows (one shuffle, inside the RDD scan)
+    * and computes `scoredBy` once, in a Project right above that scan. */
+  private def assertRawRowsNumbered(df: DataFrame, scoredBy: Class[_]): Unit = {
+    val plan = df.queryExecution.sparkPlan
     assert(plan.collect { case s: ShuffleExchangeLike => s }.isEmpty, plan.treeString)
     val scoring = plan.collect {
-      case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[SplitChunksArray])) => p
+      case p: ProjectExec if p.projectList.exists(_.exists(e => scoredBy.isInstance(e))) => p
     }
     assert(scoring.length == 1, plan.treeString)
     val scans = scoring.head.collect { case s: RDDScanExec => s }
@@ -124,5 +135,30 @@ class MapReduceParitySpec extends SparkSpec {
     // only the raw rows and their number cross the range exchange
     assert(scans.head.output.map(_.name) == Seq("doc_id", "text", "rn"), plan.treeString)
     assert(shuffles(scans.head.rdd) == 1, scans.head.rdd.toDebugString)
+  }
+
+  test("judged shuffles once, to number raw rows, and scores above that exchange") {
+    val docs = graft.core.Tables.load(spark, sf, "documents")
+    assertRawRowsNumbered(new MapReducePipeline(MapReduceConfig()).judged(docs),
+      classOf[SplitChunksArray])
+  }
+
+  test("truncationJudged equals the batch-last form on sf0.01 documents") {
+    val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
+    val docs = graft.core.Tables.load(spark, sf01, "documents")
+    // 30 tokens truncates most sf0.01 documents; 126000 none
+    for (format <- Engine.supportedFormats; name <- Seq("start", "end", "smart");
+         budget <- Seq(30, 126000)) {
+      val (engine, strategy) = (Engine(format = format, question = question),
+        TruncationStrategies.get(name))
+      assertSame(engine.truncationJudged(docs, lit(budget), strategy),
+        LegacyOracles.truncationJudged(engine, docs, lit(budget), strategy),
+        s"truncationJudged/$format/$name/$budget")
+    }
+  }
+
+  test("truncationJudged shuffles once, to number raw rows, and truncates above it") {
+    val docs = graft.core.Tables.load(spark, sf, "documents")
+    assertRawRowsNumbered(Engine().truncationJudged(docs), classOf[TruncateTokens])
   }
 }

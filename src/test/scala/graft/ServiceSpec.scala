@@ -3,13 +3,20 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{expr, lit, when}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** §3.3: single-request service facade — upload-shaped input, pipeline
-  * cache behavior, and the N=1 latency posture. */
+import graft.operators.{TruncationStrategies, TruncationStrategy}
+import graft.pipeline.{ExtractiveModel, MapReducePipeline, TextModel}
+import graft.sources.BinaryDocs
+
+/** §3.3: single-request service facade — upload-shaped input, prepared
+  * templates (equal to the Dataset path, also under concurrent asks), and
+  * the N=1 latency posture. */
 class ServiceSpec extends SparkSpec {
 
   private val doc =
@@ -62,7 +69,7 @@ class ServiceSpec extends SparkSpec {
       val clue = s"$format/$pipeline/${text.take(9)}"
       val a = svc.ask("p.md", text.getBytes("UTF-8"), q, format = format,
         pipelineType = pipeline)
-      val e = svc.engineFor(q, format, 64, 16, 1)
+      val e = Engine(question = q, format = format, threshold = Some(1))
       val docs = spark.createDataFrame(Seq((0L, text))).toDF("doc_id", "text")
       val rows = (if (pipeline == "truncation") e.truncationJudged(docs)
                   else e.judged(docs)).collect()
@@ -81,49 +88,63 @@ class ServiceSpec extends SparkSpec {
     }
   }
 
-  test("a warm ask runs no job: both plans fold into one LocalRelation") {
+  test("a warm ask starts no job and no SQL execution (both pipelines)") {
     val svc = new QaService(spark)
     val q = "spark query join data"
     val bytes = doc.getBytes("UTF-8")
-    val group = "service-spec-ask"
-    val jobs = ArrayBuffer.empty[Int]
-    val plans = ArrayBuffer.empty[QueryExecution]
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        if (e.properties.getProperty("spark.jobGroup.id") == group) jobs += e.jobId
+    val events = ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        events.synchronized(events += s"job ${e.jobId}")
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          events.synchronized(events += s"sql ${s.executionId}")
+        case _ =>
       }
     }
     val qeListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized { if (f == "collect") plans += qe }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+        events.synchronized(events += s"qe $f")
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        events.synchronized(events += s"qe failed $f")
     }
-    // jobs and plans of one ask, seen once the listener bus has drained
-    def observe(pipeline: String): (Int, Seq[QueryExecution]) = {
+    // what one ask posts, seen once the listener bus has drained
+    def observe(pipeline: String): Seq[String] = {
       ListenerBusDrain(spark.sparkContext)
-      jobs.synchronized(jobs.clear()); plans.synchronized(plans.clear())
-      spark.sparkContext.setJobGroup(group, "ask")
-      try svc.ask("pin.md", bytes, q, pipelineType = pipeline)
-      finally spark.sparkContext.clearJobGroup()
+      events.synchronized(events.clear())
+      svc.ask("pin.md", bytes, q, pipelineType = pipeline)
       ListenerBusDrain(spark.sparkContext)
-      (jobs.synchronized(jobs.size), plans.synchronized(plans.toList))
+      events.synchronized(events.toList)
     }
-    spark.sparkContext.addSparkListener(jobListener)
+    spark.sparkContext.addSparkListener(listener)
     spark.listenerManager.register(qeListener)
     try {
       Seq("mapreduce", "truncation").foreach(p => svc.ask("pin.md", bytes, q,
-        pipelineType = p)) // warm
-      for (pipeline <- Seq("mapreduce", "truncation")) {
-        val (n, qes) = observe(pipeline)
-        assert(n == 0, pipeline)
-        assert(qes.length == 1, pipeline)
-        val optimized = qes.head.optimizedPlan
-        assert(optimized.isInstanceOf[LocalRelation], s"$pipeline:\n$optimized")
-      }
+        pipelineType = p)) // warm: prepares both templates
+      for (pipeline <- Seq("mapreduce", "truncation"))
+        assert(observe(pipeline).isEmpty, pipeline)
     } finally {
-      spark.sparkContext.removeSparkListener(jobListener)
+      spark.sparkContext.removeSparkListener(listener)
       spark.listenerManager.unregister(qeListener)
     }
+  }
+
+  test("a map-reduce ask rejects chunkSize <= 0 or overlap outside [0, chunkSize) up front") {
+    val svc = new QaService(spark)
+    val q = "spark query join data"
+    for ((chunkSize, overlap) <- Seq((64, 64), (0, 16), (64, -1));
+         text <- Seq("", doc)) {
+      val clue = s"chunkSize $chunkSize, overlap $overlap, ${text.length} chars"
+      val e = intercept[IllegalArgumentException](svc.ask("v.md",
+        text.getBytes("UTF-8"), q, chunkSize = chunkSize, overlap = overlap))
+      assert(e.getMessage.contains(
+        if (chunkSize <= 0) "chunkSize must be" else "overlap must be"),
+        s"$clue: ${e.getMessage}")
+      // truncation reads no chunk parameter
+      svc.ask("v.md", text.getBytes("UTF-8"), q, chunkSize = chunkSize,
+        overlap = overlap, pipelineType = "truncation")
+    }
+    assert(svc.templateModes.keySet.forall(_._2 == "truncation"))
   }
 
   test("preview returns the parsed head without running the pipeline") {
@@ -166,14 +187,16 @@ class ServiceSpec extends SparkSpec {
     assert(java.time.Instant.parse(h.timestamp) != null) // ISO-8601
   }
 
-  test("engine cache: same config reuses the instance, distinct configs don't") {
+  test("templates: one per (format, pipeline, strategy), whatever the question and sizes") {
     val svc = new QaService(spark)
-    val e1 = svc.engineFor("q one", "hybrid", 64, 16, 1)
-    val e2 = svc.engineFor("q one", "hybrid", 64, 16, 1)
-    val e3 = svc.engineFor("q one", "json", 64, 16, 1)
-    assert(e1 eq e2)
-    assert(!(e1 eq e3))
-    assert(svc.cacheSize == 2)
+    val bytes = doc.getBytes("UTF-8")
+    val formats = Seq("hybrid", "json")
+    for (i <- 1 to 50; (chunkSize, overlap) <- Seq((8, 2), (16, 4), (32, 0), (64, 16));
+         format <- formats; pipeline <- Engine.supportedPipelines)
+      svc.ask("t.md", bytes, s"question $i about spark data", format = format,
+        chunkSize = chunkSize, overlap = overlap, pipelineType = pipeline)
+    assert(svc.templateModes == formats.flatMap(f => Seq(
+      (f, "mapreduce", "") -> true, (f, "truncation", "start") -> true)).toMap)
   }
 
   test("RunPipeline CLI entry: markdown corpus -> results envelope end to end") {
@@ -229,17 +252,144 @@ class ServiceSpec extends SparkSpec {
   test("warm single-request latency stays interactive") {
     val svc = new QaService(spark)
     val q = "spark query join data"
-    svc.ask("warm.md", doc.getBytes("UTF-8"), q) // codegen + cache warmup
+    svc.ask("warm.md", doc.getBytes("UTF-8"), q) // prepares the template
     val t0 = System.nanoTime()
     val reps = 3
     (1 to reps).foreach(_ => svc.ask("warm.md", doc.getBytes("UTF-8"), q))
     val avgSec = (System.nanoTime() - t0) / 1e9 / reps
     info(f"warm single-request latency: $avgSec%.3f s avg of $reps")
     // N=1 on a warm session must be interactive (reference answers one
-    // upload per request, SURVEY 3.3); measured 0.045 s avg in the full
-    // suite and 0.06 s with ServiceSpec and two other suites, local[4, 2]
-    // test session on a 4-vCPU host (PERF_NOTES "Row-local reduce") - the
-    // 1 s bound leaves CI headroom
+    // upload per request, SURVEY 3.3); measured 0.001 s avg in the full
+    // suite and 0.002 s with ServiceSpec and two other suites, local[4, 2]
+    // test session on a 4-vCPU host (PERF_NOTES "Prepared ask") - the 1 s
+    // bound leaves CI headroom
     assert(avgSec < 1.0, f"warm single-request latency $avgSec%.2f s")
+  }
+
+  // --- prepared ask vs the Dataset path (LegacyQaAsk) ---
+
+  private val unrelated = "unrelated prose about gardening and weather " * 30
+  /** > 1000 tokens, different at either end: a 1000-token budget keeps
+    * only the spark prose from the start and only the gardening prose
+    * from the end. */
+  private val longDoc = doc * 2 + unrelated * 6
+  /** contextWindow 3000 - buffer 2000 floors the budget at 1000 tokens. */
+  private val smallWindow = 3000
+
+  /** Score = ExtractiveModel's, behind `current_timezone()`, which stays
+    * Unevaluable until the optimizer replaces it: its templates cannot be
+    * bound and run as Datasets. */
+  private object ZoneModel extends TextModel {
+    def score(chunkTokens: Column, questionTokens: Column): Column =
+      when(expr("current_timezone()").isNotNull,
+        ExtractiveModel.score(chunkTokens, questionTokens))
+    def content(chunkTokens: Column): Column = ExtractiveModel.content(chunkTokens)
+  }
+
+  /** Keeps the last half of the budget. */
+  private object TailHalf extends TruncationStrategy {
+    val name = "tail_half"
+    def truncate(text: Column, maxTokens: Column): Column =
+      graft.functions.TextFunctions.truncate_tokens(
+        text, (maxTokens / 2).cast("int"), lit("end"))
+  }
+
+  private case class Ask(text: String, question: String, format: String,
+      chunkSize: Int, overlap: Int, threshold: Int, pipeline: String,
+      strategy: String) {
+    def prepared(svc: QaService): QaAnswer = svc.ask("p.md",
+      text.getBytes("UTF-8"), question, format = format, chunkSize = chunkSize,
+      overlap = overlap, threshold = threshold, pipelineType = pipeline,
+      strategy = strategy, contextWindow = smallWindow)
+    def dataset(model: TextModel): QaAnswer = LegacyQaAsk.ask(spark, model,
+      BinaryDocs.defaultParsers("markdown").parse("p.md", text.getBytes("UTF-8")).get,
+      question, format, chunkSize, overlap, threshold, pipeline, strategy,
+      contextWindow = smallWindow)
+  }
+
+  private val pipelines = Seq("mapreduce" -> "start") ++
+    Seq("start", "end", "smart", TailHalf.name).map("truncation" -> _)
+
+  private def asks(texts: Seq[String], sizes: Seq[(Int, Int)],
+      thresholds: Seq[Int]): Seq[Ask] =
+    for (text <- texts; format <- Engine.supportedFormats;
+         (pipeline, strategy) <- pipelines;
+         (chunkSize, overlap) <- (if (pipeline == "mapreduce") sizes else sizes.take(1));
+         threshold <- thresholds)
+      yield Ask(text, "spark query join data", format, chunkSize, overlap,
+        threshold, pipeline, strategy)
+
+  private def assertSameAnswers(svc: QaService, model: TextModel, all: Seq[Ask]): Unit =
+    all.foreach(a => assert(a.prepared(svc) == a.dataset(model), a.copy(text = a.text.take(40))))
+
+  test("prepared ask equals the Dataset path (formats x pipelines x strategies x models)") {
+    TruncationStrategies.register(TailHalf)
+    val texts = (Seq(doc, unrelated, longDoc) ++
+      MapReduceParitySpec.edgeTexts.filter(_ != null)).distinct
+    val sizes = Seq((4, 1), (64, 16))
+    for ((model, thresholds) <- Seq(ExtractiveModel -> Seq(1, 3), LongTokenModel -> Seq(1))) {
+      val svc = new QaService(spark, model)
+      assertSameAnswers(svc, model, asks(texts, sizes, thresholds))
+      // every built-in template (and the custom strategy's) is bound
+      assert(svc.templateModes == (for (f <- Engine.supportedFormats;
+        (p, st) <- pipelines) yield (f, p, if (p == "mapreduce") "" else st) -> true).toMap)
+    }
+  }
+
+  test("a template holding an Unevaluable expression runs as a Dataset and still matches") {
+    val svc = new QaService(spark, ZoneModel)
+    assertSameAnswers(svc, ZoneModel,
+      asks(Seq(doc, longDoc, "", "spark query x y z w spark query"), Seq((4, 1)), Seq(1))
+        .filter(a => a.strategy == "start" || a.strategy == "end"))
+    assert(svc.templateModes.nonEmpty && svc.templateModes.values.forall(!_),
+      svc.templateModes)
+  }
+
+  test("re-registering a strategy name changes the next ask's answer") {
+    def keep(mode: String) = new TruncationStrategy {
+      val name = "svc_swap"
+      def truncate(text: Column, maxTokens: Column): Column =
+        graft.functions.TextFunctions.truncate_tokens(text, maxTokens, lit(mode))
+    }
+    val svc = new QaService(spark)
+    def ask() = svc.ask("s.md", longDoc.getBytes("UTF-8"), "spark query join data",
+      pipelineType = "truncation", strategy = "svc_swap", contextWindow = smallWindow)
+    TruncationStrategies.register(keep("start"))
+    val fromStart = ask()
+    TruncationStrategies.register(keep("end"))
+    val fromEnd = ask()
+    assert(fromStart.answer != MapReducePipeline.NoAnswer &&
+      fromEnd.answer == MapReducePipeline.NoAnswer,
+      (fromStart.answer.take(40), fromEnd.answer.take(40)))
+    assert(svc.templateModes.keySet == Set(("hybrid", "truncation", "svc_swap")))
+  }
+
+  test("8 threads asking through shared templates get the sequential Dataset answers") {
+    val svc = new QaService(spark)
+    val mixed = (for (text <- Seq(doc, longDoc, "spark query x y z w spark query", "");
+                      format <- Seq("hybrid", "json");
+                      (pipeline, strategy) <- Seq("mapreduce" -> "start",
+                        "truncation" -> "start", "truncation" -> "end");
+                      (q, (chunkSize, overlap)) <- Seq("spark query join data" -> (4, 1),
+                        "window functions merge" -> (64, 16)))
+      yield Ask(text, q, format, chunkSize, overlap, 1, pipeline, strategy)).toIndexedSeq
+    val expected = mixed.map(_.dataset(ExtractiveModel))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val futures = (0 until 8).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Int]] {
+          def call(): Seq[Int] = {
+            start.await()
+            // each thread its own order, twice over
+            val order = new scala.util.Random(t).shuffle((mixed.indices ++ mixed.indices).toList)
+            order.filter(i => mixed(i).prepared(svc) != expected(i))
+          }
+        })
+      }
+      start.countDown()
+      val wrong = futures.flatMap(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      assert(wrong.isEmpty, wrong.distinct.map(i => mixed(i).copy(text = mixed(i).text.take(40))))
+    } finally pool.shutdownNow()
   }
 }
