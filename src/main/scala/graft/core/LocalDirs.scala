@@ -50,6 +50,18 @@ object LocalDirs {
       } else None
   }
 
+  /** A fresh per-invocation scratch directory (staged stream sources,
+    * streaming checkpoints): under `/dev/shm` when it is writable, so
+    * temp bytes sit on the RAM-backed volume, else under the JVM's
+    * default temp dir. No headroom gate: these hold kilobytes. The
+    * caller deletes it in its outermost `finally`. */
+  def scratchDir(prefix: String): java.nio.file.Path = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    if (java.nio.file.Files.isWritable(shm))
+      java.nio.file.Files.createTempDirectory(shm, prefix)
+    else java.nio.file.Files.createTempDirectory(prefix)
+  }
+
   /** Applies [[preferred]] to a session builder (no-op when the
     * context already exists — `spark.local.dir` is a static conf). */
   def apply(b: SparkSession.Builder): SparkSession.Builder = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -12,6 +12,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * §2.11). All are codegen-participating: `CountTokens` emits a direct
   * static call inside whole-stage codegen; the generator and struct
   * expressions use eval (they produce rows/structs, outside hot arithmetic).
+  *
+  * Tokens come from one scanner ([[Tokenizer]]), never from a regex:
+  * `regex_tokens` ([[TokensOf]]) scans the UTF-8 bytes and returns what
+  * `regexp_extract_all(text, Tokenizer.DuckDbTokenRegex)` would, with its
+  * type. The map step tokenizes each document once: [[ChunkTokens]] hands
+  * every chunk its tokens, [[DistinctOverlap]] scores them without hash
+  * sets, [[HasTokens]] stops at the first token and [[XmlEscape]] escapes
+  * in one pass. The regex itself lives on only in the DuckDB oracle SQL.
   */
 
 /** `count_tokens(text)` — token count under the engine tokenizer.
@@ -88,7 +96,6 @@ object TruncateTokens {
   * top-level object gets static forwarders, so Janino-generated Java can
   * call them directly (no fallback row materialization or boxing). */
 object TextKernels {
-  import org.apache.spark.sql.catalyst.util.ArrayData
 
   /** The token-window chunking kernel behind both forms of
     * `split_chunks`: one (chunk_idx, chunk_text, token_count) row per
@@ -105,8 +112,185 @@ object TextKernels {
     }
   }
 
-  def splitChunksArray(t: UTF8String, size: Int, overlap: Int): ArrayData =
-    new GenericArrayData(splitChunks(t, size, overlap).asInstanceOf[Array[Any]])
+  /** The token strings of `t`, each a slice of one private copy of its
+    * bytes: a token never aliases the input's buffer, which a scan or an
+    * `UnsafeRow` may reuse for the next row. */
+  private def tokenStrings(t: UTF8String): Array[UTF8String] = {
+    var bytes = new Array[Byte](t.numBytes)
+    t.writeToMemory(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
+    var offs = Tokenizer.tokenizeUtf8(bytes, bytes.length)
+    if (offs == null) { // malformed UTF-8: scan what the string decodes to
+      bytes = t.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      offs = Tokenizer.tokenizeUtf8(bytes, bytes.length)
+    }
+    val out = new Array[UTF8String](offs.length / 2)
+    var i = 0
+    while (i < out.length) {
+      out(i) = UTF8String.fromBytes(bytes, offs(2 * i), offs(2 * i + 1) - offs(2 * i))
+      i += 1
+    }
+    out
+  }
+
+  /** `tokens(text)`: the engine tokenizer's token strings. */
+  def tokens(t: UTF8String): ArrayData =
+    new GenericArrayData(tokenStrings(t).asInstanceOf[Array[Any]])
+
+  /** `chunk_tokens(text, size, overlap)`: one (chunk_idx, tokens) row per
+    * [[Tokenizer.chunkSpans]] window. The document is tokenized once and
+    * overlapping chunks share their token strings. */
+  def chunkTokens(t: UTF8String, size: Int, overlap: Int): ArrayData = {
+    val toks = tokenStrings(t)
+    val spans = Tokenizer.chunkSpans(toks.length, size, overlap)
+    val out = new Array[Any](spans.length)
+    var idx = 0
+    while (idx < spans.length) {
+      val (a, b) = spans(idx)
+      val slice = new Array[Any](b - a)
+      System.arraycopy(toks, a, slice, 0, b - a)
+      out(idx) = new GenericInternalRow(Array[Any](idx, new GenericArrayData(slice)))
+      idx += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** `distinct_overlap(a, q)`: how many distinct values the string arrays
+    * share (null counts as a value), i.e. `size(array_intersect(
+    * array_distinct(a), q))`. No hash set of strings: the distinct values
+    * of `q` (the short side, a question's tokens against a chunk's) go
+    * into a small open-addressing table keyed by byte length and 8-byte
+    * prefix, and one pass over `a` probes it. A key match of at most 8
+    * bytes (every ASCII token) is an equal string; a longer one compares
+    * the bytes. Stops once every value of `q` is found. */
+  def distinctOverlap(a: ArrayData, q: ArrayData): Int = {
+    val nq = q.numElements
+    val qs = new Array[UTF8String](nq)
+    val prefix = new Array[Long](nq)
+    val mask = Integer.highestOneBit(nq * 2 + 1) * 2 - 1
+    val slots = Array.fill(mask + 1)(-1)
+    var nd = 0        // distinct non-null values of q, in qs(0 until nd)
+    var qNull = false
+    var j = 0
+    while (j < nq) {
+      if (q.isNullAt(j)) qNull = true
+      else {
+        val t = q.getUTF8String(j)
+        val p = prefix8(t)
+        var h = slot(p, t.numBytes, mask)
+        while (slots(h) >= 0 && qs(slots(h)) != t) h = (h + 1) & mask
+        if (slots(h) < 0) {
+          slots(h) = nd; qs(nd) = t; prefix(nd) = p; nd += 1
+        }
+      }
+      j += 1
+    }
+    val want = nd + (if (qNull) 1 else 0)
+    val found = new Array[Boolean](nd)
+    var nullFound = false
+    var count = 0
+    val na = a.numElements
+    var i = 0
+    while (i < na && count < want) {
+      if (a.isNullAt(i)) {
+        if (qNull && !nullFound) { nullFound = true; count += 1 }
+      } else {
+        val s = a.getUTF8String(i)
+        val n = s.numBytes
+        val p = prefix8(s)
+        var h = slot(p, n, mask)
+        var k = slots(h)
+        while (k >= 0) {
+          val t = qs(k)
+          if (t.numBytes == n && prefix(k) == p && (n <= 8 || t == s)) {
+            if (!found(k)) { found(k) = true; count += 1 }
+            k = -1
+          } else {
+            h = (h + 1) & mask
+            k = slots(h)
+          }
+        }
+      }
+      i += 1
+    }
+    count
+  }
+
+  @inline private def slot(prefix: Long, numBytes: Int, mask: Int): Int =
+    ((prefix + numBytes) * 0x9E3779B97F4A7C15L >>> 40).toInt & mask
+
+  /** The first (up to) 8 bytes of `s` as a long. Read byte by byte:
+    * `UTF8String.getPrefix` reads whole words, past the end of a token
+    * that ends its buffer. */
+  private def prefix8(s: UTF8String): Long = {
+    val n = math.min(s.numBytes, 8)
+    var p = 0L
+    s.getBaseObject match {
+      case b: Array[Byte] =>
+        var i = (s.getBaseOffset - org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET).toInt
+        val end = i + n
+        while (i < end) { p = (p << 8) | (b(i) & 0xFF); i += 1 }
+      case _ =>
+        var i = 0
+        while (i < n) { p = (p << 8) | (s.getByte(i) & 0xFF); i += 1 }
+    }
+    p
+  }
+
+  /** `has_tokens(text)`: whether the engine tokenizer finds a token.
+    * Every code point other than ASCII whitespace starts one, and so does
+    * every byte of a malformed sequence (it decodes to U+FFFD), so this
+    * stops at the first byte that is not ASCII whitespace. */
+  def hasTokens(t: UTF8String): Boolean = {
+    val n = t.numBytes
+    var i = 0
+    while (i < n) {
+      val c = t.getByte(i)
+      if (c != ' ' && (c < '\t' || c > '\r')) return true
+      i += 1
+    }
+    false
+  }
+
+  /** `xml_escape(text)`: the five XML entities in one pass, equal to the
+    * `replace` chain & -> &amp; then < > " '. All five are ASCII bytes,
+    * which never occur inside a multi-byte UTF-8 sequence. */
+  def xmlEscape(t: UTF8String): UTF8String = {
+    val n = t.numBytes
+    var extra = 0
+    var i = 0
+    while (i < n) {
+      t.getByte(i) match {
+        case '&' => extra += 4
+        case '<' | '>' => extra += 3
+        case '"' | '\'' => extra += 5
+        case _ =>
+      }
+      i += 1
+    }
+    if (extra == 0) return t
+    val out = new Array[Byte](n + extra)
+    var o = 0
+    def put(s: Array[Byte]): Unit = { System.arraycopy(s, 0, out, o, s.length); o += s.length }
+    i = 0
+    while (i < n) {
+      val c = t.getByte(i)
+      c match {
+        case '&' => put(XmlAmp)
+        case '<' => put(XmlLt)
+        case '>' => put(XmlGt)
+        case '"' => put(XmlQuot)
+        case '\'' => put(XmlApos)
+        case _ => out(o) = c; o += 1
+      }
+      i += 1
+    }
+    UTF8String.fromBytes(out)
+  }
+  private val XmlAmp = "&amp;".getBytes
+  private val XmlLt = "&lt;".getBytes
+  private val XmlGt = "&gt;".getBytes
+  private val XmlQuot = "&quot;".getBytes
+  private val XmlApos = "&apos;".getBytes
 
   def truncateTokens(t: UTF8String, max: Int, mode: UTF8String): InternalRow = {
     val strategy = mode.toString
@@ -557,12 +741,20 @@ case class SplitChunks(text: Expression, size: Expression, overlap: Expression)
   override def prettyName: String = "split_chunks"
 }
 
-/** `split_chunks_array(text, size, overlap)` — [[SplitChunks]]' chunks as
-  * one array value per row, from the same kernel. A projection, not a
-  * generator: the map-reduce answers score and reduce each document's
-  * chunks inside its own row (no explode, no regroup). Null text yields
+object ChunkTokens {
+  val elementSchema: StructType = StructType(Seq(
+    StructField("chunk_idx", IntegerType, nullable = false),
+    StructField("tokens", TokensOf.dataType, nullable = false)))
+}
+
+/** `chunk_tokens(text, size, overlap)` — [[SplitChunks]]' windows as one
+  * array value per row, each chunk as its tokens (chunk_idx, tokens)
+  * rather than its text. A projection, not a generator: the map-reduce
+  * answers score and reduce each document's chunks inside its own row
+  * (no explode, no regroup), and the document is tokenized once, not
+  * once to split it and again per chunk to score it. Null text yields
   * null. */
-case class SplitChunksArray(text: Expression, size: Expression, overlap: Expression)
+case class ChunkTokens(text: Expression, size: Expression, overlap: Expression)
     extends TernaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] =
     Seq(StringType, IntegerType, IntegerType)
@@ -570,16 +762,109 @@ case class SplitChunksArray(text: Expression, size: Expression, overlap: Express
   override def second: Expression = size
   override def third: Expression = overlap
   override def dataType: DataType =
-    ArrayType(SplitChunks.elementSchema, containsNull = false)
+    ArrayType(ChunkTokens.elementSchema, containsNull = false)
   override def nullSafeEval(t: Any, sz: Any, ov: Any): Any =
-    TextKernels.splitChunksArray(t.asInstanceOf[UTF8String],
+    TextKernels.chunkTokens(t.asInstanceOf[UTF8String],
       sz.asInstanceOf[Int], ov.asInstanceOf[Int])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (t, sz, ov) =>
-      s"graft.functions.TextKernels.splitChunksArray($t, $sz, $ov)")
+      s"graft.functions.TextKernels.chunkTokens($t, $sz, $ov)")
   override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): SplitChunksArray = copy(f, s, t)
-  override def prettyName: String = "split_chunks_array"
+      f: Expression, s: Expression, t: Expression): ChunkTokens = copy(f, s, t)
+  override def prettyName: String = "chunk_tokens"
+}
+
+object TokensOf {
+  /** `regexp_extract_all`'s result type, so switching an operator from
+    * the regex to the scanner changes no schema. */
+  val dataType: ArrayType = ArrayType(StringType, containsNull = true)
+}
+
+/** `tokens(text)` — the engine tokenizer's token strings, from the
+  * scanner ([[Tokenizer.tokenizeUtf8]] over the UTF-8 bytes). Equal to
+  * `regexp_extract_all(text, Tokenizer.DuckDbTokenRegex, 0)` on every
+  * input, malformed UTF-8 included (property-tested), with that
+  * expression's type, nullability and implicit cast to string. */
+case class TokensOf(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] = Seq(StringType)
+  override def dataType: DataType = TokensOf.dataType
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(v: Any): Any = TextKernels.tokens(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.tokens($c)")
+  override protected def withNewChildInternal(c: Expression): TokensOf = copy(c)
+  override def prettyName: String = "tokens"
+}
+
+/** `has_tokens(text)` — `count_tokens(text) > 0` without counting: true
+  * at the first byte that is not ASCII whitespace. */
+case class HasTokens(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] = Seq(StringType)
+  override def dataType: DataType = BooleanType
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(v: Any): Any = TextKernels.hasTokens(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.hasTokens($c)")
+  override protected def withNewChildInternal(c: Expression): HasTokens = copy(c)
+  override def prettyName: String = "has_tokens"
+}
+
+/** `distinct_overlap(a, q)` — `size(array_intersect(array_distinct(a),
+  * q))` over string arrays, without the two hash sets
+  * ([[TextKernels.distinctOverlap]]). A null input gives what that
+  * expression gives: -1 under `spark.sql.legacy.sizeOfNull` (without
+  * ANSI), else null. */
+case class DistinctOverlap(left: Expression, right: Expression,
+    legacySizeOfNull: Boolean = org.apache.spark.sql.internal.SQLConf.get.legacySizeOfNull)
+    extends BinaryExpression {
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case (l, r) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"distinct_overlap expects (array<string>, array<string>), got ($l, $r)")
+    }
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = !legacySizeOfNull && super.nullable
+  override def eval(input: InternalRow): Any = {
+    val a = left.eval(input)
+    val q = if (a == null) null else right.eval(input)
+    if (q == null) { if (legacySizeOfNull) -1 else null }
+    else TextKernels.distinctOverlap(a.asInstanceOf[ArrayData], q.asInstanceOf[ArrayData])
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (!legacySizeOfNull)
+      defineCodeGen(ctx, ev, (a, q) => s"graft.functions.TextKernels.distinctOverlap($a, $q)")
+    else {
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      val (a, q) = (left.genCode(ctx), right.genCode(ctx))
+      ev.copy(code = code"""
+        ${a.code}
+        ${q.code}
+        boolean ${ev.isNull} = false;
+        int ${ev.value} = (${a.isNull} || ${q.isNull}) ? -1 :
+          graft.functions.TextKernels.distinctOverlap(${a.value}, ${q.value});""",
+        isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+    }
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): DistinctOverlap = copy(l, r)
+  override def prettyName: String = "distinct_overlap"
+}
+
+/** `xml_escape(text)` — the 5-entity XML escape in one pass
+  * ([[TextKernels.xmlEscape]]); equal to the five chained `replace`s. */
+case class XmlEscape(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] = Seq(StringType)
+  override def dataType: DataType = StringType
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(v: Any): Any = TextKernels.xmlEscape(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.xmlEscape($c)")
+  override protected def withNewChildInternal(c: Expression): XmlEscape = copy(c)
+  override def prettyName: String = "xml_escape"
 }
 
 /** `split_chunks_chars(text, size, overlap, sep)` — C2, the reference's
@@ -945,8 +1230,12 @@ object TextFunctions {
     col(TruncateTokens(ex(c), ex(maxTokens), ex(mode)))
   def split_chunks(c: Column, size: Column, overlap: Column): Column =
     col(SplitChunks(ex(c), ex(size), ex(overlap)))
-  def split_chunks_array(c: Column, size: Column, overlap: Column): Column =
-    col(SplitChunksArray(ex(c), ex(size), ex(overlap)))
+  def chunk_tokens(c: Column, size: Column, overlap: Column): Column =
+    col(ChunkTokens(ex(c), ex(size), ex(overlap)))
+  def has_tokens(c: Column): Column = col(HasTokens(ex(c)))
+  def distinct_overlap(a: Column, q: Column): Column =
+    col(DistinctOverlap(ex(a), ex(q)))
+  def xml_escape(c: Column): Column = col(XmlEscape(ex(c)))
   def split_chunks_chars(c: Column, size: Column, overlap: Column,
       sep: Column): Column =
     col(SplitChunksChars(ex(c), ex(size), ex(overlap), ex(sep)))
@@ -1008,13 +1297,10 @@ object TextFunctions {
   def minhash_sig(c: Column, numHashes: Column): Column =
     col(MinHashSig(ex(c), ex(numHashes)))
 
-  /** The engine's token rule as a (codegen'd) regexp extraction — THE one
-    * place the regex-token form lives; semantically equal to the scanner
-    * (property-tested). Use this, not ad-hoc regexp_extract_all calls. */
-  def regex_tokens(c: Column): Column =
-    org.apache.spark.sql.functions.regexp_extract_all(
-      c, org.apache.spark.sql.functions.lit(Tokenizer.DuckDbTokenRegex),
-      org.apache.spark.sql.functions.lit(0))
+  /** The engine's token strings ([[TokensOf]], the scanner): what
+    * `regexp_extract_all(c, Tokenizer.DuckDbTokenRegex, 0)` returns, with
+    * its type (property-tested). The DuckDB oracles keep the regex. */
+  def regex_tokens(c: Column): Column = col(TokensOf(ex(c)))
 
   /** Register all text-kernel functions for SQL use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -13,7 +13,7 @@ import graft.functions.Tokenizer
   *
   * Stages (all lazy DataFrames — Catalyst sees the whole graph), per
   * document row:
-  *   text --split_chunks_array--> chunks --map--> scored --filter-->
+  *   text --chunk_tokens--> chunks --map--> scored --filter-->
   *   survivors --reduce--> answer + filtering stats
   *
   * The reference's LLM call is abstracted as a [[TextModel]]. The default
@@ -33,11 +33,18 @@ import graft.functions.Tokenizer
   * (`judged`), which numbers the raw (doc_id, text) rows before they are
   * scored. [[MapReducePipeline.mapped]] still emits one row per chunk for
   * per-chunk consumers.
+  *
+  * Tokenize once: `chunk_tokens` scans each document once and hands every
+  * chunk its tokens, so the map step never re-tokenizes chunk text.
   */
 trait TextModel {
-  /** Relevance score (0-10) of a chunk's tokens against question tokens. */
+  /** Relevance score (0-10) of a chunk's tokens against question tokens.
+    * `chunkTokens` is the chunk's `array<string>` of engine tokens (the
+    * type `regexp_extract_all` returns), sliced from its document's one
+    * scan; `questionTokens` is the question's distinct tokens. */
   def score(chunkTokens: Column, questionTokens: Column): Column
-  /** Per-chunk extractive answer content, given the chunk's tokens. */
+  /** Per-chunk extractive answer content, given the chunk's tokens (as
+    * in [[score]]). */
   def content(chunkTokens: Column): Column
   /** M8 question improvement (base_pipeline.py:521-630: the LLM rewrites
     * the question before the map stage). Default: whitespace-normalize
@@ -64,10 +71,12 @@ trait TextModel {
 }
 
 /** Deterministic extractive scorer: score = |distinct chunk tokens ∩
-  * question tokens| capped at 10; content = space-joined chunk tokens. */
+  * question tokens| capped at 10, counted by the native
+  * `distinct_overlap` kernel (no hash sets per chunk); content =
+  * space-joined chunk tokens. */
 object ExtractiveModel extends TextModel {
   def score(chunkTokens: Column, questionTokens: Column): Column =
-    least(lit(10), size(array_intersect(array_distinct(chunkTokens), questionTokens)))
+    least(lit(10), distinct_overlap(chunkTokens, questionTokens))
   def content(chunkTokens: Column): Column = concat_ws(" ", chunkTokens)
 }
 
@@ -162,12 +171,6 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
     * default inputs of every plan below. */
   private val literals: PlanInputs = PlanInputs.literals(cfg)
 
-  /** Token regex shared with the DuckDB oracle. Applied to chunk_text with
-    * Spark's codegen'd regexp_extract_all — identical semantics to the
-    * scanner (property-tested). */
-  private val chunkTokens: Column =
-    graft.functions.TextFunctions.regex_tokens(col("chunk_text"))
-
   /** The map step for one chunk, from its tokens: the relevance score
     * (scaled to the format's range, 0-10 json/hybrid, 0-100 plain) and the
     * extractive content. The one place the per-chunk formula lives:
@@ -177,31 +180,27 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
     (cfg.format.scaleUp(model.score(ctoks, in.questionTokens)), model.content(ctoks))
 
   /** Stage 1-2: explode documents into scored chunks (M1 + map), one row
-    * per chunk. */
+    * per chunk: doc_id, chunk_idx, token_count, score, content. */
   def mapped(documents: DataFrame): DataFrame = {
-    val (score, content) = mapChunk(col("ctoks"), literals)
+    val (score, content) = mapChunk(col("c.tokens"), literals)
     documents.select(col("doc_id"),
-        split_chunks(col("text"), literals.chunkSize, literals.overlap))
-      .withColumn("ctoks", chunkTokens)
-      .withColumn("score", score)
-      .withColumn("content", content)
-      .drop("ctoks", "chunk_text")
+        explode(chunk_tokens(col("text"), literals.chunkSize, literals.overlap)).as("c"))
+      .select(col("doc_id"), col("c.chunk_idx").as("chunk_idx"),
+        size(col("c.tokens")).as("token_count"), score.as("score"),
+        content.as("content"))
   }
 
   /** M4: XML-wrapped reduce-input item `<chunk_i>escaped</chunk_i>` with
     * the 5-entity escape (json_formatter.py:36-98). */
-  private def xmlItem(idx: Column, content: Column): Column = {
-    val escaped = Seq("&" -> "&amp;", "<" -> "&lt;", ">" -> "&gt;",
-      "\"" -> "&quot;", "'" -> "&apos;")
-      .foldLeft(content) { case (c, (from, to)) => replace(c, lit(from), lit(to)) }
-    concat(lit("<chunk_"), idx, lit(">"), escaped, lit("</chunk_"), idx, lit(">"))
-  }
+  private def xmlItem(idx: Column, content: Column): Column =
+    concat(lit("<chunk_"), idx, lit(">"), xml_escape(content), lit("</chunk_"), idx, lit(">"))
 
   /** Documents that yield at least one chunk. Tested on the raw text, not
     * on the size of the scored array: Catalyst would push a filter on the
-    * array below its Project and score every document twice. */
+    * array below its Project and score every document twice. Stops at
+    * the first token. */
   private def withChunks(documents: DataFrame): DataFrame =
-    documents.filter(count_tokens(col("text")) > 0)
+    documents.filter(has_tokens(col("text")))
 
   /** Stage 3-5 inside each document row: filter (P4), ordered reduce
     * input (M4/M5/O1), extractive reduce + error-row fabrication
@@ -210,15 +209,15 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
   private def reduced(documents: DataFrame, carry: Seq[String],
       in: PlanInputs): DataFrame = {
     val carried = carry ++ in.keep
-    val chunks = split_chunks_array(col("text"), in.chunkSize, in.overlap)
-    // tokens once per chunk, then score and content from them
-    val scored = transform(
-      transform(chunks, c => struct(c("chunk_idx").as("chunk_idx"),
-        regex_tokens(c("chunk_text")).as("ctoks"))),
-      c => {
-        val (score, content) = mapChunk(c("ctoks"), in)
-        struct(c("chunk_idx").as("chunk_idx"), score.as("score"), content.as("content"))
-      })
+    // the document tokenized once; each chunk scored from its tokens, and
+    // its content built only if it passes the threshold: no other chunk's
+    // content reaches the answer. (Passing the tokens on to a second
+    // transform instead would deep-copy them per chunk.)
+    val scored = transform(chunk_tokens(col("text"), in.chunkSize, in.overlap), c => {
+      val (score, content) = mapChunk(c("tokens"), in)
+      struct(c("chunk_idx").as("chunk_idx"), score.as("score"),
+        when(score > in.threshold, content).as("content"))
+    })
     // single-value ordering key: best score first, then lowest chunk_idx
     // (chunk_idx < 1e6 by construction at sane chunk sizes)
     val top = array_max(transform(col("survivors"), c =>
@@ -274,10 +273,7 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
   def judgeBlocks(documents: DataFrame): DataFrame = {
     val j = judged(documents)
     val item = concat(lit("<qa_pair id=\""), col("item_number"), lit("\"><answer>"),
-      Seq("&" -> "&amp;", "<" -> "&lt;", ">" -> "&gt;",
-        "\"" -> "&quot;", "'" -> "&apos;")
-        .foldLeft(col("llm_answer")) { case (c, (f, t)) => replace(c, lit(f), lit(t)) },
-      lit("</answer></qa_pair>"))
+      xml_escape(col("llm_answer")), lit("</answer></qa_pair>"))
     j.withColumn("item", item)
       .groupBy(col("batch_id"))
       .agg(count(lit(1)).as("n_items"),

@@ -103,18 +103,6 @@ object StreamingOps {
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     } catch { case _: java.io.IOException => 0L }
 
-  /** tmpfs-preferred scratch directory: staged source copies and
-    * sentinel scratch follow the LocalDirs rationale (temp bytes on the
-    * fast volume — offset/commit checkpoints already live there); falls
-    * back to the JVM default temp dir. Never changes what a query
-    * computes. */
-  private def tempDir(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    else java.nio.file.Files.createTempDirectory(prefix)
-  }
-
   /** The [[graft.core.Tables.loadSpread]] guard, stream form: a single
     * parquet file under the split size scans as ONE task per
     * micro-batch, serializing every per-row kernel downstream of the
@@ -210,11 +198,7 @@ object StreamingOps {
     val prevNd = spark.conf.getOption(ndKey)
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
     if (!noDataBatches) spark.conf.set(ndKey, "false")
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isWritable(shm))
-        Some(java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_"))
-      else None
+    val ckpt = graft.core.LocalDirs.scratchDir("graft_ckpt_")
     // Checkpoint cleanup sits in the OUTERMOST finally: if start()
     // itself throws (analysis error, unsupported-operation check) the
     // tmpfs directory must not leak — /dev/shm is a bounded resource
@@ -222,10 +206,8 @@ object StreamingOps {
     try {
       val q =
         try {
-          var w = agg.writeStream.outputMode(outputMode)
-            .format("memory").queryName(name)
-          ckpt.foreach(p => w = w.option("checkpointLocation", p.toString))
-          w.start()
+          agg.writeStream.outputMode(outputMode).format("memory").queryName(name)
+            .option("checkpointLocation", ckpt.toString).start()
         } finally {
           spark.conf.set("spark.sql.shuffle.partitions", prevSp)
           prevNd match {
@@ -235,7 +217,7 @@ object StreamingOps {
         }
       try { q.processAllAvailable(); recordPlan(name, q) } finally q.stop()
       spark.table(name).stableCheckpoint()
-    } finally ckpt.foreach(rmTree)
+    } finally rmTree(ckpt)
   }
 
   /** Event-time tumbling-window aggregation, run as a REAL streaming query
@@ -714,7 +696,7 @@ object StreamingOps {
   def eventSessions(spark: SparkSession, dir: String,
       gapSec: Long = 1800): DataFrame = withNanosAsLong(spark) {
     import java.nio.file.{Files, Paths}
-    val stage = tempDir("graft_sessions_src")
+    val stage = graft.core.LocalDirs.scratchDir("graft_sessions_src")
     val srcPath = Paths.get(s"$dir/events.parquet")
     if (Files.isDirectory(srcPath)) {
       // directory-of-part-files layout: stage the data files flat
@@ -749,60 +731,54 @@ object StreamingOps {
     // (fsync on a bounded drain is pure machinery)
     val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (Files.isWritable(shm))
-        Some(Files.createTempDirectory(shm, "graft_sess_ckpt_"))
-      else None
-    val q =
-      try {
-        var w = out.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-        ckpt.foreach(p => w = w.option("checkpointLocation", p.toString))
-        w.start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevSp)
+    val ckpt = graft.core.LocalDirs.scratchDir("graft_sess_ckpt_")
+    // checkpoint cleanup in the OUTERMOST finally, as in drainToMemorySink
     try {
-      q.processAllAvailable()
-      // sentinel row: same on-disk schema, user_id -1, ts far past every
-      // open session's (last + gap) horizon
-      val sentinelMicros = maxMicros + 20L * gapSec * 1000000L
-      val sentinelTs: Column = tsType match {
-        case LongType => lit(sentinelMicros * 1000L) // nanos generation
-        case TimestampNTZType => lit(java.time.LocalDateTime.ofEpochSecond(
-          sentinelMicros / 1000000L, ((sentinelMicros % 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC))
-        case _ => lit(java.time.Instant.ofEpochSecond(
-          sentinelMicros / 1000000L, (sentinelMicros % 1000000L) * 1000L))
-      }
-      val cols = schema.fields.map { f =>
-        (f.name match {
-          case "ts" => sentinelTs
-          case "user_id" | "event_id" => lit(-1L)
-          case _ => f.dataType match {
-            case StringType => lit("sentinel")
-            case DoubleType => lit(0.0)
-            case _ => lit(null)
-          }
-        }).cast(f.dataType).as(f.name)
-      }
-      val scratch = tempDir("graft_sessions_sentinel")
-      spark.range(1).select(cols.toIndexedSeq: _*)
-        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      // Files.list is a resource-holding stream: close it, or each call
-      // leaks a directory handle for the JVM lifetime
-      val listing = Files.list(scratch)
-      val part =
-        try listing.filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst.get
-        finally listing.close()
-      Files.move(part, stage.resolve("zz_sentinel.parquet"))
-      rmTree(scratch)
-      q.processAllAvailable()
-      recordPlan(name, q)
-    } finally {
-      q.stop()
-      ckpt.foreach(rmTree)
-    }
+      val q =
+        try {
+          out.writeStream.outputMode("append").format("memory").queryName(name)
+            .option("checkpointLocation", ckpt.toString).start()
+        } finally spark.conf.set("spark.sql.shuffle.partitions", prevSp)
+      try {
+        q.processAllAvailable()
+        // sentinel row: same on-disk schema, user_id -1, ts far past every
+        // open session's (last + gap) horizon
+        val sentinelMicros = maxMicros + 20L * gapSec * 1000000L
+        val sentinelTs: Column = tsType match {
+          case LongType => lit(sentinelMicros * 1000L) // nanos generation
+          case TimestampNTZType => lit(java.time.LocalDateTime.ofEpochSecond(
+            sentinelMicros / 1000000L, ((sentinelMicros % 1000000L) * 1000L).toInt,
+            java.time.ZoneOffset.UTC))
+          case _ => lit(java.time.Instant.ofEpochSecond(
+            sentinelMicros / 1000000L, (sentinelMicros % 1000000L) * 1000L))
+        }
+        val cols = schema.fields.map { f =>
+          (f.name match {
+            case "ts" => sentinelTs
+            case "user_id" | "event_id" => lit(-1L)
+            case _ => f.dataType match {
+              case StringType => lit("sentinel")
+              case DoubleType => lit(0.0)
+              case _ => lit(null)
+            }
+          }).cast(f.dataType).as(f.name)
+        }
+        val scratch = graft.core.LocalDirs.scratchDir("graft_sessions_sentinel")
+        spark.range(1).select(cols.toIndexedSeq: _*)
+          .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+        // Files.list is a resource-holding stream: close it, or each call
+        // leaks a directory handle for the JVM lifetime
+        val listing = Files.list(scratch)
+        val part =
+          try listing.filter(p =>
+            p.getFileName.toString.endsWith(".parquet")).findFirst.get
+          finally listing.close()
+        Files.move(part, stage.resolve("zz_sentinel.parquet"))
+        rmTree(scratch)
+        q.processAllAvailable()
+        recordPlan(name, q)
+      } finally q.stop()
+    } finally rmTree(ckpt)
     // snapshot BEFORE deleting the staged source (the memory sink may
     // hold lazy references) and before any later call re-registers the
     // sink name; then drop the per-call temp copies — without this every
@@ -925,15 +901,16 @@ object StreamingOps {
       .filter(col("value") < totalRows) // the token-bucket admission gate
       .observe("graft_rate_admission", count(lit(1)).as("admitted"))
       .select(pmod(col("value"), lit(nDocs)).as("doc_id"))
-    val toks = graft.functions.TextFunctions.regex_tokens(col("text"))
     val qarr = array(question.map(lit): _*)
-    val n = size(toks)
+    val n = size(col("toks"))
     val k = when(n <= chunkSize, lit(1)).otherwise(
       (lit(1) + ceil((n - lit(chunkSize)).cast("double") / stride)).cast("int"))
+    // the map-reduce pipeline's own score formula, per token window
     val best = array_max(transform(sequence(lit(1), col("n_chunks")), i =>
-      least(lit(10), size(array_intersect(
-        array_distinct(slice(toks, (i - 1) * stride + 1, lit(chunkSize))), qarr)))))
+      graft.pipeline.ExtractiveModel.score(
+        slice(col("toks"), (i - 1) * stride + 1, lit(chunkSize)), qarr)))
     val perReq = admitted.join(docs, "doc_id")
+      .withColumn("toks", graft.functions.TextFunctions.regex_tokens(col("text")))
       .withColumn("token_count", n)
       .withColumn("n_chunks", k)
       .withColumn("best_score", best)
@@ -945,11 +922,7 @@ object StreamingOps {
     val name = "graft_stream_rate_qa"
     val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isWritable(shm))
-        Some(java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_"))
-      else None
+    val ckpt = graft.core.LocalDirs.scratchDir("graft_ckpt_")
     // the metrics stream: (batch_id, admitted) per QueryProgressEvent,
     // filtered to THIS query by sink name (concurrent queries coexist)
     val metrics = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
@@ -967,10 +940,8 @@ object StreamingOps {
     try {
       val q =
         try {
-          var w = agg.writeStream.outputMode("complete")
-            .format("memory").queryName(name)
-          ckpt.foreach(p => w = w.option("checkpointLocation", p.toString))
-          w.start()
+          agg.writeStream.outputMode("complete").format("memory").queryName(name)
+            .option("checkpointLocation", ckpt.toString).start()
         } finally spark.conf.set("spark.sql.shuffle.partitions", prevSp)
       try {
         // poll-drain: stop once every admitted request is reflected in
@@ -1010,7 +981,7 @@ object StreamingOps {
       (spark.table(name).stableCheckpoint(), perBatch)
     } finally {
       spark.streams.removeListener(listener)
-      ckpt.foreach(rmTree)
+      rmTree(ckpt)
     }
   }
 }

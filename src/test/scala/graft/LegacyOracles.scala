@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Tokenizer
+import graft.functions.TextFunctions.split_chunks
 import graft.operators.TruncationStrategy
 import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, PlanInputs, TextModel}
 
@@ -13,8 +15,42 @@ import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, Plan
   * [[LegacyMapReduce]] for the row-local map-reduce answers and
   * [[truncationJudged]] for the raw-rows-first truncation batching
   * (MapReduceParitySpec), [[LegacyQaAsk]] for the prepared service ask
-  * (ServiceSpec). Not on any query path. */
+  * (ServiceSpec). The QA oracles tokenize with the regex
+  * ([[regexTokens]]) and score with [[LegacyExtractiveModel]], so the
+  * scanner kernels they check are not their own reference. Not on any
+  * query path. */
 object LegacyOracles {
+
+  /** The engine's token rule as Spark's `regexp_extract_all` — the
+    * reference the scanner-backed `TextFunctions.regex_tokens` is
+    * property-tested against (TokenKernelsSpec) and the independent
+    * tokenization the term/bigram/winnow/sketch specs count with. */
+  def regexTokens(c: Column): Column =
+    regexp_extract_all(c, lit(Tokenizer.DuckDbTokenRegex), lit(0))
+
+  /** `Engine.truncationJudgedAnswers` over literal inputs as it scored
+    * the truncated text: regex tokens and, for the extractive model, the
+    * hash-set formula. */
+  private[graft] def truncationJudgedAnswers(engine: Engine, documents: DataFrame,
+      budget: Column, strategy: TruncationStrategy): DataFrame = {
+    val (cfg, model) = (engine.config, LegacyExtractiveModel.or(engine.model))
+    val threshold = lit(cfg.threshold)
+    documents
+      .withColumn("t", strategy.truncate(col("text"), budget))
+      .withColumn("ttoks", regexTokens(col("t.text")))
+      .withColumn("score", cfg.format.scaleUp(
+        model.score(col("ttoks"), PlanInputs.literals(cfg).questionTokens)))
+      .select(col("doc_id"),
+        col("t.original_tokens").as("original_tokens"),
+        col("t.truncated_tokens").as("truncated_tokens"),
+        col("t.retention_rate").as("retention_rate"),
+        col("t.truncation_applied").as("truncation_applied"),
+        col("score"),
+        when(col("score") > threshold, model.content(col("ttoks")))
+          .otherwise(lit(MapReducePipeline.NoAnswer)).as("llm_answer"))
+      .withColumn("judgment", model.judge(cfg.format.scaleDown(col("score")),
+        when(col("score") <= threshold, lit(0)).otherwise(lit(1))))
+  }
 
   /** The pre-r18 formulation, kept VERBATIM as the parity oracle for
     * PairKernelsParitySpec — THE one place the subtle
@@ -33,9 +69,27 @@ object LegacyOracles {
   private[graft] def truncationJudged(engine: Engine, documents: DataFrame,
       budget: Column, strategy: TruncationStrategy): DataFrame =
     MapReducePipeline.positionalBatches(
-      engine.truncationJudgedAnswers(documents, Nil, budget, strategy,
-        PlanInputs.literals(engine.config)),
-      col("doc_id"))
+      truncationJudgedAnswers(engine, documents, budget, strategy), col("doc_id"))
+
+  /** `StreamingOps.rateThrottledQa`'s per-document columns as it computed
+    * them: regex tokens and its own copy of the hash-set score formula
+    * over every token window. doc_id, token_count, n_chunks, best_score. */
+  private[graft] def rateQaScores(docs: DataFrame, chunkSize: Int, overlap: Int,
+      question: Seq[String]): DataFrame = {
+    val stride = chunkSize - overlap
+    val toks = regexTokens(col("text"))
+    val qarr = array(question.map(lit): _*)
+    val n = size(toks)
+    val k = when(n <= chunkSize, lit(1)).otherwise(
+      (lit(1) + ceil((n - lit(chunkSize)).cast("double") / stride)).cast("int"))
+    val best = array_max(transform(sequence(lit(1), col("n_chunks")), i =>
+      least(lit(10), size(array_intersect(
+        array_distinct(slice(toks, (i - 1) * stride + 1, lit(chunkSize))), qarr)))))
+    docs.withColumn("token_count", n)
+      .withColumn("n_chunks", k)
+      .withColumn("best_score", best)
+      .select("doc_id", "token_count", "n_chunks", "best_score")
+  }
 
   private[graft] val legacyProbeSigsSql: String =
     """array_distinct(transform(
@@ -76,16 +130,40 @@ object LegacyOracles {
       |    CAST((l div 3) + IF(i >= 3 - l % 3, 1, 0) AS INT))))""".stripMargin
 }
 
+/** [[ExtractiveModel]] as it scored before the `distinct_overlap`
+  * kernel: |distinct chunk tokens ∩ question tokens| through two hash
+  * sets (`array_distinct`, `array_intersect`), capped at 10. */
+private[graft] object LegacyExtractiveModel extends TextModel {
+  def score(chunkTokens: Column, questionTokens: Column): Column =
+    least(lit(10), size(array_intersect(array_distinct(chunkTokens), questionTokens)))
+  def content(chunkTokens: Column): Column = concat_ws(" ", chunkTokens)
+
+  /** This model in place of [[ExtractiveModel]]; any other model as is. */
+  def or(model: TextModel): TextModel = if (model eq ExtractiveModel) this else model
+}
+
 /** The explode -> groupBy(doc_id) -> aggregate formulation of
   * [[MapReducePipeline]]'s `answers`/`judgedAnswers`/`judged`, kept
   * verbatim as the parity oracle for the row-local plan
-  * (MapReduceParitySpec). `mapped` is the pipeline's own (unchanged);
-  * `xmlItem` and the judge are copies of the pipeline's private ones. */
+  * (MapReduceParitySpec). `mapped` is the pipeline's per-chunk map as it
+  * was before the document was tokenized once: `split_chunks`, then the
+  * regex over each chunk's text, with [[LegacyExtractiveModel]] in place
+  * of [[ExtractiveModel]]; `xmlItem` is the five-`replace` escape. */
 private[graft] class LegacyMapReduce(cfg: MapReduceConfig,
-    model: TextModel = ExtractiveModel) {
+    pipelineModel: TextModel = ExtractiveModel) {
 
-  private val pipe = new MapReducePipeline(cfg, model)
-  private def mapped(documents: DataFrame): DataFrame = pipe.mapped(documents)
+  private val model = LegacyExtractiveModel.or(pipelineModel)
+
+  private def mapped(documents: DataFrame): DataFrame = {
+    val ctoks = col("ctoks")
+    documents.select(col("doc_id"),
+        split_chunks(col("text"), lit(cfg.chunkSize), lit(cfg.overlap)))
+      .withColumn("ctoks", LegacyOracles.regexTokens(col("chunk_text")))
+      .withColumn("score", cfg.format.scaleUp(
+        model.score(ctoks, PlanInputs.literals(cfg).questionTokens)))
+      .withColumn("content", model.content(ctoks))
+      .drop("ctoks", "chunk_text")
+  }
 
   private def xmlItem(idx: Column, content: Column): Column = {
     val escaped = Seq("&" -> "&amp;", "<" -> "&lt;", ">" -> "&gt;",
@@ -143,8 +221,10 @@ private[graft] class LegacyMapReduce(cfg: MapReduceConfig,
 
 /** `QaService.ask` over a Dataset, as it ran before prepared templates:
   * an [[Engine]] per configuration with the question, sizes and threshold
-  * as literals, a one-row DataFrame, the judged-answers plan, `collect`
-  * and by-name reads. The parity oracle for the prepared ask
+  * as literals, a one-row DataFrame, the judged-answers plan of the
+  * frozen oracles above ([[LegacyMapReduce]],
+  * [[LegacyOracles.truncationJudgedAnswers]]), `collect` and by-name
+  * reads. The parity oracle for the prepared ask
   * (ServiceSpec); `text` is the parsed upload. */
 private[graft] object LegacyQaAsk {
   def ask(spark: SparkSession, model: TextModel, text: String, question: String,
@@ -157,9 +237,10 @@ private[graft] object LegacyQaAsk {
       threshold = Some(threshold), model = model)
     val docs = spark.createDataFrame(Seq((0L, text))).toDF("doc_id", "text")
     val rows = (pipelineType match {
-      case "truncation" =>
-        engine.truncationJudgedAnswers(docs, contextWindow, buffer, strategy)
-      case _ => engine.judgedAnswers(docs)
+      case "truncation" => LegacyOracles.truncationJudgedAnswers(engine, docs,
+        lit(Engine.truncationBudget(question, contextWindow, buffer)),
+        graft.operators.TruncationStrategies.get(strategy))
+      case _ => new LegacyMapReduce(engine.config, model).judgedAnswers(docs)
     }).collect()
     // an upload with no tokens has no chunk, so map-reduce returns no
     // row: answer with the P9 canned row, like truncation does

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
-import graft.functions.{SplitChunksArray, TruncateTokens}
+import graft.functions.{ChunkTokens, TruncateTokens}
 import graft.operators.TruncationStrategies
 import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, QaFormat, TextModel}
 
@@ -140,7 +140,7 @@ class MapReduceParitySpec extends SparkSpec {
   test("judged shuffles once, to number raw rows, and scores above that exchange") {
     val docs = graft.core.Tables.load(spark, sf, "documents")
     assertRawRowsNumbered(new MapReducePipeline(MapReduceConfig()).judged(docs),
-      classOf[SplitChunksArray])
+      classOf[ChunkTokens])
   }
 
   test("truncationJudged equals the batch-last form on sf0.01 documents") {

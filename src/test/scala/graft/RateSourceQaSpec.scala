@@ -57,5 +57,13 @@ class RateSourceQaSpec extends SparkSpec {
       .filter(col("best_score") =!= col("batch_best")).collect()
     assert(mismatched.isEmpty,
       s"scorer divergence: ${mismatched.take(3).mkString(", ")}")
+
+    // every per-document row as the stream computed it with regex tokens
+    // and its own copy of the hash-set score formula
+    val legacy = LegacyOracles.rateQaScores(docs, cfg.chunkSize, cfg.overlap,
+      cfg.question.split(" ").toSeq).collect().sortBy(_.getLong(0)).toSeq
+    val now = result.select("doc_id", "token_count", "n_chunks", "best_score")
+      .collect().sortBy(_.getLong(0)).toSeq
+    assert(now == legacy)
   }
 }

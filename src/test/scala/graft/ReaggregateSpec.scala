@@ -45,7 +45,7 @@ class ReaggregateSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val terms = docs.select(explode(
-      graft.functions.TextFunctions.regex_tokens(col("text"))).as("term"))
+      LegacyOracles.regexTokens(col("text"))).as("term"))
     val exact = terms.groupBy(col("term")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = exact.values.sum

@@ -214,7 +214,7 @@ class TokenizerSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
     val viaExplode = docs
       .select(col("doc_id"),
-        explode(TextFunctions.regex_tokens(col("text"))).as("term"))
+        explode(LegacyOracles.regexTokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").count()
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(viaKernel == viaExplode)
@@ -231,7 +231,7 @@ class TokenizerSpec extends SparkSpec {
         explode(TextFunctions.bigram_counts(col("text"))).as(Seq("term", "tf")))
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
     val viaExplode = docs
-      .select(col("doc_id"), TextFunctions.regex_tokens(col("text")).as("ts"))
+      .select(col("doc_id"), LegacyOracles.regexTokens(col("text")).as("ts"))
       .select(col("doc_id"), explode(expr(
         """transform(slice(ts, 1, greatest(size(ts) - 1, 0)),
           |  (t, i) -> concat(t, ' ', element_at(ts, i + 2)))"""

@@ -727,7 +727,7 @@ class TrainingDataSpec extends SparkSpec {
     assert(rows.nonEmpty)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("source"),
-        graft.functions.TextFunctions.regex_tokens(col("text")).as("ts"))
+        LegacyOracles.regexTokens(col("text")).as("ts"))
       .collect().map(r => (r.getString(0), r.getSeq[String](1)))
     rows.foreach { r =>
       val src = r.getAs[String]("source")
@@ -756,7 +756,7 @@ class TrainingDataSpec extends SparkSpec {
     // naive: full per-term counts from raw tokens
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"),
-        graft.functions.TextFunctions.regex_tokens(col("text")).as("ts"))
+        LegacyOracles.regexTokens(col("text")).as("ts"))
       .collect().map(r => (r.getLong(0), r.getSeq[String](1)))
     val counts = new scala.collection.mutable.HashMap[String, (Long, Long)]
     docs.foreach { case (id, ts) =>

@@ -22,7 +22,7 @@ class WinnowSpec extends SparkSpec {
     // the deque, tie rule, or hashing diverges here.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val naive = docs
-      .withColumn("toks", TextFunctions.regex_tokens(col("text")))
+      .withColumn("toks", LegacyOracles.regexTokens(col("text")))
       .withColumn("m", size(col("toks")) - K + 1)
       .withColumn("hs", transform(sequence(lit(1), greatest(col("m"), lit(0))),
         i => TextFunctions.hash64(array_join(slice(col("toks"), i, lit(K)), " "))))
