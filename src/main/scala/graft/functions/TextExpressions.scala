@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * expressions use eval (they produce rows/structs, outside hot arithmetic).
   *
   * Tokens come from one scanner ([[Tokenizer]]), never from a regex:
-  * `regex_tokens` ([[TokensOf]]) scans the UTF-8 bytes and returns what
+  * `regex_tokens` ([[TokensOf]]) runs [[Tokenizer.tokens]] and returns what
   * `regexp_extract_all(text, Tokenizer.DuckDbTokenRegex)` would, with its
   * type. The map step tokenizes each document once: [[ChunkTokens]] hands
   * every chunk its tokens, [[DistinctOverlap]] scores them without hash
@@ -112,25 +112,13 @@ object TextKernels {
     }
   }
 
-  /** The token strings of `t`, each a slice of one private copy of its
-    * bytes: a token never aliases the input's buffer, which a scan or an
+  /** The token strings of `t`, from [[Tokenizer.tokens]] over the
+    * decoded string (malformed UTF-8 decodes with replacement
+    * characters, as `regexp_extract_all` decodes it). Each token owns
+    * its bytes: none aliases the input's buffer, which a scan or an
     * `UnsafeRow` may reuse for the next row. */
-  private def tokenStrings(t: UTF8String): Array[UTF8String] = {
-    var bytes = new Array[Byte](t.numBytes)
-    t.writeToMemory(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
-    var offs = Tokenizer.tokenizeUtf8(bytes, bytes.length)
-    if (offs == null) { // malformed UTF-8: scan what the string decodes to
-      bytes = t.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      offs = Tokenizer.tokenizeUtf8(bytes, bytes.length)
-    }
-    val out = new Array[UTF8String](offs.length / 2)
-    var i = 0
-    while (i < out.length) {
-      out(i) = UTF8String.fromBytes(bytes, offs(2 * i), offs(2 * i + 1) - offs(2 * i))
-      i += 1
-    }
-    out
-  }
+  private def tokenStrings(t: UTF8String): Array[UTF8String] =
+    Tokenizer.tokens(t.toString).map(UTF8String.fromString)
 
   /** `tokens(text)`: the engine tokenizer's token strings. */
   def tokens(t: UTF8String): ArrayData =
@@ -237,15 +225,14 @@ object TextKernels {
   }
 
   /** `has_tokens(text)`: whether the engine tokenizer finds a token.
-    * Every code point other than ASCII whitespace starts one, and so does
-    * every byte of a malformed sequence (it decodes to U+FFFD), so this
-    * stops at the first byte that is not ASCII whitespace. */
+    * Every code point other than ASCII whitespace starts one, and every
+    * byte of a non-ASCII or malformed sequence is at least 0x80, so this
+    * stops at the first byte that is not [[Tokenizer]] whitespace. */
   def hasTokens(t: UTF8String): Boolean = {
     val n = t.numBytes
     var i = 0
     while (i < n) {
-      val c = t.getByte(i)
-      if (c != ' ' && (c < '\t' || c > '\r')) return true
+      if (!Tokenizer.isSpaceCp(t.getByte(i) & 0xFF)) return true
       i += 1
     }
     false
@@ -781,7 +768,7 @@ object TokensOf {
 }
 
 /** `tokens(text)` — the engine tokenizer's token strings, from the
-  * scanner ([[Tokenizer.tokenizeUtf8]] over the UTF-8 bytes). Equal to
+  * scanner ([[Tokenizer.tokens]]). Equal to
   * `regexp_extract_all(text, Tokenizer.DuckDbTokenRegex, 0)` on every
   * input, malformed UTF-8 included (property-tested), with that
   * expression's type, nullability and implicit cast to string. */
@@ -813,41 +800,17 @@ case class HasTokens(child: Expression)
 
 /** `distinct_overlap(a, q)` — `size(array_intersect(array_distinct(a),
   * q))` over string arrays, without the two hash sets
-  * ([[TextKernels.distinctOverlap]]). A null input gives what that
-  * expression gives: -1 under `spark.sql.legacy.sizeOfNull` (without
-  * ANSI), else null. */
-case class DistinctOverlap(left: Expression, right: Expression,
-    legacySizeOfNull: Boolean = org.apache.spark.sql.internal.SQLConf.get.legacySizeOfNull)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"distinct_overlap expects (array<string>, array<string>), got ($l, $r)")
-    }
+  * ([[TextKernels.distinctOverlap]]). Null if either array is null. */
+case class DistinctOverlap(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = !legacySizeOfNull && super.nullable
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val q = if (a == null) null else right.eval(input)
-    if (q == null) { if (legacySizeOfNull) -1 else null }
-    else TextKernels.distinctOverlap(a.asInstanceOf[ArrayData], q.asInstanceOf[ArrayData])
-  }
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(a: Any, q: Any): Any =
+    TextKernels.distinctOverlap(a.asInstanceOf[ArrayData], q.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (!legacySizeOfNull)
-      defineCodeGen(ctx, ev, (a, q) => s"graft.functions.TextKernels.distinctOverlap($a, $q)")
-    else {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val (a, q) = (left.genCode(ctx), right.genCode(ctx))
-      ev.copy(code = code"""
-        ${a.code}
-        ${q.code}
-        boolean ${ev.isNull} = false;
-        int ${ev.value} = (${a.isNull} || ${q.isNull}) ? -1 :
-          graft.functions.TextKernels.distinctOverlap(${a.value}, ${q.value});""",
-        isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-    }
+    defineCodeGen(ctx, ev, (a, q) => s"graft.functions.TextKernels.distinctOverlap($a, $q)")
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): DistinctOverlap = copy(l, r)
   override def prettyName: String = "distinct_overlap"

@@ -49,7 +49,7 @@ object Tokenizer {
     t == Character.DECIMAL_DIGIT_NUMBER || t == Character.LETTER_NUMBER ||
       t == Character.OTHER_NUMBER
   }
-  @inline private def isSpaceCp(cp: Int): Boolean =
+  @inline private[functions] def isSpaceCp(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B ||
       cp == '\f' || cp == '\r'
 
@@ -105,74 +105,6 @@ object Tokenizer {
       }
     }
     out.toArray
-  }
-
-  // ASCII classes for the UTF-8 scanner: 0 other, 1 letter, 2 digit,
-  // 3 whitespace — the same classes isLetterCp/isDigitCp/isSpaceCp give
-  private val AsciiClass: Array[Byte] = Array.tabulate[Byte](128) { c =>
-    if (isLetterCp(c)) 1 else if (isDigitCp(c)) 2 else if (isSpaceCp(c)) 3 else 0
-  }
-
-  /** Token [start, end) BYTE offsets into the UTF-8 bytes `b(0 until n)`,
-    * under the same rule as [[tokenize]], or null when the bytes are not
-    * well-formed UTF-8. Such input decodes with replacement characters
-    * (as Spark's string functions decode it), so a caller scans the
-    * decoded string's re-encoding instead. */
-  def tokenizeUtf8(b: Array[Byte], n: Int): Array[Int] = {
-    var out = new Array[Int](math.max(16, n / 2))
-    var m = 0
-    var run = 0      // class of the open letter (1) or digit (2) run; 0 none
-    var runStart = 0
-    var runCps = 0   // code points in the open run's current token
-    var i = 0
-    while (i < n) {
-      val b0 = b(i) & 0xFF
-      var cp = b0
-      var w = 1
-      if (b0 >= 0x80) {
-        // well-formed sequences only (Unicode Table 3-7): no overlongs,
-        // no surrogates, nothing above U+10FFFF
-        w = if (b0 < 0xC2) 0 else if (b0 < 0xE0) 2 else if (b0 < 0xF0) 3
-            else if (b0 < 0xF5) 4 else 0
-        if (w == 0 || i + w > n) return null
-        val b1 = b(i + 1) & 0xFF
-        val lo = if (b0 == 0xE0) 0xA0 else if (b0 == 0xF0) 0x90 else 0x80
-        val hi = if (b0 == 0xED) 0x9F else if (b0 == 0xF4) 0x8F else 0xBF
-        if (b1 < lo || b1 > hi) return null
-        cp = if (w == 2) b0 & 0x1F else if (w == 3) b0 & 0x0F else b0 & 0x07
-        cp = (cp << 6) | (b1 & 0x3F)
-        var k = 2
-        while (k < w) {
-          val bk = b(i + k) & 0xFF
-          if ((bk & 0xC0) != 0x80) return null
-          cp = (cp << 6) | (bk & 0x3F)
-          k += 1
-        }
-      }
-      val cls =
-        if (cp < 0x80) AsciiClass(cp).toInt
-        else if (isLetterCp(cp)) 1 else if (isDigitCp(cp)) 2 else 0
-      if (run != 0 && cls == run) {
-        if (runCps == (if (run == 1) MaxLetterRun else MaxDigitRun)) {
-          if (m + 2 > out.length) out = java.util.Arrays.copyOf(out, out.length * 2)
-          out(m) = runStart; out(m + 1) = i; m += 2
-          runStart = i; runCps = 0
-        }
-        runCps += 1
-      } else {
-        if (m + 4 > out.length) out = java.util.Arrays.copyOf(out, out.length * 2)
-        if (run != 0) { out(m) = runStart; out(m + 1) = i; m += 2 }
-        run = 0
-        if (cls == 1 || cls == 2) { run = cls; runStart = i; runCps = 1 }
-        else if (cls == 0) { out(m) = i; out(m + 1) = i + w; m += 2 }
-      }
-      i += w
-    }
-    if (run != 0) {
-      if (m + 2 > out.length) out = java.util.Arrays.copyOf(out, out.length + 2)
-      out(m) = runStart; out(m + 1) = n; m += 2
-    }
-    java.util.Arrays.copyOf(out, m)
   }
 
   /** Number of tokens in `s` — same single pass, no offsets buffer. */

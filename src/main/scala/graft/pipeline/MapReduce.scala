@@ -209,14 +209,11 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
   private def reduced(documents: DataFrame, carry: Seq[String],
       in: PlanInputs): DataFrame = {
     val carried = carry ++ in.keep
-    // the document tokenized once; each chunk scored from its tokens, and
-    // its content built only if it passes the threshold: no other chunk's
-    // content reaches the answer. (Passing the tokens on to a second
-    // transform instead would deep-copy them per chunk.)
+    // the document tokenized once; each chunk scored and its content
+    // built from its tokens, in one pass over the chunks
     val scored = transform(chunk_tokens(col("text"), in.chunkSize, in.overlap), c => {
       val (score, content) = mapChunk(c("tokens"), in)
-      struct(c("chunk_idx").as("chunk_idx"), score.as("score"),
-        when(score > in.threshold, content).as("content"))
+      struct(c("chunk_idx").as("chunk_idx"), score.as("score"), content.as("content"))
     })
     // single-value ordering key: best score first, then lowest chunk_idx
     // (chunk_idx < 1e6 by construction at sane chunk sizes)

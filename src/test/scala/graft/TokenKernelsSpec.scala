@@ -128,18 +128,13 @@ class TokenKernelsSpec extends SparkSpec {
       (Seq(null, "a"), Seq(null)), (Seq("a"), Seq(null))) ++
       sample(Gen.zip(arrays, arrays), 400)
     val t = ArrayType(StringType)
-    def legacy(a: Expression, q: Expression, l: Boolean) =
-      Size(ArrayIntersect(ArrayDistinct(a), q), l).eval()
-    for ((a, q) <- pairs; l <- Seq(true, false)) {
-      val (ea, eq) = (Literal.create(a, t), Literal.create(q, t))
-      assert(DistinctOverlap(ea, eq, l).eval() == legacy(ea, eq, l), (a, q))
-    }
-    // a null array, under both sizeOfNull settings
+    def legacy(a: Expression, q: Expression) =
+      Size(ArrayIntersect(ArrayDistinct(a), q), legacySizeOfNull = false).eval()
+    // and a null array, which gives null
     val nulls: Seq[(Seq[String], Seq[String])] = Seq((null, Seq("a")), (Seq("a"), null))
-    for (l <- Seq(true, false); (a, q) <- nulls) {
+    for ((a, q) <- pairs ++ nulls) {
       val (ea, eq) = (Literal.create(a, t), Literal.create(q, t))
-      assert(DistinctOverlap(ea, eq, l).eval() == legacy(ea, eq, l), (a, q, l))
-      assert(DistinctOverlap(ea, eq, l).nullable == Size(ArrayIntersect(ea, eq), l).nullable)
+      assert(DistinctOverlap(ea, eq).eval() == legacy(ea, eq), (a, q))
     }
     val df = spark.createDataFrame(pairs.zipWithIndex.map { case ((a, q), i) => (i.toLong, a, q) })
       .toDF("id", "a", "q").repartition(2)
