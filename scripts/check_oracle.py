@@ -96,10 +96,18 @@ def main(sf_dir, out_dir, only=()):
     # cost is dominated by a handful of generated-CTE oracles — measure,
     # don't guess which)
     times = {}
+    # entries graft.Verify recorded as failed: name -> "error: message"
+    try:
+        with open(f"{out_dir}/verify_status.json") as f:
+            failed = {e["name"]: f"{e['error']}: {e['message']}"
+                      for e in json.load(f)["failed"]}
+    except OSError:
+        failed = {}
     for name in names:
         files = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
         if not files:
-            print(f"MISSING {name}")
+            reason = f" ({failed[name]})" if name in failed else ""
+            print(f"MISSING {name}{reason}")
             n_fail += 1
             continue
         # read EVERY part file — a multi-part write must not silently

@@ -141,9 +141,10 @@ case class Engine(
 
   /** [[truncationJudgedAnswers]] + positional batching — the same
     * contract as MapReducePipeline.judged, built the same way: the raw
-    * (doc_id, text) rows are numbered first, so the range partitioner's
-    * sampling job reads only the scan, and truncation and scoring run
-    * once, above the range exchange. */
+    * (doc_id, text) rows are numbered first because the range
+    * partitioner's sampling job executes the exchange's child, so that
+    * job reads only the scan, and truncation and scoring run once, above
+    * the range exchange. */
   def truncationJudged(documents: DataFrame,
       contextWindow: Int = 128000, buffer: Int = 2000,
       strategy: String = "start"): DataFrame =

@@ -180,24 +180,10 @@ class QaService(spark: SparkSession, model: TextModel = ExtractiveModel) {
     timestamp = java.time.Instant.now().toString,
     version = "1.0")
 
-  // Idle cache maintenance: DfCache drains its deferred-release list on
-  // every lookup/insert, which covers active traffic — but a service
-  // whose tag set stabilizes and then goes idle gets no further cache
-  // calls, pinning evicted checkpoint blocks whose consumers are long
-  // GC'd. The sweeper is REFERENCE-COUNTED on the global store: every
-  // service instance sweeps the same cache, so one shared daemon timer
-  // serves them all — instances created without close() no longer
-  // accumulate redundant threads (DfCacheSpec pins idle-drain and the
-  // refcount).
-  graft.core.DfCache.acquireSweeper(30000L)
-  private var closed = false
-
-  /** Stops background maintenance (the daemon sweeper dies with the JVM
-    * anyway; explicit close keeps long-lived embedders tidy). Safe to
-    * call more than once. */
-  def close(): Unit = synchronized {
-    if (!closed) { closed = true; graft.core.DfCache.releaseSweeper() }
-  }
+  /** Releases nothing: the service holds no background resource (its
+    * templates are plain objects and it reads no shared cache). Kept so
+    * embedders and harnesses may close every service they open. */
+  def close(): Unit = ()
 }
 
 object QaService {

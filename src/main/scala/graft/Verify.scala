@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the DuckDB oracle compare, and
+  * verify_status.json, the entries that failed.
   *
   * Usage: sbt "runMain graft.Verify <sfDir> <outDir>"
   * Env: SPARK_GRAFT_CPUS (default: available processors),
@@ -10,31 +13,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = GraftSession()
-    new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names, same contract as
     // Bench); the driver leaves it unset and dumps everything.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-      }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    dump(spark, sfDir, outDir,
+      SparkEntry.queries.toSeq.filter { case (name, _) => only.forall(_.contains(name)) })
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -49,4 +32,44 @@ object Verify {
         .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
+
+  /** Writes each entry's result to `outDir/<name>` and the failures to
+    * `outDir/verify_status.json` (`{"failed": [{"name", "error",
+    * "message"}]}`, an empty list when every entry succeeded). Each
+    * entry's directory is removed before it runs, so a failed entry
+    * leaves no earlier run's result behind for the oracle compare.
+    * Returns the names of the failed entries. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      entries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val failed = entries.flatMap { case (name, fn) =>
+      val dir = Paths.get(outDir, name)
+      try {
+        if (Files.exists(dir)) graft.streaming.StreamingOps.rmTree(dir)
+        fn(spark, sfDir).coalesce(1).write.parquet(dir.toString)
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> e)
+      }
+    }
+    Files.writeString(Paths.get(outDir, "verify_status.json"), failed.map {
+      case (name, e) => s"""{"name": ${q(name)}, "error": ${q(e.getClass.getName)}, """ +
+        s""""message": ${q(String.valueOf(e.getMessage))}}"""
+    }.mkString("{\"failed\": [", ", ", "]}"))
+    failed.map(_._1)
+  }
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in builder-authored SQL would otherwise make the
+  // oracle gate's json.load fail and silently zero the round's correctness.
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * from the cached frame holds that plan node (Dataset ops wrap the
   * parent's analyzed plan), so the reference clears only when NO
   * consumer can still run the frame — then the sweep (piggybacked on
-  * every subsequent insert, or explicit via [[sweepReleases]])
+  * every subsequent lookup and insert, or explicit via [[sweepReleases]])
   * unpersists the blocks at the RDD layer. Until then the blocks stay
   * pinned: bounded by construction (one entry per eviction, swept on
   * every lookup AND insert — a service whose tag set stabilizes still
@@ -138,49 +138,6 @@ private[graft] class DfCacheStore(maxEntries: Int) {
     while (it.hasNext) { deferRelease(it.next().getValue); it.remove() }
     sweepLocked()
   }
-
-  /** Timer-driven idle sweep: lookup- and insert-piggybacked sweeps
-    * cover every ACTIVE workload, but a long-lived service whose tag
-    * set stabilizes AND then goes idle gets no further cache traffic —
-    * evicted blocks whose consumers have been GC'd would stay pinned
-    * until the next request. A daemon timer drains the deferred-release
-    * list on a fixed cadence regardless of traffic. Caller owns the
-    * returned timer (cancel() on shutdown); the task holds only this
-    * store. */
-  private[graft] def startSweeper(periodMs: Long): java.util.Timer = {
-    val t = new java.util.Timer("graft-dfcache-sweep", /*daemon*/ true)
-    t.schedule(new java.util.TimerTask {
-      override def run(): Unit = sweepReleases()
-    }, periodMs, periodMs)
-    t
-  }
-
-  // Reference-counted SHARED sweeper: every QaService instance sweeps
-  // the same global store, so per-instance timers are pure redundancy
-  // (instances created without close() would each leave a daemon
-  // thread behind). One timer serves all acquirers; the last release
-  // cancels it.
-  private[this] var sharedSweeper: java.util.Timer = null
-  private[this] var sweeperRefs = 0
-
-  /** Acquires the shared idle sweeper (starting it on first acquire);
-    * pair with [[releaseSweeper]]. The period is fixed by the first
-    * acquirer until refs drain to zero. */
-  private[graft] def acquireSweeper(periodMs: Long): Unit = synchronized {
-    if (sweeperRefs == 0) sharedSweeper = startSweeper(periodMs)
-    sweeperRefs += 1
-  }
-
-  /** Releases one reference on the shared sweeper, cancelling the timer
-    * when the last reference drains. Extra releases are no-ops. */
-  private[graft] def releaseSweeper(): Unit = synchronized {
-    if (sweeperRefs > 0) {
-      sweeperRefs -= 1
-      if (sweeperRefs == 0) { sharedSweeper.cancel(); sharedSweeper = null }
-    }
-  }
-
-  private[graft] def sweeperRefCount: Int = synchronized(sweeperRefs)
 
   private[graft] def pendingReleaseCount: Int =
     cache.synchronized(pending.length)

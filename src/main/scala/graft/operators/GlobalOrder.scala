@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.DistributedSequenceID
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Scale-safe dense global row numbering.
   *
@@ -11,37 +13,35 @@ import org.apache.spark.sql.types.LongType
   * positional-batch semantics (async_evaluation.py:389-404) genuinely need a
   * total order, but not a single-task sort: range-partition on the key, sort
   * within partitions, then add per-partition cumulative offsets to local
-  * positions. `RDD.zipWithIndex` is exactly that second half — its count job
-  * and its main job share the range shuffle's map output, so the data is
-  * shuffled once and no task ever holds more than one partition.
+  * positions. Spark's own distributed-sequence operator is exactly that
+  * second half: `DistributedSequenceID` becomes the logical
+  * `AttachDistributedSequence`, planned as `AttachDistributedSequenceExec`
+  * (counts each partition of its child, then adds the offsets to the
+  * positions inside each partition). The numbering stays inside
+  * Catalyst, so building the frame runs no job, columns the caller never
+  * reads are pruned below it, and filters stay above it.
   *
-  * Cost: `repartitionByRange` first runs a sampling job over `df`, and
-  * when `df` has no shuffle of its own that job recomputes all of it from
-  * the scan, then the shuffle's map stage computes it again. Number rows
-  * before expensive projections, not after (`MapReducePipeline.judged`
+  * Cost: `repartitionByRange` runs a sampling job over `df` in the action,
+  * and when `df` has no shuffle of its own that job recomputes all of it
+  * from the scan, then the shuffle's map stage computes it again. Number
+  * rows before expensive projections, not after (`MapReducePipeline.judged`
   * and `Engine.truncationJudged` number raw documents and score them
-  * above the exchange).
+  * above the exchange). The exec persists its sorted child (Spark's
+  * default, `MEMORY_AND_DISK_SER`) for the count pass and releases it
+  * when the action ends. Each reference to the numbered frame in one
+  * plan (a self-join) plans its own range exchange and numbering.
   */
 object GlobalOrder {
 
   /** Append a dense 1-based global row number over `order` as column `out`
-    * (LongType). Equivalent to `row_number().over(Window.orderBy(order))`
-    * when the order key is unique; ties are broken by intra-partition
-    * position, which is deterministic for a fixed partitioning.
-    *
-    * @param partitions range-partition count; defaults to the session's
-    *                   shuffle-partition setting
-    */
-  def withRowNumber(df: DataFrame, order: Column, out: String = "rn",
-      partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val n = if (partitions > 0) partitions
-            else spark.sessionState.conf.numShufflePartitions
+    * (LongType, not nullable). Equivalent to
+    * `row_number().over(Window.orderBy(order))` when the order key is
+    * unique; ties are broken by intra-partition position, which is
+    * deterministic for a fixed partitioning (the session's shuffle
+    * partitions). */
+  def withRowNumber(df: DataFrame, order: Column, out: String = "rn"): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
     val ranged = df.repartitionByRange(n, order).sortWithinPartitions(order)
-    val schema = ranged.schema.add(out, LongType, nullable = false)
-    val indexed = ranged.rdd.zipWithIndex().map { case (row, i) =>
-      Row.fromSeq(row.toSeq :+ (i + 1L))
-    }
-    spark.createDataFrame(indexed, schema)
+    ranged.select(col("*"), (Bridge.column(DistributedSequenceID()) + 1L).as(out))
   }
 }

@@ -156,8 +156,9 @@ object MapReducePipeline {
   /** O5 positional judge batching (async_evaluation.py:260, :389-404):
     * global position over `order` -> batches of `size`, 1-based item
     * numbers. Shared by the map-reduce and truncation judge paths. Uses
-    * [[graft.operators.GlobalOrder]] (range partition + local numbering),
-    * not a bare `Window.orderBy`, so no single task sees all rows. */
+    * [[graft.operators.GlobalOrder]] (range partition + Spark's
+    * distributed sequence), not a bare `Window.orderBy`, so no single
+    * task sees all rows; building the frame runs no job. */
   def positionalBatches(df: DataFrame, order: Column, size: Int = 5): DataFrame =
     graft.operators.GlobalOrder.withRowNumber(df, order)
       .withColumn("batch_id", floor((col("rn") - 1) / size).cast("long"))
@@ -303,9 +304,10 @@ class MapReducePipeline(cfg: MapReduceConfig, model: TextModel = ExtractiveModel
   /** Judge stage (O5 positional batching + P7 normalization): batches of
     * 5 docs by doc_id order, columns of [[judgedAnswers]] then
     * `batch_id`, `item_number`. The documents are numbered BEFORE they
-    * are scored: the range partitioner's sampling job then recomputes
-    * only the scan and the token-count filter, and the scoring runs once,
-    * above the range exchange, spread over its partitions. */
+    * are scored because the range partitioner's sampling job executes
+    * the exchange's child: numbered raw, that job recomputes only the
+    * scan and the token-count filter, and the scoring runs once, above
+    * the range exchange, spread over its partitions. */
   def judged(documents: DataFrame): DataFrame = {
     val carry = Seq("batch_id", "item_number")
     val numbered = MapReducePipeline.positionalBatches(

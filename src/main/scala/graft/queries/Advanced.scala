@@ -849,7 +849,10 @@ object Advanced extends graft.QueryModule {
         col("name").as("name_a"), col("bal").as("bal_a"),
         explode(sequence(lit(1), lit(SnmWindow))).as("d"))
       .withColumn("rn_b", col("rn") + col("d"))
-      .join(right, Seq("seg", "rn_b"))
+      // pinned shuffled-hash, `right` the build side: the exploded side
+      // is SnmWindow × |customer| rows on a pre-explode size estimate,
+      // so it must never be a broadcast build
+      .join(right.hint("shuffle_hash"), Seq("seg", "rn_b"))
       .select(col("seg"), col("key_a"), col("key_b"),
         (col("bal_b") - col("bal_a")).as("bal_gap"),
         round(tf.jaro_winkler(col("name_a"), col("name_b")), 6).as("jw"))

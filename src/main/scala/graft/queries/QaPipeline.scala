@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.TextFunctions._
 import graft.functions.Tokenizer
-import graft.pipeline.{MapReduceConfig, MapReducePipeline}
+import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, PlanInputs}
 
 /** The reference's end-to-end QA dataflow as driver-checkable queries
   * (SURVEY.md §2.5 map/reduce, §2.6 truncation, §2.7 stats, §2.8 batching).
@@ -85,19 +85,16 @@ object QaPipeline extends graft.QueryModule {
   }
 
   /** M9/T1/T4: truncation pipeline — single-call path, per doc. */
-  def truncation(spark: SparkSession, dir: String): DataFrame = {
-    val qtoks = array(Tokenizer.tokens(cfg.question).distinct.map(lit).toIndexedSeq: _*)
+  def truncation(spark: SparkSession, dir: String): DataFrame =
     Tables.loadSpread(spark, dir, "documents")
       .withColumn("t", truncate_tokens(col("text"), lit(TruncMax), lit("start")))
-      .withColumn("ttoks",
-        graft.functions.TextFunctions.regex_tokens(col("t.text")))
+      .withColumn("ttoks", regex_tokens(col("t.text")))
       .select(col("doc_id"),
         col("t.original_tokens").as("original_tokens"),
         col("t.truncated_tokens").as("truncated_tokens"),
         col("t.truncation_applied").as("truncation_applied"),
-        least(lit(10), size(array_intersect(array_distinct(col("ttoks")), qtoks)))
+        ExtractiveModel.score(col("ttoks"), PlanInputs.literals(cfg).questionTokens)
           .as("score"))
-  }
 
   /** A8: corpus-level truncation summary — one row. */
   def truncationSummary(spark: SparkSession, dir: String): DataFrame = {

@@ -339,10 +339,8 @@ object Relational extends graft.QueryModule {
     * partition + local offsets), not a single-partition window sort. */
   def judgeBatches(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // prune before numbering: the RDD boundary inside GlobalOrder blocks
-    // Catalyst column pruning, so only ship what the batching needs
     graft.operators.GlobalOrder.withRowNumber(
-        Tables.load(spark, dir, "events").select($"event_id"), $"event_id")
+        Tables.load(spark, dir, "events"), $"event_id")
       .withColumn("batch_id", floor(($"rn" - 1) / 5).cast("long"))
       .groupBy($"batch_id")
       .agg(count(lit(1)).as("batch_size"),

@@ -748,8 +748,8 @@ object SimilarityQueries extends graft.QueryModule {
     * sorting n/k rows — a by-construction scale-killer. Instead the rank
     * is a GLOBAL dense row number over (cluster, dist, vec_id) via
     * [[graft.operators.GlobalOrder.withRowNumber]] (range-partitioned
-    * sort + zipWithIndex — every task numbers one range, none holds a
-    * whole cluster), rebased per cluster by a k-row bounds aggregate
+    * sort + distributed sequence — every task numbers one range, none
+    * holds a whole cluster), rebased per cluster by a k-row bounds aggregate
     * joined back by broadcast. Same rows, full shuffle parallelism. */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
     val ordered = graft.operators.GlobalOrder.withRowNumber(

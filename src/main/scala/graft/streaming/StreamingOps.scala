@@ -142,7 +142,7 @@ object StreamingOps {
 
   /** Recursive delete with the walk stream CLOSED (Files.walk holds a
     * directory handle; an unclosed stream leaks one per call). */
-  private def rmTree(root: java.nio.file.Path): Unit = {
+  private[graft] def rmTree(root: java.nio.file.Path): Unit = {
     val walk = java.nio.file.Files.walk(root)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => java.nio.file.Files.deleteIfExists(p))

@@ -119,30 +119,4 @@ class DfCacheSpec extends SparkSpec {
     assert(builds == 2)
     assert(back.count() == 5)
   }
-
-  test("timer sweeper drains releases on an IDLE store — no cache traffic at all") {
-    // the QaService scenario: tag set stabilized, consumers GC'd, then
-    // zero further lookups/inserts — only the daemon timer can release
-    val store = new DfCacheStore(1)
-    var a: org.apache.spark.sql.DataFrame = store.cached(spark, "/d", "a")(frame(1))
-    val aRdds = store.checkpointRdds(a)
-    store.cached(spark, "/d", "b")(frame(2)) // evicts a (still held)
-    assert(store.pendingReleaseCount == 1)
-    val canary = new java.lang.ref.WeakReference(new Object)
-    a = null
-    val sweeper = store.startSweeper(25L)
-    try {
-      var tries = 0
-      while (store.pendingReleaseCount > 0 && tries < 60) {
-        System.gc(); Thread.sleep(50); tries += 1 // NO store calls here
-      }
-      if (store.pendingReleaseCount > 0 && canary.get() != null)
-        cancel("JVM did not process weak references within the retry window")
-      assert(store.pendingReleaseCount == 0,
-        "idle timer sweep must drain the deferred-release list")
-      val after = spark.sparkContext.getPersistentRDDs
-      assert(aRdds.forall(r => !after.contains(r.id)),
-        "blocks must be gone without any further cache traffic")
-    } finally sweeper.cancel()
-  }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.Tokenizer
 import graft.functions.TextFunctions.split_chunks
@@ -15,7 +16,8 @@ import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, Plan
   * [[LegacyMapReduce]] for the row-local map-reduce answers and
   * [[truncationJudged]] for the raw-rows-first truncation batching
   * (MapReduceParitySpec), [[LegacyQaAsk]] for the prepared service ask
-  * (ServiceSpec). The QA oracles tokenize with the regex
+  * (ServiceSpec), [[globalOrder]] for the distributed-sequence numbering
+  * (GlobalOrderSpec). The QA oracles tokenize with the regex
   * ([[regexTokens]]) and score with [[LegacyExtractiveModel]], so the
   * scanner kernels they check are not their own reference. Not on any
   * query path. */
@@ -27,6 +29,32 @@ object LegacyOracles {
     * tokenization the term/bigram/winnow/sketch specs count with. */
   def regexTokens(c: Column): Column =
     regexp_extract_all(c, lit(Tokenizer.DuckDbTokenRegex), lit(0))
+
+  /** `GlobalOrder.withRowNumber` as it numbered rows outside Catalyst:
+    * the range-partitioned, sorted frame converted to an RDD of external
+    * `Row`s, `zipWithIndex`, and `createDataFrame` back — its count job
+    * runs when the frame is built. */
+  def globalOrder(df: DataFrame, order: Column, out: String = "rn",
+      partitions: Int = 0): DataFrame = {
+    val spark = df.sparkSession
+    val n = if (partitions > 0) partitions
+            else spark.sessionState.conf.numShufflePartitions
+    val ranged = df.repartitionByRange(n, order).sortWithinPartitions(order)
+    val schema = ranged.schema.add(out, LongType, nullable = false)
+    val indexed = ranged.rdd.zipWithIndex().map { case (row, i) =>
+      Row.fromSeq(row.toSeq :+ (i + 1L))
+    }
+    spark.createDataFrame(indexed, schema)
+  }
+
+  /** `MapReducePipeline.positionalBatches` over [[globalOrder]], so the
+    * judged oracles do not number with the operator they are checked
+    * against. */
+  def positionalBatches(df: DataFrame, order: Column, size: Int = 5): DataFrame =
+    globalOrder(df, order)
+      .withColumn("batch_id", floor((col("rn") - 1) / size).cast("long"))
+      .withColumn("item_number", ((col("rn") - 1) % size + 1).cast("int"))
+      .drop("rn")
 
   /** `Engine.truncationJudgedAnswers` over literal inputs as it scored
     * the truncated text: regex tokens and, for the extractive model, the
@@ -68,7 +96,7 @@ object LegacyOracles {
     * (positional batching over the truncated, scored rows). */
   private[graft] def truncationJudged(engine: Engine, documents: DataFrame,
       budget: Column, strategy: TruncationStrategy): DataFrame =
-    MapReducePipeline.positionalBatches(
+    positionalBatches(
       truncationJudgedAnswers(engine, documents, budget, strategy), col("doc_id"))
 
   /** `StreamingOps.rateThrottledQa`'s per-document columns as it computed
@@ -216,7 +244,7 @@ private[graft] class LegacyMapReduce(cfg: MapReduceConfig,
         col("chunks_after")))
 
   def judged(documents: DataFrame): DataFrame =
-    MapReducePipeline.positionalBatches(judgedAnswers(documents), col("doc_id"))
+    LegacyOracles.positionalBatches(judgedAnswers(documents), col("doc_id"))
 }
 
 /** `QaService.ask` over a Dataset, as it ran before prepared templates:

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.ShuffleDependency
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.execution.{ProjectExec, RDDScanExec}
+import org.apache.spark.sql.execution.ProjectExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.python.AttachDistributedSequenceExec
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ChunkTokens, TruncateTokens}
@@ -116,25 +115,23 @@ class MapReduceParitySpec extends SparkSpec {
     assert(plan.collect { case a: BaseAggregateExec => a }.isEmpty, plan.treeString)
   }
 
-  private def shuffles(r: RDD[_]): Int = r.dependencies.map {
-    case s: ShuffleDependency[_, _, _] => 1 + shuffles(s.rdd)
-    case d => shuffles(d.rdd)
-  }.sum
-
-  /** The plan numbers the raw rows (one shuffle, inside the RDD scan)
-    * and computes `scoredBy` once, in a Project right above that scan. */
+  /** The plan numbers the raw rows (one shuffle, the range exchange
+    * below the distributed sequence) and computes `scoredBy` once, in a
+    * Project above that numbering. */
   private def assertRawRowsNumbered(df: DataFrame, scoredBy: Class[_]): Unit = {
     val plan = df.queryExecution.sparkPlan
-    assert(plan.collect { case s: ShuffleExchangeLike => s }.isEmpty, plan.treeString)
     val scoring = plan.collect {
       case p: ProjectExec if p.projectList.exists(_.exists(e => scoredBy.isInstance(e))) => p
     }
     assert(scoring.length == 1, plan.treeString)
-    val scans = scoring.head.collect { case s: RDDScanExec => s }
-    assert(scans.length == 1, plan.treeString)
+    val numbering = scoring.head.collect { case s: AttachDistributedSequenceExec => s }
+    assert(numbering.length == 1, plan.treeString)
     // only the raw rows and their number cross the range exchange
-    assert(scans.head.output.map(_.name) == Seq("doc_id", "text", "rn"), plan.treeString)
-    assert(shuffles(scans.head.rdd) == 1, scans.head.rdd.toDebugString)
+    assert(numbering.head.child.output.map(_.name) == Seq("doc_id", "text"), plan.treeString)
+    val exchanges = plan.collect { case s: ShuffleExchangeLike => s }
+    assert(exchanges.length == 1, plan.treeString)
+    assert(numbering.head.collect { case s: ShuffleExchangeLike => s } == exchanges,
+      plan.treeString)
   }
 
   test("judged shuffles once, to number raw rows, and scores above that exchange") {
