@@ -66,8 +66,8 @@ object GraftSession {
       }.toMap
 
   /** A `local[cpus]` session with `cpus` shuffle partitions, [[confs]],
-    * the extra confs and the preferred local dir; logs at WARN with the
-    * `[graft-metrics]` observers registered. */
+    * the extra confs and the preferred local dir; logs as [[setLogLevels]]
+    * says, with the `[graft-metrics]` observers registered. */
   def apply(cpus: Int = defaultCpus): SparkSession = {
     // Shuffle/spill temp under fast storage (graft.core.LocalDirs): the
     // per-map-task shuffle-file I/O on the ext4 root measured as HALF
@@ -79,9 +79,19 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config(confs ++ extraConfs)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    setLogLevels(spark)
     core.Metrics.register(spark)
     spark
+  }
+
+  /** WARN, but ERROR for Spark's distributed-sequence operator (every
+    * [[graft.operators.GlobalOrder]] frame), which warns each time it
+    * releases the child it persisted for its count pass. */
+  def setLogLevels(spark: SparkSession): Unit = {
+    spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.python.AttachDistributedSequenceExec",
+      org.apache.logging.log4j.Level.ERROR)
   }
 
   /** Cold-cache reset between measured runs: every JVM memo shared

@@ -127,8 +127,8 @@ class QaService(spark: SparkSession, model: TextModel = ExtractiveModel) {
     Prompts.resolve(Some(promptSet)) // fail fast on unknown set, like the factory
     val template = templateFor(format,
       if (truncation) Some(TruncationStrategies.get(strategy)) else None)
-    val questionTokens: Array[Any] =
-      Tokenizer.tokens(question).distinct.map(UTF8String.fromString)
+    val q = Tokenizer.of(question)
+    val questionTokens = q.slice(0, q.length).distinct
     template.answer(InternalRow(0L, UTF8String.fromString(text),
       new GenericArrayData(questionTokens), chunkSize, overlap, threshold,
       Engine.truncationBudget(question, contextWindow, buffer)), promptSet)

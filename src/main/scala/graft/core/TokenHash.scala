@@ -17,22 +17,22 @@ object TokenHash {
   val SeedHi: Int = 0x9747b28c
   val SeedLo: Int = 0x85ebca6b
 
-  /** Standard murmur3_x86_32 over `bytes[0, len)`. */
-  def murmur3(bytes: Array[Byte], len: Int, seed: Int): Int = {
+  /** Standard murmur3_x86_32 over `bytes[from, from + len)`. */
+  def murmur3(bytes: Array[Byte], from: Int, len: Int, seed: Int): Int = {
     val c1 = 0xcc9e2d51
     val c2 = 0x1b873593
     var h = seed
     val nblocks = len >>> 2
     var i = 0
     while (i < nblocks) {
-      val p = i << 2
+      val p = from + (i << 2)
       var k = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8) |
         ((bytes(p + 2) & 0xff) << 16) | ((bytes(p + 3) & 0xff) << 24)
       k *= c1; k = Integer.rotateLeft(k, 15); k *= c2
       h ^= k; h = Integer.rotateLeft(h, 13); h = h * 5 + 0xe6546b64
       i += 1
     }
-    val tail = nblocks << 2
+    val tail = from + (nblocks << 2)
     var k1 = 0
     val rem = len & 3
     if (rem >= 3) k1 ^= (bytes(tail + 2) & 0xff) << 16
@@ -50,9 +50,9 @@ object TokenHash {
   }
 
   /** The 64-bit token hash: two murmur3 mixes packed (hi << 32) | lo. */
-  def hash64(bytes: Array[Byte], len: Int): Long =
-    (murmur3(bytes, len, SeedHi).toLong << 32) |
-      (murmur3(bytes, len, SeedLo).toLong & 0xffffffffL)
+  def hash64(bytes: Array[Byte], from: Int, len: Int): Long =
+    (murmur3(bytes, from, len, SeedHi).toLong << 32) |
+      (murmur3(bytes, from, len, SeedLo).toLong & 0xffffffffL)
 
   // ---- DuckDB replay (generated SQL; all 32-bit ops as masked UBIGINT) ----
 

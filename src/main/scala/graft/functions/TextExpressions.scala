@@ -13,13 +13,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * static call inside whole-stage codegen; the generator and struct
   * expressions use eval (they produce rows/structs, outside hot arithmetic).
   *
-  * Tokens come from one scanner ([[Tokenizer]]), never from a regex:
-  * `regex_tokens` ([[TokensOf]]) runs [[Tokenizer.tokens]] and returns what
+  * Tokens come from one scanner over UTF-8 bytes ([[Tokenizer.of]]),
+  * never from a regex or a decoded `String`: each kernel copies its
+  * input's bytes once and every token, chunk text or kept window is a
+  * view of that copy. `regex_tokens` ([[TokensOf]]) returns what
   * `regexp_extract_all(text, Tokenizer.DuckDbTokenRegex)` would, with its
   * type. The map step tokenizes each document once: [[ChunkTokens]] hands
   * every chunk its tokens, [[DistinctOverlap]] scores them without hash
   * sets, [[HasTokens]] stops at the first token and [[XmlEscape]] escapes
-  * in one pass. The regex itself lives on only in the DuckDB oracle SQL.
+  * in one pass; [[TruncateTokens]] can hand over its kept tokens with its
+  * stats. The regex itself lives on only in the DuckDB oracle SQL.
   */
 
 /** `count_tokens(text)` — token count under the engine tokenizer.
@@ -30,9 +33,9 @@ case class CountTokens(child: Expression)
   override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] = Seq(StringType)
   override def dataType: DataType = IntegerType
   override def nullSafeEval(v: Any): Any =
-    Tokenizer.countTokens(v.asInstanceOf[UTF8String].toString)
+    Tokenizer.countTokens(v.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Tokenizer.countTokens($c.toString())")
+    defineCodeGen(ctx, ev, c => s"graft.functions.Tokenizer.countTokens($c)")
   override protected def withNewChildInternal(c: Expression): CountTokens = copy(c)
   override def prettyName: String = "count_tokens"
 }
@@ -44,12 +47,12 @@ case class EstimateTokens(child: Expression)
   override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] = Seq(StringType)
   override def dataType: DataType = IntegerType
   override def nullSafeEval(v: Any): Any = {
-    val n = Tokenizer.countTokens(v.asInstanceOf[UTF8String].toString)
+    val n = Tokenizer.countTokens(v.asInstanceOf[UTF8String])
     math.ceil(n * 1.15).toInt
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"(int) java.lang.Math.ceil(graft.functions.Tokenizer.countTokens($c.toString()) * 1.15)")
+      s"(int) java.lang.Math.ceil(graft.functions.Tokenizer.countTokens($c) * 1.15)")
   override protected def withNewChildInternal(c: Expression): EstimateTokens = copy(c)
   override def prettyName: String = "estimate_tokens"
 }
@@ -90,6 +93,10 @@ object TruncateTokens {
     StructField("retention_rate", DoubleType, nullable = false),
     StructField("truncation_applied", BooleanType, nullable = false),
     StructField("strategy", StringType, nullable = false)))
+  /** [[schema]] and the kept tokens (`tokens`, as [[TokensOf]] types
+    * them): the truncation window the QA path scores. */
+  val windowSchema: StructType =
+    schema.add(StructField("tokens", TokensOf.dataType, nullable = false))
 }
 
 /** Static kernels shared by interpreted eval and generated code — a
@@ -102,41 +109,33 @@ object TextKernels {
     * chunk, where chunk_text is the source substring spanning the chunk's
     * tokens. */
   def splitChunks(t: UTF8String, size: Int, overlap: Int): Array[InternalRow] = {
-    val s = t.toString
-    val offs = Tokenizer.tokenize(s)
-    Tokenizer.chunkSpans(offs.length / 2, size, overlap).zipWithIndex.map {
+    val k = Tokenizer.of(t)
+    Tokenizer.chunkSpans(k.length, size, overlap).zipWithIndex.map {
       case ((a, b), idx) =>
-        val chunk = s.substring(offs(2 * a), offs(2 * (b - 1) + 1))
-        new GenericInternalRow(Array[Any](
-          idx, UTF8String.fromString(chunk), b - a)): InternalRow
+        new GenericInternalRow(Array[Any](idx, k.span(a, b), b - a)): InternalRow
     }
   }
 
-  /** The token strings of `t`, from [[Tokenizer.tokens]] over the
-    * decoded string (malformed UTF-8 decodes with replacement
-    * characters, as `regexp_extract_all` decodes it). Each token owns
-    * its bytes: none aliases the input's buffer, which a scan or an
-    * `UnsafeRow` may reuse for the next row. */
-  private def tokenStrings(t: UTF8String): Array[UTF8String] =
-    Tokenizer.tokens(t.toString).map(UTF8String.fromString)
-
-  /** `tokens(text)`: the engine tokenizer's token strings. */
-  def tokens(t: UTF8String): ArrayData =
-    new GenericArrayData(tokenStrings(t).asInstanceOf[Array[Any]])
+  /** `tokens(text)`: the engine tokenizer's token strings. Every token
+    * is a view of the tokenizer's copy of the text, never of the input's
+    * buffer, which a scan or an `UnsafeRow` may reuse for the next row. */
+  def tokens(t: UTF8String): ArrayData = {
+    val k = Tokenizer.of(t)
+    new GenericArrayData(k.slice(0, k.length))
+  }
 
   /** `chunk_tokens(text, size, overlap)`: one (chunk_idx, tokens) row per
     * [[Tokenizer.chunkSpans]] window. The document is tokenized once and
     * overlapping chunks share their token strings. */
   def chunkTokens(t: UTF8String, size: Int, overlap: Int): ArrayData = {
-    val toks = tokenStrings(t)
+    val k = Tokenizer.of(t)
+    val toks = k.slice(0, k.length)
     val spans = Tokenizer.chunkSpans(toks.length, size, overlap)
     val out = new Array[Any](spans.length)
     var idx = 0
     while (idx < spans.length) {
       val (a, b) = spans(idx)
-      val slice = new Array[Any](b - a)
-      System.arraycopy(toks, a, slice, 0, b - a)
-      out(idx) = new GenericInternalRow(Array[Any](idx, new GenericArrayData(slice)))
+      out(idx) = new GenericInternalRow(Array[Any](idx, new GenericArrayData(toks.slice(a, b))))
       idx += 1
     }
     new GenericArrayData(out)
@@ -160,9 +159,10 @@ object TextKernels {
     var qNull = false
     var j = 0
     while (j < nq) {
-      if (q.isNullAt(j)) qNull = true
+      // one read per element: both array kinds return null for a null one
+      val t = q.getUTF8String(j)
+      if (t == null) qNull = true
       else {
-        val t = q.getUTF8String(j)
         val p = prefix8(t)
         var h = slot(p, t.numBytes, mask)
         while (slots(h) >= 0 && qs(slots(h)) != t) h = (h + 1) & mask
@@ -179,10 +179,10 @@ object TextKernels {
     val na = a.numElements
     var i = 0
     while (i < na && count < want) {
-      if (a.isNullAt(i)) {
+      val s = a.getUTF8String(i)
+      if (s == null) {
         if (qNull && !nullFound) { nullFound = true; count += 1 }
       } else {
-        val s = a.getUTF8String(i)
         val n = s.numBytes
         val p = prefix8(s)
         var h = slot(p, n, mask)
@@ -279,13 +279,29 @@ object TextKernels {
   private val XmlQuot = "&quot;".getBytes
   private val XmlApos = "&apos;".getBytes
 
-  def truncateTokens(t: UTF8String, max: Int, mode: UTF8String): InternalRow = {
+  /** `truncate_tokens(text, max, mode)`: at most `max` tokens of `t`,
+    * the first ones (mode start or smart) or the last ones (end). A text
+    * of at most `max` tokens comes back whole, as its bytes; a cut one as
+    * the source from its first kept token to its last.
+    * `withTokens` appends the kept tokens (the `TruncateTokens.windowSchema`
+    * struct), from the same one scan. */
+  def truncateTokens(t: UTF8String, max: Int, mode: UTF8String,
+      withTokens: Boolean = false): InternalRow = {
     val strategy = mode.toString
-    val (out, orig, kept) = Tokenizer.truncate(t.toString, max, strategy)
-    val rate = if (orig > 0) kept.toDouble / orig else 1.0
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(out), orig, kept, rate,
-      java.lang.Boolean.valueOf(kept < orig), UTF8String.fromString(strategy)))
+    val k = Tokenizer.of(t)
+    val n = k.length
+    val whole = n <= max
+    val kept = if (whole) n else math.max(0, max)
+    val first = if (!whole && strategy == "end") n - kept else 0
+    val text = if (whole) k.text
+      else if (kept == 0) UTF8String.EMPTY_UTF8
+      else k.span(first, first + kept)
+    val rate = if (n > 0) kept.toDouble / n else 1.0
+    val stats = Array[Any](text, n, kept, rate,
+      java.lang.Boolean.valueOf(kept < n), UTF8String.fromString(strategy))
+    new GenericInternalRow(
+      if (withTokens) stats :+ new GenericArrayData(k.slice(first, first + kept))
+      else stats)
   }
 
   /** Per-row term frequencies: tokenize (engine tokenizer) and count in
@@ -293,49 +309,32 @@ object TextKernels {
     * of TF-IDF map-side — the shuffle then carries one row per DISTINCT
     * (doc, term), not one per token occurrence. */
   def termCounts(t: UTF8String): org.apache.spark.sql.catalyst.util.MapData = {
-    val s = t.toString
-    val offs = Tokenizer.tokenize(s)
-    val n = offs.length / 2
-    val counts = new java.util.LinkedHashMap[String, Long](math.max(16, n))
-    var i = 0
-    while (i < n) {
-      counts.merge(s.substring(offs(2 * i), offs(2 * i + 1)), 1L, _ + _)
-      i += 1
-    }
-    val ks = new Array[Any](counts.size)
-    val vs = new Array[Any](counts.size)
-    val it = counts.entrySet().iterator()
-    var x = 0
-    while (it.hasNext) {
-      val e = it.next()
-      ks(x) = UTF8String.fromString(e.getKey); vs(x) = e.getValue; x += 1
-    }
-    new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-      new GenericArrayData(ks), new GenericArrayData(vs))
+    val k = Tokenizer.of(t)
+    countMap(k.length, k(_))
   }
 
   /** Adjacent-token-pair counts (bigram tf), one pass — the map-side
     * kernel for the bigram sparse-retrieval feature family; equal to
     * exploding `concat(tok_i, ' ', tok_i+1)` + groupBy count. */
   def bigramCounts(t: UTF8String): org.apache.spark.sql.catalyst.util.MapData = {
-    val s = t.toString
-    val offs = Tokenizer.tokenize(s)
-    val n = offs.length / 2
-    val counts = new java.util.LinkedHashMap[String, Long](math.max(16, n))
+    val k = Tokenizer.of(t)
+    countMap(k.length - 1, i => k.joined(i, i + 2))
+  }
+
+  /** map<string, long> of how often each of `key(0 until n)` occurs, in
+    * first-occurrence order. */
+  private def countMap(n: Int, key: Int => UTF8String)
+      : org.apache.spark.sql.catalyst.util.MapData = {
+    val counts = new java.util.LinkedHashMap[UTF8String, Long](math.max(16, n))
     var i = 0
-    while (i < n - 1) {
-      val big = s.substring(offs(2 * i), offs(2 * i + 1)) + " " +
-        s.substring(offs(2 * i + 2), offs(2 * i + 3))
-      counts.merge(big, 1L, _ + _)
-      i += 1
-    }
+    while (i < n) { counts.merge(key(i), 1L, _ + _); i += 1 }
     val ks = new Array[Any](counts.size)
     val vs = new Array[Any](counts.size)
     val it = counts.entrySet().iterator()
     var x = 0
     while (it.hasNext) {
       val e = it.next()
-      ks(x) = UTF8String.fromString(e.getKey); vs(x) = e.getValue; x += 1
+      ks(x) = e.getKey; vs(x) = e.getValue; x += 1
     }
     new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
       new GenericArrayData(ks), new GenericArrayData(vs))
@@ -480,30 +479,14 @@ object TextKernels {
   }
 
   def shingles(t: UTF8String, kv: Int): ArrayData = {
-    val s = t.toString
-    val offs = Tokenizer.tokenize(s)
-    val n = offs.length / 2
+    val k = Tokenizer.of(t)
+    val n = k.length
     if (n < kv) return new GenericArrayData(Array.empty[Any])
-    val seen = new java.util.LinkedHashSet[String](math.max(16, n))
+    val seen = new java.util.LinkedHashSet[UTF8String](math.max(16, n))
     var i = 0
-    while (i <= n - kv) {
-      // shingle = tokens i..i+k-1 joined by single spaces
-      val sb = new java.lang.StringBuilder(
-        offs(2 * (i + kv - 1) + 1) - offs(2 * i) + kv)
-      var j = i
-      while (j < i + kv) {
-        if (j > i) sb.append(' ')
-        sb.append(s, offs(2 * j), offs(2 * j + 1))
-        j += 1
-      }
-      seen.add(sb.toString)
-      i += 1
-    }
-    val out = new Array[Any](seen.size)
-    val it = seen.iterator()
-    var x = 0
-    while (it.hasNext) { out(x) = UTF8String.fromString(it.next()); x += 1 }
-    new GenericArrayData(out)
+    // shingle = tokens i..i+k-1 joined by single spaces
+    while (i <= n - kv) { seen.add(k.joined(i, i + kv)); i += 1 }
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
   }
 
   def minhashBands(arr: ArrayData, nh: Int, nb: Int): ArrayData = {
@@ -579,11 +562,9 @@ object TextKernels {
   def lcsTokens(a: UTF8String, b: UTF8String, maxT: Int): Int = {
     if (maxT < 1) throw new IllegalArgumentException(
       s"lcs_tokens: maxT ($maxT) must be >= 1")
-    def toks(u: UTF8String): Array[String] = {
-      val s = u.toString
-      val offs = Tokenizer.tokenize(s)
-      val n = math.min(offs.length / 2, maxT)
-      Array.tabulate(n)(i => s.substring(offs(2 * i), offs(2 * i + 1)))
+    def toks(u: UTF8String): Array[Any] = {
+      val k = Tokenizer.of(u)
+      k.slice(0, math.min(k.length, maxT))
     }
     val ta = toks(a)
     val tb = toks(b)
@@ -628,27 +609,12 @@ object TextKernels {
   def winnow(t: UTF8String, kv: Int, wv: Int): ArrayData = {
     if (kv < 1 || wv < 1) throw new IllegalArgumentException(
       s"winnow_fingerprints: k ($kv) and w ($wv) must be >= 1")
-    val s = t.toString
-    val offs = Tokenizer.tokenize(s)
-    val n = offs.length / 2
-    val m = n - kv + 1 // shingle count
+    val k = Tokenizer.of(t)
+    val m = k.length - kv + 1 // shingle count
     if (m < wv) return new GenericArrayData(Array.empty[Any])
     val hs = new Array[Long](m)
     var i = 0
-    while (i < m) {
-      val sb = new java.lang.StringBuilder(
-        offs(2 * (i + kv - 1) + 1) - offs(2 * i) + kv)
-      var j = i
-      while (j < i + kv) {
-        if (j > i) sb.append(' ')
-        sb.append(s, offs(2 * j), offs(2 * j + 1))
-        j += 1
-      }
-      val u = UTF8String.fromString(sb.toString)
-      hs(i) = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 0L)
-      i += 1
-    }
+    while (i < m) { hs(i) = HashKernel.xxh64(k.joined(i, i + kv)); i += 1 }
     // monotonic deque of indices; >= pop keeps the RIGHTMOST minimum on
     // ties (the paper's robust-winnowing rule — value-set unaffected)
     val dq = new Array[Int](m)
@@ -675,21 +641,25 @@ object TextKernels {
   * the reference's stats struct (src/utils/truncation_utils.py:35-156).
   * mode in {start, end, smart}; smart delegates to start (the reference's
   * placeholder does the same, relabeling the strategy). Codegen-
-  * participating (static kernel call). */
-case class TruncateTokens(text: Expression, maxTokens: Expression, mode: Expression)
+  * participating (static kernel call). With `withTokens` the struct also
+  * carries the kept tokens ([[TruncateTokens.windowSchema]]), from the
+  * same scan. */
+case class TruncateTokens(text: Expression, maxTokens: Expression, mode: Expression,
+    withTokens: Boolean = false)
     extends TernaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] =
     Seq(StringType, IntegerType, StringType)
   override def first: Expression = text
   override def second: Expression = maxTokens
   override def third: Expression = mode
-  override def dataType: DataType = TruncateTokens.schema
+  override def dataType: DataType =
+    if (withTokens) TruncateTokens.windowSchema else TruncateTokens.schema
   override def nullSafeEval(t: Any, m: Any, md: Any): Any =
     TextKernels.truncateTokens(t.asInstanceOf[UTF8String],
-      m.asInstanceOf[Int], md.asInstanceOf[UTF8String])
+      m.asInstanceOf[Int], md.asInstanceOf[UTF8String], withTokens)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (t, m, md) =>
-      s"graft.functions.TextKernels.truncateTokens($t, $m, $md)")
+      s"graft.functions.TextKernels.truncateTokens($t, $m, $md, $withTokens)")
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): TruncateTokens = copy(f, s, t)
   override def prettyName: String = "truncate_tokens"
@@ -768,7 +738,7 @@ object TokensOf {
 }
 
 /** `tokens(text)` — the engine tokenizer's token strings, from the
-  * scanner ([[Tokenizer.tokens]]). Equal to
+  * scanner ([[TextKernels.tokens]]). Equal to
   * `regexp_extract_all(text, Tokenizer.DuckDbTokenRegex, 0)` on every
   * input, malformed UTF-8 included (property-tested), with that
   * expression's type, nullability and implicit cast to string. */

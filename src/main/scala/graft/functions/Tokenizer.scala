@@ -1,6 +1,11 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic, self-contained "BPE-ish" tokenizer.
   *
@@ -19,8 +24,10 @@ import scala.collection.mutable.ArrayBuffer
   *   - any other non-whitespace char, alone    -> `[^\p{L}\p{N}\s]`
   *   - whitespace separates tokens and is never a token.
   *
-  * Implemented as a manual scanner (no regex) for speed: one pass, no
-  * allocation beyond the offsets buffer. ~100 MB/s/core, linear.
+  * Implemented once, as a scanner over UTF-8 bytes (no regex, no decode
+  * to a `String`): [[of]] copies a text's bytes once and yields every
+  * token as a `UTF8String` view of that copy. The `String` entry points
+  * ([[tokens]], [[countTokens]]) scan the string's UTF-8 encoding.
   */
 object Tokenizer {
 
@@ -36,13 +43,10 @@ object Tokenizer {
   private final val MaxDigitRun = 3
 
   // classes mirror the regex exactly: \p{L}, \p{N} (Nd+Nl+No), ASCII ws.
-  // CODE POINTS, not chars: both Java regex and DuckDB's RE2 match whole
-  // code points, so a supplementary character (emoji, math alphanumerics)
-  // must classify as ONE unit here too — per-char scanning would see the
-  // two surrogate halves, emit two punctuation tokens where the regexes
-  // emit one letter, and break every parity-based oracle on such input.
-  // Run LENGTHS count code points for the same reason ({1,8} is 8 code
-  // points, not 8 UTF-16 chars).
+  // CODE POINTS, not bytes or chars: both Java regex and DuckDB's RE2
+  // match whole code points, so a multi-byte character (emoji, math
+  // alphanumerics) classifies as ONE unit, and run LENGTHS count code
+  // points ({1,8} is 8 code points, not 8 bytes).
   @inline private def isLetterCp(cp: Int): Boolean = Character.isLetter(cp)
   @inline private def isDigitCp(cp: Int): Boolean = {
     val t = Character.getType(cp)
@@ -53,118 +57,130 @@ object Tokenizer {
     cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B ||
       cp == '\f' || cp == '\r'
 
-  /** Token [start, end) CHAR offsets into `s` (offsets stay UTF-16 so
-    * substring-based consumers are untouched; only classification and
-    * run budgets are code-point based). */
-  def tokenize(s: String): Array[Int] = {
-    val out = new ArrayBuffer[Int](math.max(16, s.length / 4))
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      val cp = s.codePointAt(i)
-      if (isSpaceCp(cp)) {
-        i += Character.charCount(cp)
-      } else if (isLetterCp(cp)) {
-        var k = i    // current token start (char offset)
-        var cnt = 0  // code points in the current token
-        var j = i
-        var c2 = cp
-        var run = true
-        while (run) {
-          j += Character.charCount(c2)
-          cnt += 1
-          if (cnt == MaxLetterRun) { out += k; out += j; k = j; cnt = 0 }
-          if (j < n) {
-            c2 = s.codePointAt(j)
-            run = isLetterCp(c2)
-          } else run = false
-        }
-        if (cnt > 0) { out += k; out += j }
-        i = j
-      } else if (isDigitCp(cp)) {
-        var k = i
-        var cnt = 0
-        var j = i
-        var c2 = cp
-        var run = true
-        while (run) {
-          j += Character.charCount(c2)
-          cnt += 1
-          if (cnt == MaxDigitRun) { out += k; out += j; k = j; cnt = 0 }
-          if (j < n) {
-            c2 = s.codePointAt(j)
-            run = isDigitCp(c2)
-          } else run = false
-        }
-        if (cnt > 0) { out += k; out += j }
-        i = j
-      } else {
-        val w = Character.charCount(cp)
-        out += i; out += (i + w)
-        i += w
-      }
-    }
-    out.toArray
+  // ASCII classes: 0 other, 1 letter, 2 digit, 3 whitespace — the same
+  // classes isLetterCp/isDigitCp/isSpaceCp give
+  private val AsciiClass: Array[Byte] = Array.tabulate[Byte](128) { c =>
+    if (isLetterCp(c)) 1 else if (isDigitCp(c)) 2 else if (isSpaceCp(c)) 3 else 0
   }
 
-  /** Number of tokens in `s` — same single pass, no offsets buffer. */
-  def countTokens(s: String): Int = {
-    if (s == null) return 0
-    var count = 0
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      val cp = s.codePointAt(i)
-      if (isSpaceCp(cp)) {
-        i += Character.charCount(cp)
-      } else if (isLetterCp(cp)) {
-        var cps = 0
-        var j = i
-        var c2 = cp
-        var run = true
-        while (run) {
-          j += Character.charCount(c2)
-          cps += 1
-          if (j < n) {
-            c2 = s.codePointAt(j)
-            run = isLetterCp(c2)
-          } else run = false
-        }
-        count += (cps + MaxLetterRun - 1) / MaxLetterRun
-        i = j
-      } else if (isDigitCp(cp)) {
-        var cps = 0
-        var j = i
-        var c2 = cp
-        var run = true
-        while (run) {
-          j += Character.charCount(c2)
-          cps += 1
-          if (j < n) {
-            c2 = s.codePointAt(j)
-            run = isDigitCp(c2)
-          } else run = false
-        }
-        count += (cps + MaxDigitRun - 1) / MaxDigitRun
-        i = j
-      } else {
-        count += 1
-        i += Character.charCount(cp)
-      }
+  private val Space = UTF8String.fromString(" ")
+
+  /** The tokens of one text: token `i` is `bytes(start(i) until end(i))`.
+    * `bytes` is the tokenizer's own copy of the text's UTF-8 (no caller
+    * reuses it), so every token and span is a view, not a copy. */
+  final class Tokens private[Tokenizer] (val bytes: Array[Byte],
+      offsets: Array[Int], val length: Int) {
+    def start(i: Int): Int = offsets(2 * i)
+    def end(i: Int): Int = offsets(2 * i + 1)
+    /** Token `i`. */
+    def apply(i: Int): UTF8String = UTF8String.fromBytes(bytes, start(i), end(i) - start(i))
+    /** Tokens `[a, b)`, in order. */
+    def slice(a: Int, b: Int): Array[Any] = {
+      val out = new Array[Any](b - a)
+      var i = a
+      while (i < b) { out(i - a) = apply(i); i += 1 }
+      out
     }
-    count
+    /** The whole text (malformed UTF-8 as it decodes). */
+    def text: UTF8String = UTF8String.fromBytes(bytes)
+    /** The text from token `a`'s first byte to token `b - 1`'s last,
+      * `a < b`: the source between those tokens, whitespace included. */
+    def span(a: Int, b: Int): UTF8String =
+      UTF8String.fromBytes(bytes, start(a), end(b - 1) - start(a))
+    /** Tokens `[a, b)` joined by single spaces. */
+    def joined(a: Int, b: Int): UTF8String =
+      UTF8String.concatWs(Space, (a until b).map(apply): _*)
   }
 
-  /** Token strings (materialized) — used by token-space operators. */
+  /** The tokens of `t`, cut from one copy of its bytes. Malformed UTF-8
+    * is tokenized as it decodes (each bad sequence a replacement
+    * character, as Spark's string functions and `regexp_extract_all` see
+    * it): the copy is then the decoded text's re-encoding. */
+  def of(t: UTF8String): Tokens = {
+    val b = new Array[Byte](t.numBytes)
+    t.writeToMemory(b, Platform.BYTE_ARRAY_OFFSET)
+    ofOwned(b)
+  }
+
+  /** The tokens of `s`'s UTF-8 encoding, in which an unpaired surrogate
+    * is `?` — as `UTF8String.fromString` encodes it. */
+  def of(s: String): Tokens = ofOwned(s.getBytes(UTF_8))
+
+  private def ofOwned(b: Array[Byte]): Tokens = {
+    val k = scan(b)
+    if (k != null) k else scan(new String(b, UTF_8).getBytes(UTF_8))
+  }
+
+  /** Number of tokens in `t`. */
+  def countTokens(t: UTF8String): Int = of(t).length
+
+  /** Number of tokens in `s` (0 for null). */
+  def countTokens(s: String): Int = if (s == null) 0 else of(s).length
+
+  /** Token strings of `s`. */
   def tokens(s: String): Array[String] = {
-    val offs = tokenize(s)
-    val out = new Array[String](offs.length / 2)
+    val k = of(s)
+    Array.tabulate(k.length)(k(_).toString)
+  }
+
+  /** The scanner: the tokens of `b`, or null when `b` is not well-formed
+    * UTF-8. */
+  private def scan(b: Array[Byte]): Tokens = {
+    val until = b.length
+    var out = new Array[Int](math.max(16, until / 2))
+    var m = 0
+    var run = 0      // class of the open letter (1) or digit (2) run; 0 none
+    var runStart = 0
+    var runCps = 0   // code points in the open run's current token
     var i = 0
-    while (i < out.length) {
-      out(i) = s.substring(offs(2 * i), offs(2 * i + 1))
-      i += 1
+    while (i < until) {
+      val b0 = b(i) & 0xFF
+      var cp = b0
+      var w = 1
+      if (b0 >= 0x80) {
+        // well-formed sequences only (Unicode Table 3-7): no overlongs,
+        // no surrogates, nothing above U+10FFFF
+        w = if (b0 < 0xC2) 0 else if (b0 < 0xE0) 2 else if (b0 < 0xF0) 3
+            else if (b0 < 0xF5) 4 else 0
+        if (w == 0 || i + w > until) return null
+        val b1 = b(i + 1) & 0xFF
+        val lo = if (b0 == 0xE0) 0xA0 else if (b0 == 0xF0) 0x90 else 0x80
+        val hi = if (b0 == 0xED) 0x9F else if (b0 == 0xF4) 0x8F else 0xBF
+        if (b1 < lo || b1 > hi) return null
+        cp = if (w == 2) b0 & 0x1F else if (w == 3) b0 & 0x0F else b0 & 0x07
+        cp = (cp << 6) | (b1 & 0x3F)
+        var k = 2
+        while (k < w) {
+          val bk = b(i + k) & 0xFF
+          if ((bk & 0xC0) != 0x80) return null
+          cp = (cp << 6) | (bk & 0x3F)
+          k += 1
+        }
+      }
+      val cls =
+        if (cp < 0x80) AsciiClass(cp).toInt
+        else if (isLetterCp(cp)) 1 else if (isDigitCp(cp)) 2 else 0
+      if (run != 0 && cls == run) {
+        if (runCps == (if (run == 1) MaxLetterRun else MaxDigitRun)) {
+          if (m + 2 > out.length) out = java.util.Arrays.copyOf(out, out.length * 2)
+          out(m) = runStart; out(m + 1) = i; m += 2
+          runStart = i; runCps = 0
+        }
+        runCps += 1
+      } else {
+        if (m + 4 > out.length) out = java.util.Arrays.copyOf(out, out.length * 2)
+        if (run != 0) { out(m) = runStart; out(m + 1) = i; m += 2 }
+        run = 0
+        if (cls == 1 || cls == 2) { run = cls; runStart = i; runCps = 1 }
+        else if (cls == 0) { out(m) = i; out(m + 1) = i + w; m += 2 }
+      }
+      i += w
     }
-    out
+    if (run != 0) {
+      if (m + 2 > out.length) out = java.util.Arrays.copyOf(out, out.length + 2)
+      out(m) = runStart; out(m + 1) = until; m += 2
+    }
+    new Tokens(b, out, m / 2)
   }
 
   /** Chunk [firstToken, lastTokenExclusive) spans for a token-window split:
@@ -194,23 +210,4 @@ object Tokenizer {
     if (nTokens == 0) 0
     else if (nTokens <= size) 1
     else 1 + ((nTokens - size) + (size - overlap) - 1) / (size - overlap)
-
-  /** Truncate `s` to at most `maxTokens` tokens. mode: start|end|smart
-    * (smart delegates to start, as in the reference placeholder —
-    * src/utils/truncation_utils.py:123-156). Returns (text, originalTokens,
-    * keptTokens). */
-  def truncate(s: String, maxTokens: Int, mode: String): (String, Int, Int) = {
-    val offs = tokenize(s)
-    val n = offs.length / 2
-    if (n <= maxTokens) return (s, n, n)
-    val kept = math.max(0, maxTokens)
-    if (kept == 0) return ("", n, 0)
-    mode match {
-      case "end" =>
-        val first = n - kept
-        (s.substring(offs(2 * first), offs(2 * (n - 1) + 1)), n, kept)
-      case _ => // "start" | "smart"
-        (s.substring(offs(0), offs(2 * (kept - 1) + 1)), n, kept)
-    }
-  }
 }

@@ -541,15 +541,17 @@ object Dedup {
     * Token hash = [[graft.core.TokenHash.hash64]] over the token's UTF-8
     * bytes (two murmur3_x86_32 mixes) — byte-based so the `dedup_simhash`
     * oracle replays it exactly in DuckDB SQL. */
-  private def simhashVote(tokens: Iterator[Array[Byte]]): Long = {
+  private def simhashVote(n: Int, tokenHash: Int => Long): Long = {
     val votes = new Array[Int](64)
-    tokens.foreach { b8 =>
-      val h = graft.core.TokenHash.hash64(b8, b8.length)
+    var i = 0
+    while (i < n) {
+      val h = tokenHash(i)
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
         b += 1
       }
+      i += 1
     }
     var out = 0L
     var b = 0
@@ -564,8 +566,10 @@ object Dedup {
     * UTF8String.getBytes hands the UTF-8 bytes straight to the hash —
     * no String round-trip. */
   def simhash64Kernel(arr: ArrayData): Long =
-    simhashVote(
-      (0 until arr.numElements()).iterator.map(arr.getUTF8String(_).getBytes))
+    simhashVote(arr.numElements(), { i =>
+      val b = arr.getUTF8String(i).getBytes
+      graft.core.TokenHash.hash64(b, 0, b.length)
+    })
 
   /** 64-bit SimHash over a token array: per-bit weighted vote of 64-bit
     * token hashes. Custom expression — the 64-counter loop has no efficient
@@ -585,11 +589,9 @@ object Dedup {
 
   /** Static kernel for [[SimHashText]] (callable from generated code). */
   def simhashTextKernel(v: UTF8String): Long = {
-    val s = v.toString
-    val offs = Tokenizer.tokenize(s)
-    simhashVote((0 until offs.length / 2).iterator.map(i =>
-      s.substring(offs(2 * i), offs(2 * i + 1))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    val k = Tokenizer.of(v)
+    simhashVote(k.length,
+      i => graft.core.TokenHash.hash64(k.bytes, k.start(i), k.end(i) - k.start(i)))
   }
 
   /** Fused text->SimHash: the scanner tokenizer feeds the vote directly —

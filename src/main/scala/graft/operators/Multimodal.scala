@@ -741,10 +741,12 @@ object Multimodal {
           case Some(grid) => grid
           case None =>
             val cells = new Array[Long](64)
-            graft.functions.Tokenizer.tokens(new String(b, "UTF-8")).foreach { t =>
-              val slot = (graft.functions.HashKernel.xxh64(
-                org.apache.spark.unsafe.types.UTF8String.fromString(t)) & 63L).toInt
-              cells(slot) += 1
+            val k = graft.functions.Tokenizer.of(
+              org.apache.spark.unsafe.types.UTF8String.fromBytes(b))
+            var t = 0
+            while (t < k.length) {
+              cells((graft.functions.HashKernel.xxh64(k(t)) & 63L).toInt) += 1
+              t += 1
             }
             cells.map(c => math.min(255L, c * 16L).toByte)
         }

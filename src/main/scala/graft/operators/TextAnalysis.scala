@@ -79,10 +79,12 @@ object TextAnalysis {
     import org.apache.spark.unsafe.types.UTF8String
     override def dataType: DataType = StringType
     override def nullSafeEval(v: Any): Any = {
-      val s = v.asInstanceOf[UTF8String].toString
+      val k = Tokenizer.of(v.asInstanceOf[UTF8String])
       val hits = new Array[Int](PredictLang.langs.length)
-      Tokenizer.tokens(s).foreach { t =>
-        PredictLang.markerToLangs.get(t).foreach(_.foreach(hits(_) += 1))
+      var t = 0
+      while (t < k.length) {
+        PredictLang.markerToLangs.get(k(t)).foreach(_.foreach(hits(_) += 1))
+        t += 1
       }
       var best = 0
       var i = 1
@@ -100,9 +102,9 @@ object TextAnalysis {
     val langs: Array[String] = LangMarkers.keys.toArray.sorted
     // a marker word may belong to several languages ('la' is es AND fr):
     // every owning language gets the hit, as in the per-lang filters
-    val markerToLangs: Map[String, Seq[Int]] =
+    val markerToLangs: Map[org.apache.spark.unsafe.types.UTF8String, Seq[Int]] =
       langs.zipWithIndex.flatMap { case (l, i) =>
-        LangMarkers(l).map(m => m -> i)
+        LangMarkers(l).map(m => org.apache.spark.unsafe.types.UTF8String.fromString(m) -> i)
       }.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
   }
 

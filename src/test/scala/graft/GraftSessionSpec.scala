@@ -3,6 +3,11 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** The one session builder and the one cold reset: a `GraftSession`
@@ -64,6 +69,35 @@ class GraftSessionSpec extends SparkSpec {
     assert(queries.AnalysisQueries.nDocsTfMemoSize == 0)
     assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty)
+  }
+
+  test("numbering a frame logs no cached-RDD clean-up line under the session's log levels") {
+    val logger = "org.apache.spark.sql.execution.python.AttachDistributedSequenceExec"
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("numbering-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(capture)
+    def numberedLines(): Seq[String] = {
+      lines.clear()
+      operators.GlobalOrder.withRowNumber(spark.range(50).toDF("k"), col("k")).collect()
+      lines.asScala.filter(_.contains("clean up cached RDD")).toSeq
+    }
+    try {
+      // at WARN the numbering's release line is there to capture
+      Configurator.setLevel(logger, Level.WARN)
+      assert(numberedLines().exists(_.startsWith(logger)))
+      GraftSession.setLogLevels(spark)
+      assert(numberedLines().isEmpty)
+      assert(LogManager.getRootLogger.getLevel == Level.WARN)
+    } finally {
+      root.removeAppender(capture)
+      GraftSession.setLogLevels(spark)
+    }
   }
 
   test("src/main builds sessions only through GraftSession and reads no " +

@@ -24,7 +24,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config(GraftSession.confs - "spark.sql.extensions")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    GraftSession.setLogLevels(s)
     s
   }
   val sf: String = "/root/testdata/sf0.001"

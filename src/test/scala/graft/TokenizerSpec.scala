@@ -3,9 +3,17 @@ package graft
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.Tokenizer
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{TextKernels, Tokenizer}
 
 class TokenizerSpec extends SparkSpec {
+
+  /** `truncate_tokens`' kernel on a string: (text, original, kept). */
+  private def truncate(s: String, max: Int, mode: String): (String, Int, Int) = {
+    val r = TextKernels.truncateTokens(UTF8String.fromString(s), max, UTF8String.fromString(mode))
+    (r.getUTF8String(0).toString, r.getInt(1), r.getInt(2))
+  }
 
   /** Deterministic stand-in for ScalaCheckPropertyChecks (scalatestplus is
     * not in the offline cache): sample `gen` `n` times from a fixed seed. */
@@ -33,7 +41,8 @@ class TokenizerSpec extends SparkSpec {
 
   test("countTokens agrees with tokenize offsets") {
     forAll(textGen) { (s: String) =>
-      assert(Tokenizer.countTokens(s) == Tokenizer.tokenize(s).length / 2)
+      assert(Tokenizer.countTokens(s) == Tokenizer.of(s).length)
+      assert(Tokenizer.countTokens(UTF8String.fromString(s)) == Tokenizer.of(s).length)
     }
   }
 
@@ -68,13 +77,17 @@ class TokenizerSpec extends SparkSpec {
       "𝟎" * 4,                  // MATHEMATICAL BOLD DIGIT ZERO (Nd) run
       "x😀y 12𝟏",
       "\uD800 lone-high surrogate")        // invalid UTF-16 stays 1 token
+    // the scanner reads UTF-8, where an unpaired surrogate is '?' (as
+    // UTF8String.fromString encodes it): the regex's tokens, encoded
+    def encoded(t: String) =
+      new String(t.getBytes(java.nio.charset.StandardCharsets.UTF_8), "UTF-8")
     astral.foreach { s =>
-      val fromScanner = Tokenizer.tokenize(s).grouped(2)
-        .map(p => s.substring(p(0), p(1))).toSeq
-      assert(fromScanner == regexTokens(s),
+      val fromScanner = Tokenizer.tokens(s).toSeq
+      assert(fromScanner == regexTokens(s).map(encoded),
         s"scanner/regex divergence on <$s>: $fromScanner vs ${regexTokens(s)}")
       assert(Tokenizer.countTokens(s) == regexTokens(s).size)
     }
+    assert(Tokenizer.tokens("\uD800 lone").toSeq == Seq("?", "lone"))
   }
 
   test("chunk spans: size/overlap invariants") {
@@ -98,8 +111,7 @@ class TokenizerSpec extends SparkSpec {
   test("chunk texts reconstruct the tokenized source") {
     forAll(textGen, Gen.chooseNum(2, 64)) { (s, size) =>
       val ov = size / 4
-      val offs = Tokenizer.tokenize(s)
-      val n = offs.length / 2
+      val n = Tokenizer.of(s).length
       val spans = Tokenizer.chunkSpans(n, size, ov)
       // de-overlapped concatenation covers every token exactly once
       val covered = spans.zipWithIndex.flatMap { case ((a, b), i) =>
@@ -112,7 +124,7 @@ class TokenizerSpec extends SparkSpec {
   test("truncate keeps exactly min(n, max) tokens, start and end modes") {
     forAll(textGen, Gen.chooseNum(0, 50)) { (s, max) =>
       for (mode <- Seq("start", "end", "smart")) {
-        val (out, orig, kept) = Tokenizer.truncate(s, max, mode)
+        val (out, orig, kept) = truncate(s, max, mode)
         assert(orig == Tokenizer.countTokens(s))
         assert(kept == math.min(orig, max))
         assert(Tokenizer.countTokens(out) == kept)
@@ -123,8 +135,8 @@ class TokenizerSpec extends SparkSpec {
 
   test("truncate start is a prefix relation, end a suffix relation") {
     val s = "alpha beta gamma delta epsilon zeta eta theta"
-    val (st, _, _) = Tokenizer.truncate(s, 3, "start")
-    val (en, _, _) = Tokenizer.truncate(s, 3, "end")
+    val (st, _, _) = truncate(s, 3, "start")
+    val (en, _, _) = truncate(s, 3, "end")
     assert(s.startsWith(st))
     assert(s.endsWith(en))
     assert(st == "alpha beta gamma")
