@@ -657,9 +657,16 @@ case class TruncateTokens(text: Expression, maxTokens: Expression, mode: Express
   override def nullSafeEval(t: Any, m: Any, md: Any): Any =
     TextKernels.truncateTokens(t.asInstanceOf[UTF8String],
       m.asInstanceOf[Int], md.asInstanceOf[UTF8String], withTokens)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // a literal budget (each question has its own) is read from the
+    // references, not inlined: one compiled class serves every budget
+    val max = maxTokens match {
+      case Literal(m: Integer, _) => Some(s"${ctx.addReferenceObj("maxTokens", m)}.intValue()")
+      case _ => None
+    }
     defineCodeGen(ctx, ev, (t, m, md) =>
-      s"graft.functions.TextKernels.truncateTokens($t, $m, $md, $withTokens)")
+      s"graft.functions.TextKernels.truncateTokens($t, ${max.getOrElse(m)}, $md, $withTokens)")
+  }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): TruncateTokens = copy(f, s, t)
   override def prettyName: String = "truncate_tokens"

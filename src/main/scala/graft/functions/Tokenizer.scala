@@ -74,6 +74,11 @@ object Tokenizer {
     def end(i: Int): Int = offsets(2 * i + 1)
     /** Token `i`. */
     def apply(i: Int): UTF8String = UTF8String.fromBytes(bytes, start(i), end(i) - start(i))
+    /** Each token, in order. */
+    def foreach(f: UTF8String => Unit): Unit = {
+      var i = 0
+      while (i < length) { f(apply(i)); i += 1 }
+    }
     /** Tokens `[a, b)`, in order. */
     def slice(a: Int, b: Int): Array[Any] = {
       val out = new Array[Any](b - a)

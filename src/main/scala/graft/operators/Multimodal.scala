@@ -741,13 +741,8 @@ object Multimodal {
           case Some(grid) => grid
           case None =>
             val cells = new Array[Long](64)
-            val k = graft.functions.Tokenizer.of(
-              org.apache.spark.unsafe.types.UTF8String.fromBytes(b))
-            var t = 0
-            while (t < k.length) {
-              cells((graft.functions.HashKernel.xxh64(k(t)) & 63L).toInt) += 1
-              t += 1
-            }
+            graft.functions.Tokenizer.of(org.apache.spark.unsafe.types.UTF8String.fromBytes(b))
+              .foreach(t => cells((graft.functions.HashKernel.xxh64(t) & 63L).toInt) += 1)
             cells.map(c => math.min(255L, c * 16L).toByte)
         }
         (id, mt, aHashBytes(thumb))

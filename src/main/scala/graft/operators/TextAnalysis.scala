@@ -79,12 +79,9 @@ object TextAnalysis {
     import org.apache.spark.unsafe.types.UTF8String
     override def dataType: DataType = StringType
     override def nullSafeEval(v: Any): Any = {
-      val k = Tokenizer.of(v.asInstanceOf[UTF8String])
       val hits = new Array[Int](PredictLang.langs.length)
-      var t = 0
-      while (t < k.length) {
-        PredictLang.markerToLangs.get(k(t)).foreach(_.foreach(hits(_) += 1))
-        t += 1
+      Tokenizer.of(v.asInstanceOf[UTF8String]).foreach { t =>
+        PredictLang.markerToLangs.get(t).foreach(_.foreach(hits(_) += 1))
       }
       var best = 0
       var i = 1

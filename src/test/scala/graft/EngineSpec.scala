@@ -239,6 +239,28 @@ class EngineSpec extends SparkSpec {
       col("llm_answer") =!= "No answer found in document").count() == 0)
   }
 
+  test("truncationJudged's generated code does not depend on its budget") {
+    // each question has its own budget; an inlined one compiled every plan anew
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    def code(contextWindow: Int): String = {
+      val j = Engine().truncationJudged(docs, contextWindow = contextWindow, buffer = 500)
+      // the generated classes only, without the plan trees and their ids
+      org.apache.spark.sql.execution.debug.codegenString(j.queryExecution.executedPlan)
+        .split("Generated code:").drop(1).map(_.split("== Subtree").head).mkString
+    }
+    // the whole plan up front, not AQE's stages
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (a, b) = try (code(3000), code(3001))
+      finally spark.conf.unset("spark.sql.adaptive.enabled")
+    assert(a.contains("truncateTokens("))
+    assert(a == b)
+    // and the budget still reaches the kernel
+    val five = Engine().truncationJudged(docs, lit(5), operators.TruncationStrategies.get("start"))
+    assert(five.filter(col("truncated_tokens") =!= least(col("original_tokens"), lit(5)))
+      .count() == 0)
+    assert(five.filter(col("truncation_applied")).count() > 0)
+  }
+
   test("judge blocks contain exactly the batch's escaped items") {
     val blocks = graft.queries.QaPipeline.judgeBlocks(spark, sf)
       .orderBy("batch_id").collect()
