@@ -1,4 +1,6 @@
 package graft
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Host telemetry snapshot for the self-adjudicating bench header:
@@ -41,93 +43,38 @@ object Bench {
       picked.foreach { case (_, fn) =>
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
       }
-    // SPARK_GRAFT_BENCH_FULL=1 drives the FULL physical plan
-    // (queryExecution.toRdd — every output column computed) instead of
-    // count(), which lets Catalyst prune unreferenced aggregate
-    // expressions above the final grouping. A/B knob for auditing what
-    // the count() protocol actually measures per entry; the committed
-    // protocol stays count() for cross-round comparability.
-    val fullAction = sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[Throwable]) = {
       val t0 = System.nanoTime()
-      val ok =
-        try {
-          val df = fn(spark, sfDir)
-          if (fullAction) df.queryExecution.toRdd.count() else df.count()
-          true
-        }
+      val err =
+        try { fn(spark, sfDir).count(); None }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
+          Some(e)
         }
-      ((System.nanoTime() - t0) / 1e9, ok)
+      ((System.nanoTime() - t0) / 1e9, err)
     }
-    // Measurement protocol, pinned (PERF_NOTES "bench protocol"):
-    // SPARK_GRAFT_BENCH_REPS=N (default 1) times every query N times and
-    // keeps the per-query minimum — min-of-repeats is the standard
-    // steady-state estimator under external noise, and an explicit env
-    // makes builder posture numbers and driver numbers apples-to-apples
-    // (r7's 139.0 vs 132.7 divergence was exactly this: one-run totals
-    // vs min-of-2). On top of that, the default single-rep path keeps
-    // the contention guard: a transient host spike can inflate one query
-    // ~10x (observed: 33 s for a query that runs 3 s steady-state), so
-    // anything over SPARK_GRAFT_RETRY_OVER (default 0.3 s) is re-measured
-    // once and the minimum kept; sub-threshold queries cannot move the
-    // total materially even if every one of them spikes.
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(1)
-    val firstPass = picked.map { case (name, fn) => (name, fn, timed(name, fn)) }
-    val retryOver = sys.env.get("SPARK_GRAFT_RETRY_OVER")
-      .map(_.toDouble).getOrElse(0.3)
-    val batchResults = firstPass.map { case (name, fn, (t1, ok1)) =>
-      val extra = math.max(reps - 1, if (ok1 && t1 > retryOver) 1 else 0)
-      // a rep that succeeds flips a transient first-run failure to
-      // healthy (min over successful reps only); all-reps-failed stays
-      // failed with the first timing
-      val (t, ok) = (0 until extra).foldLeft((t1, ok1)) {
-        case ((best, okAcc), _) =>
-          val (tN, okN) = timed(name, fn)
-          if (okN && okAcc) (math.min(best, tN), true)
-          else if (okN) (tN, true)
-          else (best, okAcc)
-      }
-      if (extra > 0)
-        System.err.println(f"[bench] $name min-of-${extra + 1}: $t1%.2f -> $t%.2f")
-      (name, t, ok)
-    }
-    // SPARK_GRAFT_BENCH_ISOLATED=1: after the batch pass, re-attack the
-    // heaviest 20 entries min-of-3 with nothing else running in the
-    // JVM — intra-suite contention inflates batch numbers 2-6x on the
-    // big frames (PERF_NOTES "batch noise"), and re-measuring the rows
-    // that dominate the total makes the artifact's minima
-    // self-confirming instead of needing a manual isolated follow-up.
-    // Each isolated rep runs COLD-CACHE (GraftSession.coldReset first):
-    // a warm rerun would exclude the one-time base build that a
-    // standalone entry pays, silently mixing two protocols in the
-    // committed minima series.
-    val results =
-      if (!sys.env.get("SPARK_GRAFT_BENCH_ISOLATED").contains("1")) batchResults
-      else {
-        val heavy = batchResults.filter(_._3).sortBy(-_._2).take(20)
-          .map(_._1).toSet
-        batchResults.map { case r @ (name, t, ok) =>
-          if (!heavy(name)) r
-          else {
-            val fn = SparkEntry.queries(name)
-            // the batch number stays in the min: it measured the same
-            // count() protocol, just under suite contention
-            val best = (0 until 3).foldLeft(t) { (b, _) =>
-              GraftSession.coldReset(spark)
-              val (tN, okN) = timed(name, fn)
-              if (okN) math.min(b, tN) else b
-            }
-            System.err.println(f"[bench] $name isolated min-of-3 (cold-cache): $t%.2f -> $best%.2f")
-            (name, best, ok)
-          }
+    // Measurement protocol, pinned (PERF_NOTES "bench protocol"): every
+    // entry runs count() once. A transient host spike can inflate one
+    // entry ~10x (observed: 33 s for an entry that runs 3 s steady-state),
+    // so an entry that succeeds in over RetryOver seconds is re-measured
+    // once and the minimum of the successful timings kept; entries under
+    // it cannot move the total materially even if every one of them spikes.
+    val RetryOver = 0.3
+    val results = picked.map { case (name, fn) =>
+      val (t1, err) = timed(name, fn)
+      val t =
+        if (err.nonEmpty || t1 <= RetryOver) t1
+        else {
+          val (t2, err2) = timed(name, fn)
+          val best = if (err2.isEmpty) math.min(t1, t2) else t1
+          System.err.println(f"[bench] $name min-of-2: $t1%.2f -> $best%.2f")
+          best
         }
-      }
+      (name, t, err)
+    }
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failed = results.filter(!_._3).map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val failed = results.filter(_._3.nonEmpty).map("\"" + _._1 + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // The driver captures only the TAIL of stdout and parses the last line as
     // JSON. With 70+ queries the full per-query map (~4 KB) can start beyond
@@ -139,57 +86,12 @@ object Bench {
     // green), not the exit code.
     val host = s"""{"start":$hostAtStart,"end":${hostStats()}}"""
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"host":$host,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_full.json"),
-      full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
-    // Best-observed per-query seconds, merged into a COMMITTED artifact
-    // (docs/bench_mins.json): the host band makes run totals noisy
-    // (PERF_NOTES "host-band analysis": same code measured 135-202 s
-    // same-day), so the per-(sf, query) minimum is the only series worth
-    // diffing round-over-round. Advisory — any failure here is swallowed.
+    // side files for humans and tools: the full line, and the failed
+    // entries with error class and message in verify_status.json's shape
     try {
-      // FULL-action runs measure a different protocol — never merge
-      // them into the committed count()-protocol minima series
-      if (fullAction) throw new RuntimeException("skip min-merge")
-      val sfName = new java.io.File(sfDir).getName
-      val path = java.nio.file.Paths.get("docs/bench_mins.json")
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      mapper.configure(com.fasterxml.jackson.databind
-        .SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS, true)
-      mapper.configure(com.fasterxml.jackson.databind
-        .SerializationFeature.INDENT_OUTPUT, true)
-      val root: java.util.Map[String, Object] =
-        if (java.nio.file.Files.exists(path))
-          mapper.readValue(java.nio.file.Files.readAllBytes(path),
-            classOf[java.util.HashMap[String, Object]])
-        else new java.util.HashMap[String, Object]()
-      val bySf = root
-        .computeIfAbsent(sfName, _ => new java.util.HashMap[String, Object]())
-        .asInstanceOf[java.util.Map[String, Object]]
-      val commit =
-        try {
-          val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-            .start()
-          val out = new String(p.getInputStream.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8).trim
-          p.waitFor()
-          if (out.nonEmpty) out else "unknown"
-        } catch { case _: Throwable => "unknown" }
-      results.filter(_._3).foreach { case (name, t, _) =>
-        val sec = math.rint(t * 1000) / 1000 // ms precision: stable diffs
-        val prev = Option(bySf.get(name))
-          .map(_.asInstanceOf[java.util.Map[String, Object]])
-          .flatMap(m => Option(m.get("sec"))
-            .map(_.asInstanceOf[Number].doubleValue))
-        if (prev.forall(sec < _)) {
-          val e = new java.util.HashMap[String, Object]()
-          e.put("sec", java.lang.Double.valueOf(sec))
-          e.put("commit", commit)
-          bySf.put(name, e)
-        }
-      }
-      java.nio.file.Files.write(path, mapper.writeValueAsBytes(root))
+      Files.writeString(Paths.get("bench_full.json"), full)
+      Verify.writeStatus(Paths.get("bench_status.json"),
+        results.collect { case (name, _, Some(e)) => name -> e })
     } catch { case _: Throwable => () }
     println(full)
     println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},"failed":$failed,"host":$host,"sf":"$sfDir"}""")

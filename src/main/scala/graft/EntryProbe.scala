@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Dev harness: run one catalog entry cold-cache (the bench's
-  * [[GraftSession.coldReset]] before every rep) and print, per rep:
+/** Dev harness: run one catalog entry cold-cache
+  * ([[GraftSession.coldReset]] before every rep) and print, per rep:
   *
   *  - every job's wall time, task count and stage names (a
   *    SparkListener), plus the driver time between jobs;
@@ -16,17 +16,13 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    appear only when a micro-batch runs.
   *
   * With `explain`, the entry's formatted physical plan follows the reps.
-  *
-  * `SPARK_GRAFT_SAMPLE=1` adds an in-process thread sampler (no
-  * profiler attach needed): every executor thread is sampled
-  * ~50 Hz, bucketed by the deepest frame inside the state-store commit
-  * path, and the histogram printed at exit; `SPARK_GRAFT_SAMPLE_ALL=1`
-  * buckets every executor frame, not only the state path.
+  * For where the time goes inside a job, profile the JVM with JDK
+  * Flight Recorder (`-XX:StartFlightRecording`, read with `jfr`).
   *
   * Usage: sbt "runMain graft.EntryProbe <query> [reps=2] [explain]"
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_WARM_DIR, SPARK_GRAFT_CPUS
   * (default: available processors), SPARK_GRAFT_LOCAL_DIR,
-  * SPARK_GRAFT_EXTRA_CONF, SPARK_GRAFT_SAMPLE, SPARK_GRAFT_SAMPLE_ALL
+  * SPARK_GRAFT_EXTRA_CONF
   */
 object EntryProbe {
   def main(args: Array[String]): Unit = {
@@ -89,42 +85,6 @@ object EntryProbe {
       }
     })
 
-    val histo = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    if (sys.env.get("SPARK_GRAFT_SAMPLE").contains("1")) {
-      val sampleAll = sys.env.get("SPARK_GRAFT_SAMPLE_ALL").contains("1")
-      val t = new Thread(() => {
-        while (true) {
-          Thread.getAllStackTraces.forEach { (th, frames) =>
-            if (th.getName.startsWith("Executor task launch")) {
-              val inCommit = if (sampleAll) 0 else frames.indexWhere(f =>
-                f.getClassName.contains("HDFSBackedStateStore") ||
-                  f.getClassName.contains("StateStoreRDD") ||
-                  f.getClassName.contains("statefulOperators") ||
-                  f.getClassName.contains("SymmetricHashJoin"))
-              if (inCommit >= 0 && frames.nonEmpty) {
-                // key = first frame that is NOT low-level parking/IO glue,
-                // plus the blocking frame itself — shows WHAT parked threads
-                // are waiting in, not just that they parked
-                val skip = Set("jdk.internal.misc.Unsafe", "java.lang.Object",
-                  "java.util.concurrent.locks.LockSupport",
-                  "java.util.concurrent.locks.AbstractQueuedSynchronizer")
-                val inf = frames.filter(f => !skip.contains(f.getClassName))
-                  .take(4)
-                  .map(f => s"${f.getClassName.replace("org.apache.spark.", "").replace("sql.execution.streaming.", "")}.${f.getMethodName}")
-                  .mkString(" < ")
-                val parked = if (frames.headOption.exists(f =>
-                  skip.contains(f.getClassName))) "PARKED: " else ""
-                histo.merge(parked + inf, 1, (a, b) => a + b)
-              }
-            }
-          }
-          Thread.sleep(20)
-        }
-      })
-      t.setDaemon(true)
-      t.start()
-    }
-
     (1 to reps).foreach { i =>
       GraftSession.coldReset(spark)
       jobs.synchronized(jobs.clear())
@@ -138,13 +98,6 @@ object EntryProbe {
       }
       val accounted = jobs.map(_.ms).sum / 1e3
       println(f"  [sum of jobs: $accounted%.3f s; gaps (driver): ${total - accounted}%.3f s]")
-    }
-    if (!histo.isEmpty) {
-      import scala.jdk.CollectionConverters._
-      println("== state-path sample histogram (top frame of sampled executor threads) ==")
-      histo.asScala.toSeq.sortBy(-_._2).take(25).foreach { case (k, v) =>
-        println(f"  $v%5d  $k")
-      }
     }
     if (args.contains("explain")) fn(spark, sfDir).explain("formatted")
     spark.stop()

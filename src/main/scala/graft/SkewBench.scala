@@ -172,53 +172,6 @@ object SkewBench {
     }
     require(nAggDirect == nAggSalted, "agg variants disagree on group count")
 
-    // merge the variant timings into the committed minima series,
-    // keyed by frame like graft.Bench keys by sf dir ("skew:<frame>"):
-    // runs on different-scale frames (zipf vs 100x) must NOT collide
-    // in one series, or a small-frame run permanently wins the min and
-    // masks every large-frame regression
-    try {
-      val path = java.nio.file.Paths.get("docs/bench_mins.json")
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      mapper.configure(com.fasterxml.jackson.databind
-        .SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS, true)
-      mapper.configure(com.fasterxml.jackson.databind
-        .SerializationFeature.INDENT_OUTPUT, true)
-      val root: java.util.Map[String, Object] =
-        if (java.nio.file.Files.exists(path))
-          mapper.readValue(java.nio.file.Files.readAllBytes(path),
-            classOf[java.util.HashMap[String, Object]])
-        else new java.util.HashMap[String, Object]()
-      val byFrame = root
-        .computeIfAbsent("skew:" + new java.io.File(sfDir).getName,
-          _ => new java.util.HashMap[String, Object]())
-        .asInstanceOf[java.util.Map[String, Object]]
-      val commit =
-        try {
-          val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-            .start()
-          val out = new String(p.getInputStream.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8).trim
-          p.waitFor()
-          if (out.nonEmpty) out else "unknown"
-        } catch { case _: Throwable => "unknown" }
-      Seq("direct" -> tDirect, "aqe_skew" -> tAqe, "salted" -> tSalted,
-        "discover" -> tDiscover, "agg_direct" -> tAggDirect,
-        "agg_salted" -> tAggSalted).foreach { case (name, t) =>
-        val sec = math.rint(t * 1000) / 1000
-        val prev = Option(byFrame.get(name))
-          .map(_.asInstanceOf[java.util.Map[String, Object]])
-          .flatMap(m => Option(m.get("sec"))
-            .map(_.asInstanceOf[Number].doubleValue))
-        if (prev.forall(sec < _)) {
-          val e = new java.util.HashMap[String, Object]()
-          e.put("sec", java.lang.Double.valueOf(sec))
-          e.put("commit", commit)
-          byFrame.put(name, e)
-        }
-      }
-      java.nio.file.Files.write(path, mapper.writeValueAsBytes(root))
-    } catch { case _: Throwable => () }
     // the aqe_skew number is measured under TUNED engage thresholds (see
     // aqe() above) — emit them so the line is self-describing and can't
     // be read as default-config AQE. ROOT locale (not the f

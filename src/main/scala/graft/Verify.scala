@@ -1,5 +1,5 @@
 package graft
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -53,12 +53,19 @@ object Verify {
         Some(name -> e)
       }
     }
-    Files.writeString(Paths.get(outDir, "verify_status.json"), failed.map {
+    writeStatus(Paths.get(outDir, "verify_status.json"), failed)
+    failed.map(_._1)
+  }
+
+  /** Writes failed entries as `{"failed": [{"name", "error",
+    * "message"}]}`, an empty list when none failed: Verify's
+    * `verify_status.json` and Bench's `bench_status.json`. */
+  private[graft] def writeStatus(path: Path,
+      failed: Seq[(String, Throwable)]): Unit =
+    Files.writeString(path, failed.map {
       case (name, e) => s"""{"name": ${q(name)}, "error": ${q(e.getClass.getName)}, """ +
         s""""message": ${q(String.valueOf(e.getMessage))}}"""
     }.mkString("{\"failed\": [", ", ", "]}"))
-    failed.map(_._1)
-  }
 
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the

@@ -127,12 +127,11 @@ private[graft] class DfCacheStore(maxEntries: Int) {
     * maintenance hook. */
   private[graft] def sweepReleases(): Int = cache.synchronized(sweepLocked())
 
-  /** Evicts EVERY entry through the deferred-release discipline — the
-    * bench's isolated-rerun protocol hook (cold-cache reps: an isolated
-    * minimum must include the one-time base build a standalone run
-    * pays, or the committed series silently mixes warm-rerun and
-    * cold-batch numbers). Safe for straggling consumers: deferral keeps
-    * blocks pinned until no derived Dataset can still execute. */
+  /** Evicts EVERY entry through the deferred-release discipline — part
+    * of [[graft.GraftSession.coldReset]], so each cold rep of
+    * [[graft.EntryProbe]] pays the one-time base build a standalone run
+    * pays. Safe for straggling consumers: deferral keeps blocks pinned
+    * until no derived Dataset can still execute. */
   private[graft] def clearAll(): Unit = cache.synchronized {
     val it = cache.entrySet().iterator()
     while (it.hasNext) { deferRelease(it.next().getValue); it.remove() }

@@ -1242,46 +1242,38 @@ object TextFunctions {
     * its type (property-tested). The DuckDB oracles keep the regex. */
   def regex_tokens(c: Column): Column = col(TokensOf(ex(c)))
 
+  /** The SQL name and builder of every engine expression callable from
+    * SQL: [[graft.GraftExtensions]] injects these at session build and
+    * [[register]] adds them to an already-built session. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("count_tokens", es => CountTokens(es.head)),
+    ("estimate_tokens", es => EstimateTokens(es.head)),
+    ("sequence_ratio", es => SequenceRatio(es(0), es(1))),
+    ("truncate_tokens", es => TruncateTokens(es(0), es(1), es(2))),
+    ("split_chunks", es => SplitChunks(es(0), es(1), es(2))),
+    ("split_chunks_chars", es => SplitChunksChars(es(0), es(1), es(2), es(3))),
+    ("shingles", es => Shingles(es(0), es(1))),
+    ("lenient_json", es => LenientJsonExtract(es.head)),
+    ("simhash64", es => graft.operators.Dedup.SimHash64(es.head)),
+    ("simhash_text", es => graft.operators.Dedup.SimHashText(es.head)),
+    ("minhash_bands", es => MinHashBands(es(0), es(1), es(2))),
+    ("term_counts", es => TermCounts(es.head)),
+    ("winnow_fingerprints", es => WinnowFingerprints(es(0), es(1), es(2))),
+    ("lcs_tokens", es => LcsTokens(es(0), es(1), es(2))),
+    ("bigram_counts", es => BigramCounts(es.head)),
+    ("minhash_sig", es => MinHashSig(es(0), es(1))),
+    ("hash64", es => Hash64(es.head)),
+    ("hash_family", es => HashFamily(es(0), es(1))),
+    ("jaro_winkler", es => JaroWinkler(es(0), es(1))),
+    ("damerau_levenshtein", es => DamerauLevenshtein(es(0), es(1))),
+    ("hamming_bytes", es => HammingBytes(es(0), es(1))),
+    ("jaccard_bytes", es => JaccardBytes(es(0), es(1))))
+
   /** Register all text-kernel functions for SQL use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("count_tokens",
-      es => CountTokens(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("estimate_tokens",
-      es => EstimateTokens(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("sequence_ratio",
-      es => SequenceRatio(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("truncate_tokens",
-      es => TruncateTokens(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("split_chunks",
-      es => SplitChunks(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("split_chunks_chars",
-      es => SplitChunksChars(es(0), es(1), es(2), es(3)), "scala_udf")
-    reg.createOrReplaceTempFunction("shingles",
-      es => Shingles(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_bands",
-      es => MinHashBands(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("term_counts",
-      es => TermCounts(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("hash64",
-      es => Hash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fingerprints",
-      es => WinnowFingerprints(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("hash_family",
-      es => HashFamily(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_counts",
-      es => BigramCounts(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSig(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("lcs_tokens",
-      es => LcsTokens(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler",
-      es => JaroWinkler(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("damerau_levenshtein",
-      es => DamerauLevenshtein(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming_bytes",
-      es => HammingBytes(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaccard_bytes",
-      es => JaccardBytes(es(0), es(1)), "scala_udf")
+    sqlFunctions.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

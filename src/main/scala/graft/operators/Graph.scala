@@ -214,9 +214,10 @@ object Graph {
   private[graft] def rankBaseCount: Int =
     rankBases.synchronized(rankBases.size())
 
-  /** Unpersists and drops every memo entry — the bench's cold-cache
-    * isolated-rerun hook (same contract as `DfCache.clearAll`; safe
-    * immediately because the edge caches keep intact lineage). */
+  /** Unpersists and drops every memo entry — part of
+    * [[graft.GraftSession.coldReset]] (same contract as
+    * `DfCache.clearAll`; safe immediately because the edge caches keep
+    * intact lineage). */
   private[graft] def rankBasesClear(): Unit = rankBases.synchronized {
     val it = rankBases.entrySet().iterator()
     while (it.hasNext) {

@@ -102,9 +102,9 @@ object AnalysisQueries extends graft.QueryModule {
     * each ran the identical distinct-count over the million-row tf
     * explode as an eager per-call action. Same sharing category as
     * [[graft.core.DfCache]] (cross-entry, session-scoped, nothing
-    * persisted across runs); cleared alongside it by the bench's
-    * cold-cache hook ([[nDocsTfMemoClear]]) so isolated minima keep
-    * paying the honest standalone count. */
+    * persisted across runs); cleared alongside it by
+    * [[graft.GraftSession.coldReset]] ([[nDocsTfMemoClear]]) so a cold
+    * rep pays the standalone count. */
   private val nDocsTfMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), java.lang.Double]()
   private[graft] def nDocsTfMemoClear(): Unit = nDocsTfMemo.clear()

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.TextFunctions._
 import graft.functions.Tokenizer
-import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, PlanInputs}
+import graft.operators.TruncationStrategies
+import graft.pipeline.{MapReduceConfig, MapReducePipeline, PlanInputs}
 
 /** The reference's end-to-end QA dataflow as driver-checkable queries
   * (SURVEY.md §2.5 map/reduce, §2.6 truncation, §2.7 stats, §2.8 batching).
@@ -84,17 +85,14 @@ object QaPipeline extends graft.QueryModule {
         round(col("surviving_tokens") * lit(1.0) / col("map_input_tokens"), 4))
   }
 
-  /** M9/T1/T4: truncation pipeline — single-call path, per doc. */
+  /** M9/T1/T4: truncation pipeline — single-call path, per doc: the
+    * engine's truncation step, which scans each document once. */
   def truncation(spark: SparkSession, dir: String): DataFrame =
-    Tables.loadSpread(spark, dir, "documents")
-      .withColumn("t", truncate_tokens(col("text"), lit(TruncMax), lit("start")))
-      .withColumn("ttoks", regex_tokens(col("t.text")))
-      .select(col("doc_id"),
-        col("t.original_tokens").as("original_tokens"),
-        col("t.truncated_tokens").as("truncated_tokens"),
-        col("t.truncation_applied").as("truncation_applied"),
-        ExtractiveModel.score(col("ttoks"), PlanInputs.literals(cfg).questionTokens)
-          .as("score"))
+    graft.Engine(format = "hybrid")
+      .truncationAnswers(Tables.loadSpread(spark, dir, "documents"), Nil,
+        lit(TruncMax), TruncationStrategies.get("start"), PlanInputs.literals(cfg))
+      .select("doc_id", "original_tokens", "truncated_tokens",
+        "truncation_applied", "score")
 
   /** A8: corpus-level truncation summary — one row. */
   def truncationSummary(spark: SparkSession, dir: String): DataFrame = {
@@ -117,14 +115,19 @@ object QaPipeline extends graft.QueryModule {
     * ([[graft.operators.TextMetrics.scoreAnswers]]) so the floats are
     * engine-reproducible; the model-scorer plug point for this same
     * dataflow is spec-pinned in ScaleSpec. */
-  def answerPrf(spark: SparkSession, dir: String): DataFrame = {
+  def answerPrf(spark: SparkSession, dir: String): DataFrame =
+    graft.operators.TextMetrics.scoreAnswers(
+      answerRefs(spark, dir), "llm_answer", "ref_text", col("doc_id"))
+
+  /** Each document's pipeline answer (`llm_answer`) beside its reference
+    * (`ref_text`): the document's first-[[TruncMax]]-token prefix. */
+  private def answerRefs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.loadSpread(spark, dir, "documents")
     val refs = docs
       .withColumn("t", truncate_tokens(col("text"), lit(TruncMax), lit("start")))
       .select(col("doc_id"), col("t.text").as("ref_text"))
-    val cand = pipe.answers(docs).select(col("doc_id"), col("llm_answer"))
-    graft.operators.TextMetrics.scoreAnswers(
-      cand.join(refs, "doc_id"), "llm_answer", "ref_text", col("doc_id"))
+    pipe.answers(docs).select(col("doc_id"), col("llm_answer"))
+      .join(refs, "doc_id")
   }
 
   private[queries] val EmbedDims = 16
@@ -142,14 +145,9 @@ object QaPipeline extends graft.QueryModule {
     * floats replay exactly; the DuckDB oracle re-derives the embedding
     * bit-for-bit via the XxHashSql xxh64 + fmix64 chains. */
   def embedScore(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.loadSpread(spark, dir, "documents")
-    val refs = docs
-      .withColumn("t", truncate_tokens(col("text"), lit(TruncMax), lit("start")))
-      .select(col("doc_id"), col("t.text").as("ref_text"))
-    val cand = pipe.answers(docs).select(col("doc_id"), col("llm_answer"))
     val scored = graft.operators.TextMetrics.scorePairsWith(
       new graft.operators.TextMetrics.RandomProjectionScorer(EmbedDims),
-      cand.join(refs, "doc_id"), "llm_answer", "ref_text", "doc_id")
+      answerRefs(spark, dir), "llm_answer", "ref_text", "doc_id")
       .select(col("doc_id"), round(col("precision"), 6).as("p"),
         round(col("recall"), 6).as("r"), round(col("f1"), 6).as("f"))
     // two-level corpus-mean fold (doc_id within MeanBlock-sized blocks,
@@ -269,16 +267,11 @@ object QaPipeline extends graft.QueryModule {
     * (mirrored, never ±inf). */
   def bleu(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.{bigram_counts, count_tokens, term_counts}
-    val docs = Tables.loadSpread(spark, dir, "documents")
-    val refs = docs
-      .withColumn("t", truncate_tokens(col("text"), lit(TruncMax), lit("start")))
-      .select(col("doc_id"), col("t.text").as("ref_text"))
-    val cand = pipe.answers(docs).select(col("doc_id"), col("llm_answer"))
     def clipped(candMap: org.apache.spark.sql.Column, refMap: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       aggregate(map_entries(candMap), lit(0L), (acc, e) =>
         acc + least(e.getField("value"),
           coalesce(element_at(refMap, e.getField("key")), lit(0L))))
-    val scored = cand.join(refs, "doc_id")
+    val scored = answerRefs(spark, dir)
       .withColumn("c", count_tokens(col("llm_answer")).cast("long"))
       .withColumn("r", least(count_tokens(col("ref_text")), lit(TruncMax))
         .cast("long"))

@@ -75,8 +75,27 @@ class EngineSpec extends SparkSpec {
     // extensions only apply at session construction); the end-to-end path
     // is exercised via spark-shell with spark.sql.extensions (see verify
     // skill). Here: injection runs cleanly and registers the function set.
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
+    val injected = scala.collection.mutable.ArrayBuffer[String]()
+    val exts = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
     new GraftExtensions().apply(exts)
+    assert(injected.size == injected.distinct.size, injected)
+    // the session-level path registers the same names: a fresh session
+    // starts from the built-ins alone (this test session has no
+    // extensions), so what register adds is the registry minus those
+    val fresh = spark.newSession()
+    graft.functions.TextFunctions.register(fresh)
+    val builtins = org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+      .builtin.listFunction().map(_.funcName).toSet
+    val registered = fresh.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).toSet -- builtins
+    assert(registered == injected.toSet,
+      s"only injected: ${injected.toSet -- registered}; " +
+        s"only registered: ${registered -- injected}")
     // and the session-level registration path covers SQL resolution:
     graft.functions.TextFunctions.register(spark)
     val r = spark.sql(

@@ -112,8 +112,13 @@ class GraftSessionSpec extends SparkSpec {
       .map(_.getFileName.toString)
     assert(builders == Seq("GraftSession.scala"))
     val deleted = Seq("SPARK_GRAFT_CODEGEN_CACHE", "SPARK_GRAFT_OHA_FALLBACK",
-      "SPARK_GRAFT_AQE_PARALLELISM_FIRST")
+      "SPARK_GRAFT_AQE_PARALLELISM_FIRST", "SPARK_GRAFT_BENCH_FULL",
+      "SPARK_GRAFT_BENCH_REPS", "SPARK_GRAFT_BENCH_ISOLATED",
+      "SPARK_GRAFT_RETRY_OVER", "SPARK_GRAFT_SAMPLE", "SPARK_GRAFT_SAMPLE_ALL")
     for (p <- sources; k <- deleted) assert(!hits(p, k), s"$k in $p")
+    // the measurement mains write no tracked file and run no git
+    for (p <- sources; k <- Seq("bench_mins", "ProcessBuilder(\"git\""))
+      assert(!hits(p, k), s"$k in $p")
   }
 }
 

@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * The frame is built in-memory (30% of the fact rows on ONE hot key),
   * so the spec needs no /tmp scale frame; SkewBench itself measures the
-  * timings on the full zipf frame and commits them under the `skew`
-  * key of docs/bench_mins.json. */
+  * timings on the full zipf frame and prints them as one JSON line. */
 class SkewBenchSpec extends SparkSpec {
 
   private val NOrders = 60000
