@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Tokenizer
 import graft.operators.{TruncationStrategies, TruncationStrategy}
-import graft.pipeline.{MapReducePipeline, PlanInputs, TextModel, ExtractiveModel}
+import graft.pipeline.{PlanInputs, TextModel, ExtractiveModel}
 import graft.sources.{BinaryDocs, DocumentParser, Prompts}
 
 /** §3.3: the single-request service facade (webapp/backend/api/
@@ -104,8 +104,9 @@ class QaService(spark: SparkSession, model: TextModel = ExtractiveModel) {
 
   /** Answer one question about one raw document (the /answer endpoint
     * semantics): bytes -> parser slot -> one row -> the map-reduce (or
-    * truncation) template -> the reduced answer + judgment. A map-reduce
-    * ask fails fast on a chunk size <= 0 or an overlap outside
+    * truncation) template -> the reduced answer + judgment. An ask fails
+    * fast on a `pipelineType` outside [[Engine.supportedPipelines]]; a
+    * map-reduce ask on a chunk size <= 0 or an overlap outside
     * [0, chunkSize), whatever the document. */
   def ask(fileName: String, content: Array[Byte], question: String,
       format: String = "hybrid", chunkSize: Int = 64, overlap: Int = 16,
@@ -114,6 +115,8 @@ class QaService(spark: SparkSession, model: TextModel = ExtractiveModel) {
       buffer: Int = 2000, promptSet: String = "hybrid",
       parsers: Map[String, DocumentParser] = BinaryDocs.defaultParsers): QaAnswer = {
     require(fileName.nonEmpty, "no file provided")
+    require(Engine.supportedPipelines.contains(pipelineType),
+      s"unknown pipelineType '$pipelineType' (expected ${Engine.supportedPipelines.mkString(" | ")})")
     val truncation = pipelineType == "truncation"
     if (!truncation) {
       require(chunkSize > 0, s"chunkSize must be > 0, got $chunkSize")
@@ -261,7 +264,7 @@ object QaService {
       // an upload with no tokens has no chunk, so map-reduce returns no
       // row: answer with the P9 canned row, like truncation does
       if (row == null) QaAnswer(
-        answer = MapReducePipeline.NoAnswer, score = 0.0, judgment = "No answer",
+        answer = Engine.NoAnswer, score = 0.0, judgment = "No answer",
         chunksBefore = 0L, chunksAfter = 0L, retentionRate = 0.0,
         promptSet = promptSet)
       else {

@@ -24,9 +24,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Cost: `repartitionByRange` runs a sampling job over `df` in the action,
   * and when `df` has no shuffle of its own that job recomputes all of it
   * from the scan, then the shuffle's map stage computes it again. Number
-  * rows before expensive projections, not after (`MapReducePipeline.judged`
-  * and `Engine.truncationJudged` number raw documents and score them
-  * above the exchange). The exec persists its sorted child (Spark's
+  * rows before expensive projections, not after (`Engine.judged` and
+  * `Engine.truncationJudged` number raw documents and score them above
+  * the exchange). The exec persists its sorted child (Spark's
   * default, `MEMORY_AND_DISK_SER`) for the count pass and releases it
   * when the action ends. Each reference to the numbered frame in one
   * plan (a self-join) plans its own range exchange and numbering.

@@ -67,11 +67,11 @@ object LinearModel {
   /** Full-batch GD on `feats` (one row per example: unique `idCol`,
     * double feature columns `xCols`, 0/1 double label `yCol`).
     * CONTRACT (ADVICE r17): ids, features and labels must be NON-NULL —
-    * the RDD fold reads primitives positionally and fails fast
-    * (NullPointerException in the build pass) on a null cell, where the
-    * old SQL aggregation silently skipped it; callers own their
-    * feature-table hygiene (every catalog caller builds non-null
-    * projections).
+    * the RDD fold reads primitives positionally, where a null slot reads
+    * back as 0, so the build pass fails fast on a null cell with an
+    * IllegalArgumentException naming its column (the old SQL
+    * aggregation silently skipped it); callers own their feature-table
+    * hygiene (every catalog caller builds non-null projections).
     * Internally projects, block-partitions and sorts the examples once
     * (one shuffle, persisted for the loop, released before return);
     * the caller's own partitioning of `feats` is irrelevant to the
@@ -103,9 +103,16 @@ object LinearModel {
     // the trainer against a driver replay.
     val internal = projected.queryExecution.toRdd
     val nParts = math.max(1, internal.getNumPartitions)
+    def nullCell(c: String): Nothing =
+      throw new IllegalArgumentException(s"trainSoftsignGd: null in column '$c'")
     val rows = internal
-      .map(r => (r.getLong(0), (r.getLong(1), r.getArray(2).toDoubleArray,
-        r.getDouble(3))))
+      .map { r =>
+        if (r.isNullAt(1)) nullCell(idCol)
+        val xs = r.getArray(2)
+        for (j <- 0 until xs.numElements() if xs.isNullAt(j)) nullCell(xCols(j))
+        if (r.isNullAt(3)) nullCell(yCol)
+        (r.getLong(0), (r.getLong(1), xs.toDoubleArray, r.getDouble(3)))
+      }
       .partitionBy(new org.apache.spark.HashPartitioner(nParts))
       .mapPartitions({ itr =>
         val buf = itr.toArray

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.TextFunctions._
 import graft.functions.Tokenizer
+import graft.Engine
 import graft.operators.TruncationStrategies
-import graft.pipeline.{MapReduceConfig, MapReducePipeline, PlanInputs}
 
 /** The reference's end-to-end QA dataflow as driver-checkable queries
   * (SURVEY.md §2.5 map/reduce, §2.6 truncation, §2.7 stats, §2.8 batching).
@@ -20,29 +20,28 @@ import graft.pipeline.{MapReduceConfig, MapReducePipeline, PlanInputs}
   */
 object QaPipeline extends graft.QueryModule {
 
-  private val cfg = MapReduceConfig(
-    chunkSize = 64, overlap = 16, threshold = 1,
-    question = "spark query join data")
-  private def pipe = new MapReducePipeline(cfg)
+  private val engine = Engine(format = "hybrid", chunkSize = 64, overlap = 16,
+    threshold = Some(1), question = "spark query join data")
+  private val cfg = engine.config
 
   private val TruncMax = 100
 
   /** M1–M7/P4/P9/A7/O1 in one result: per-doc reduced answers. */
   def mapreduceAnswers(spark: SparkSession, dir: String): DataFrame =
-    pipe.answers(Tables.loadSpread(spark, dir, "documents"))
+    engine.answers(Tables.loadSpread(spark, dir, "documents"))
 
   /** + judge & positional batching (O5, P7 5-way judgment). */
   def judged(spark: SparkSession, dir: String): DataFrame =
-    pipe.judged(Tables.loadSpread(spark, dir, "documents"))
+    engine.judged(Tables.loadSpread(spark, dir, "documents"))
 
   /** Judgments without batch keys — the cheap base for the judgment
     * aggregations below (skips the global-order pass they never use). */
   private def judgedAnswers(spark: SparkSession, dir: String): DataFrame =
-    pipe.judgedAnswers(Tables.loadSpread(spark, dir, "documents"))
+    engine.judgedAnswers(Tables.loadSpread(spark, dir, "documents"))
 
   /** Judge input blocks: 5 items per batch, XML shape (FIXTURES.md §6). */
   def judgeBlocks(spark: SparkSession, dir: String): DataFrame =
-    pipe.judgeBlocks(Tables.loadSpread(spark, dir, "documents"))
+    engine.judgeBlocks(Tables.loadSpread(spark, dir, "documents"))
 
   /** A4: judgment distribution with share-of-total. */
   def judgmentDistribution(spark: SparkSession, dir: String): DataFrame = {
@@ -72,7 +71,7 @@ object QaPipeline extends graft.QueryModule {
 
   /** A1/A5/A7: global token-usage summary — one row, whole-corpus. */
   def tokenSummary(spark: SparkSession, dir: String): DataFrame = {
-    val m = pipe.mapped(Tables.loadSpread(spark, dir, "documents"))
+    val m = engine.mapped(Tables.loadSpread(spark, dir, "documents"))
     m.agg(
       countDistinct(col("doc_id")).as("n_docs"),
       count(lit(1)).as("total_chunks"),
@@ -88,9 +87,8 @@ object QaPipeline extends graft.QueryModule {
   /** M9/T1/T4: truncation pipeline — single-call path, per doc: the
     * engine's truncation step, which scans each document once. */
   def truncation(spark: SparkSession, dir: String): DataFrame =
-    graft.Engine(format = "hybrid")
-      .truncationAnswers(Tables.loadSpread(spark, dir, "documents"), Nil,
-        lit(TruncMax), TruncationStrategies.get("start"), PlanInputs.literals(cfg))
+    engine.truncationAnswers(Tables.loadSpread(spark, dir, "documents"), Nil,
+      lit(TruncMax), TruncationStrategies.get("start"), engine.inputs)
       .select("doc_id", "original_tokens", "truncated_tokens",
         "truncation_applied", "score")
 
@@ -126,7 +124,7 @@ object QaPipeline extends graft.QueryModule {
     val refs = docs
       .withColumn("t", truncate_tokens(col("text"), lit(TruncMax), lit("start")))
       .select(col("doc_id"), col("t.text").as("ref_text"))
-    pipe.answers(docs).select(col("doc_id"), col("llm_answer"))
+    engine.answers(docs).select(col("doc_id"), col("llm_answer"))
       .join(refs, "doc_id")
   }
 
@@ -229,7 +227,7 @@ object QaPipeline extends graft.QueryModule {
   def rougeL(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.{count_tokens, lcs_tokens}
     val docs = Tables.loadSpread(spark, dir, "documents")
-    val cand = pipe.answers(docs).select(col("doc_id"), col("llm_answer"))
+    val cand = engine.answers(docs).select(col("doc_id"), col("llm_answer"))
     cand.join(docs.select(col("doc_id"), col("text")), "doc_id")
       .select(col("doc_id"),
         lcs_tokens(col("llm_answer"), col("text"), lit(RougeMax))
@@ -305,16 +303,12 @@ object QaPipeline extends graft.QueryModule {
 
   /** JSON format: 0-10 scale, threshold 5, XML-wrapped reduce input. */
   def mapreduceJson(spark: SparkSession, dir: String): DataFrame =
-    new MapReducePipeline(MapReduceConfig(
-      chunkSize = cfg.chunkSize, overlap = cfg.overlap, threshold = 5,
-      question = fmtQuestion, format = graft.pipeline.QaFormat.Json))
+    engine.copy(format = "json", threshold = Some(5), question = fmtQuestion)
       .answers(Tables.loadSpread(spark, dir, "documents"))
 
   /** Plain format: 0-100 scale, threshold 50, newline concat. */
   def mapreducePlain(spark: SparkSession, dir: String): DataFrame =
-    new MapReducePipeline(MapReduceConfig(
-      chunkSize = cfg.chunkSize, overlap = cfg.overlap, threshold = 50,
-      question = fmtQuestion, format = graft.pipeline.QaFormat.Plain))
+    engine.copy(format = "plain_text", threshold = Some(50), question = fmtQuestion)
       .answers(Tables.loadSpread(spark, dir, "documents"))
 
   /** §2.10: the SAME answers graph fed by a file stream through
@@ -322,7 +316,7 @@ object QaPipeline extends graft.QueryModule {
     * and it shares the batch oracle, so the driver gate verifies the
     * streaming execution path end-to-end. */
   def streamingAnswers(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingOps.streamingQaAnswers(spark, dir, cfg)
+    graft.streaming.StreamingOps.streamingQaAnswers(spark, dir, engine)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_qa_answers" -> streamingAnswers,

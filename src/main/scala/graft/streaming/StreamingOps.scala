@@ -5,8 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.pipeline.{MapReduceConfig, MapReducePipeline}
-
 /** Structured Streaming mode (SURVEY.md §2.10): the reference's asyncio
   * fan-out becomes a file-source micro-batch stream through the same
   * dataflow graph.
@@ -800,8 +798,7 @@ object StreamingOps {
     * foreachBatch, appending to an in-memory sink. Returns the union of
     * all batch outputs (== batch answers on the same corpus). */
   def streamingQaAnswers(spark: SparkSession, docsDir: String,
-      cfg: MapReduceConfig): DataFrame = {
-    val pipe = new MapReducePipeline(cfg)
+      engine: graft.Engine): DataFrame = {
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     val src = tableStream(spark, docsDir, "documents", docsSchema,
       maxFilesPerTrigger = Some(1))
@@ -812,7 +809,7 @@ object StreamingOps {
         // over 4 tasks bought only noise-sized time for its exchange
         // (EntryProbe, sf0.1, 4 cores, reps 2-5: 1.04-1.19 s spread vs
         // 1.11-1.20 s not)
-        val out = pipe.answers(batch)
+        val out = engine.answers(batch)
         // the work plan of this entry is the per-batch BATCH graph the
         // foreachBatch body runs — record it (the wrapper query's own
         // plan is only the source scan feeding the sink)
@@ -830,7 +827,7 @@ object StreamingOps {
       // emptyDataFrame would break any downstream column reference)
       val emptyDocs = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], docsSchema)
-      pipe.answers(emptyDocs)
+      engine.answers(emptyDocs)
     } else dfs.reduce(_.unionAll(_))
   }
 

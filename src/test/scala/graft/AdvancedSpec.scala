@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.FuzzyJoin
-import graft.pipeline.MapReduceConfig
 import graft.queries.{Advanced, QaPipeline}
 import graft.streaming.StreamingOps
 
@@ -45,8 +44,7 @@ class AdvancedSpec extends SparkSpec {
   }
 
   test("streaming QA answers equal batch answers") {
-    val cfg = MapReduceConfig()
-    val streamed = StreamingOps.streamingQaAnswers(spark, sf, cfg)
+    val streamed = StreamingOps.streamingQaAnswers(spark, sf, Engine(threshold = Some(1)))
       .orderBy("doc_id").collect()
     val batch = QaPipeline.mapreduceAnswers(spark, sf)
       .orderBy("doc_id").collect()

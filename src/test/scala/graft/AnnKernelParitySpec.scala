@@ -119,4 +119,12 @@ class AnnKernelParitySpec extends SparkSpec {
           .toList).toList)).toMap
     assert(fused == legacy)
   }
+
+  test("an empty codebook fails loudly in ivfAssign and pqEncode") {
+    val empty = centroids.limit(0)
+    val ivf = intercept[IllegalArgumentException](Similarity.ivfAssign(corpus, empty))
+    assert(ivf.getMessage.contains("nearestIdCol: empty centroid codebook"), ivf.getMessage)
+    val pq = intercept[IllegalArgumentException](Similarity.pqEncode(corpus, empty, m, dim))
+    assert(pq.getMessage.contains("pqEncodeCol: empty anchor codebook"), pq.getMessage)
+  }
 }

@@ -3,14 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{MapReduceConfig, MapReducePipeline}
-
 class EngineSpec extends SparkSpec {
 
   test("improveQuestions: rewrite + original kept + null fallback") {
     val sess = spark
     import sess.implicits._
-    val pipe = new MapReducePipeline(MapReduceConfig())
+    val pipe = Engine()
     val qa = Seq("  what   is\nrevenue", "already clean?").toDF("question")
     val out = pipe.improveQuestions(qa).collect()
     assert(out(0).getAs[String]("question") == "what is revenue?")
@@ -31,8 +29,7 @@ class EngineSpec extends SparkSpec {
       override def improve(question: Column): Column = upper(question)
     }
     val qa = Seq("what is revenue").toDF("question")
-    val out = new MapReducePipeline(MapReduceConfig(), UpperModel)
-      .improveQuestions(qa).collect()
+    val out = Engine(model = UpperModel).improveQuestions(qa).collect()
     // the custom model's rewriter reaches the question stage, not the
     // extractive default
     assert(out(0).getAs[String]("question") == "WHAT IS REVENUE")

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 
 import graft.operators.{GlobalOrder, TruncationStrategies}
-import graft.pipeline.{MapReduceConfig, MapReducePipeline}
 
 /** `GlobalOrder.withRowNumber` on Spark's distributed sequence equals
   * the RDD numbering it replaced ([[LegacyOracles.globalOrder]]) row for
@@ -69,7 +68,7 @@ class GlobalOrderSpec extends SparkSpec {
   private def numberedFrames(s: SparkSession): Seq[(String, () => DataFrame)] = {
     def docs = graft.core.Tables.load(s, sf, "documents")
     Seq(
-      "judged" -> (() => new MapReducePipeline(MapReduceConfig()).judged(docs)),
+      "judged" -> (() => Engine(threshold = Some(1)).judged(docs)),
       "truncationJudged" -> (() => Engine().truncationJudged(docs, lit(30),
         TruncationStrategies.get("start"))),
       "ta_shuffle_order" -> (() => graft.queries.AnalysisQueries.shuffleOrder(s, sf)),

@@ -12,8 +12,9 @@ import org.apache.spark.storage.StorageLevel
 
 /** The one session builder and the one cold reset: a `GraftSession`
   * carries every shipped conf, the test session differs from it only
-  * where documented, `coldReset` empties every cross-entry memo, and no
-  * other builder creeps back into `src/main`. */
+  * where documented, `coldReset` empties every cross-entry memo, no
+  * other builder creeps back into `src/main`, and `src/main` keeps one QA
+  * pipeline class with one judge call site and one numbering call site. */
 class GraftSessionSpec extends SparkSpec {
 
   test("GraftSession(n) is local[n] with n shuffle partitions, every conf " +
@@ -102,10 +103,7 @@ class GraftSessionSpec extends SparkSpec {
 
   test("src/main builds sessions only through GraftSession and reads no " +
       "deleted conf knob") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root))
-    val sources = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val sources = mainSources
     def hits(p: Path, needle: String): Boolean =
       Files.readString(p).contains(needle)
     val builders = sources.filter(hits(_, "SparkSession.builder"))
@@ -119,6 +117,21 @@ class GraftSessionSpec extends SparkSpec {
     // the measurement mains write no tracked file and run no git
     for (p <- sources; k <- Seq("bench_mins", "ProcessBuilder(\"git\""))
       assert(!hits(p, k), s"$k in $p")
+  }
+
+  test("src/main has one QA pipeline class with one judge and one numbering call") {
+    val text = mainSources.map(Files.readString).mkString("\n")
+    def count(needle: String): Int =
+      java.util.regex.Pattern.quote(needle).r.findAllIn(text).size
+    assert(count("class MapReducePipeline") == 0)
+    assert(count("model.judge(") == 1)
+    assert(count("positionalBatches(") - count("def positionalBatches(") == 1)
+  }
+
+  private def mainSources: Seq[Path] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root))
+    Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
   }
 }
 

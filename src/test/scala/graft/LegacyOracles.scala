@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.LongType
 import graft.functions.Tokenizer
 import graft.functions.TextFunctions.split_chunks
 import graft.operators.TruncationStrategy
-import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, PlanInputs, TextModel}
+import graft.pipeline.{ExtractiveModel, MapReduceConfig, PlanInputs, TextModel}
 
 /** Reference formulations the fused codegen kernels replaced, kept
   * verbatim as parity oracles: [[pairsOfLegacy]] for
@@ -47,7 +47,7 @@ object LegacyOracles {
     spark.createDataFrame(indexed, schema)
   }
 
-  /** `MapReducePipeline.positionalBatches` over [[globalOrder]], so the
+  /** `Engine.positionalBatches` over [[globalOrder]], so the
     * judged oracles do not number with the operator they are checked
     * against. */
   def positionalBatches(df: DataFrame, order: Column, size: Int = 5): DataFrame =
@@ -75,7 +75,7 @@ object LegacyOracles {
         col("t.truncation_applied").as("truncation_applied"),
         col("score"),
         when(col("score") > threshold, model.content(col("ttoks")))
-          .otherwise(lit(MapReducePipeline.NoAnswer)).as("llm_answer"))
+          .otherwise(lit(Engine.NoAnswer)).as("llm_answer"))
       .withColumn("judgment", model.judge(cfg.format.scaleDown(col("score")),
         when(col("score") <= threshold, lit(0)).otherwise(lit(1))))
   }
@@ -171,7 +171,7 @@ private[graft] object LegacyExtractiveModel extends TextModel {
 }
 
 /** The explode -> groupBy(doc_id) -> aggregate formulation of
-  * [[MapReducePipeline]]'s `answers`/`judgedAnswers`/`judged`, kept
+  * [[Engine]]'s `answers`/`judgedAnswers`/`judged`, kept
   * verbatim as the parity oracle for the row-local plan
   * (MapReduceParitySpec). `mapped` is the pipeline's per-chunk map as it
   * was before the document was tokenized once: `split_chunks`, then the
@@ -228,7 +228,7 @@ private[graft] class LegacyMapReduce(cfg: MapReduceConfig,
         round(col("chunks_after") / col("chunks_before"), 4))
       // P9: error-row fabrication — no surviving chunk => canned answer
       .withColumn("llm_answer",
-        coalesce(col("top_content"), lit(MapReducePipeline.NoAnswer)))
+        coalesce(col("top_content"), lit(Engine.NoAnswer)))
       .drop("top_content")
   }
 
@@ -273,7 +273,7 @@ private[graft] object LegacyQaAsk {
     // an upload with no tokens has no chunk, so map-reduce returns no
     // row: answer with the P9 canned row, like truncation does
     if (rows.isEmpty) return QaAnswer(
-      answer = MapReducePipeline.NoAnswer, score = 0.0, judgment = "No answer",
+      answer = Engine.NoAnswer, score = 0.0, judgment = "No answer",
       chunksBefore = 0L, chunksAfter = 0L, retentionRate = 0.0,
       promptSet = promptSet)
     val row = rows.head

@@ -62,6 +62,19 @@ class LinearModelSpec extends SparkSpec {
     assert(acc >= 0.9, s"accuracy $acc")
   }
 
+  test("a null id, feature or label fails fast, naming its column") {
+    val df = toy(50).toDF("id", "x1", "y").withColumn("x2", col("x1") * 2)
+    def nulled(c: String) = df.withColumn(c,
+      when(col("id") === 7L, lit(null).cast(df.schema(c).dataType)).otherwise(col(c)))
+    for (c <- Seq("id", "x1", "x2", "y")) {
+      val e = intercept[Exception](LinearModel.trainSoftsignGd(nulled(c), "id",
+        Seq("x1", "x2"), "y", learnRate = 4.0, iters = 2))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains(s"null in column '$c'")), s"$c: $chain")
+    }
+  }
+
   test("ta_quality_lr: probabilities valid, pred consistent, beats majority class") {
     val rows = graft.queries.AnalysisQueries.qualityLr(spark, sf).collect()
     assert(rows.nonEmpty)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{ChunkTokens, TruncateTokens}
 import graft.operators.TruncationStrategies
-import graft.pipeline.{ExtractiveModel, MapReduceConfig, MapReducePipeline, QaFormat, TextModel}
+import graft.pipeline.{ExtractiveModel, TextModel}
 
 /** Score = tokens longer than 3 chars (nested lambda inside the
   * pipeline's own lambdas), content = reversed tokens upper-cased. */
@@ -48,12 +48,12 @@ object MapReduceParitySpec {
   * batch-last form ([[LegacyOracles.truncationJudged]]). */
 class MapReduceParitySpec extends SparkSpec {
 
-  private val formats = Seq(QaFormat.Json, QaFormat.Plain, QaFormat.Hybrid)
+  private val formats = Engine.supportedFormats
   private val question = "spark query join data"
 
   // chunkSize 4, overlap 1 (stride 3); threshold 1: a chunk survives with
   // at least 2 distinct question tokens
-  private val small = MapReduceConfig(chunkSize = 4, overlap = 1, threshold = 1,
+  private val small = Engine(chunkSize = 4, overlap = 1, threshold = Some(1),
     question = question)
 
   private lazy val edgeDocs: DataFrame = spark.createDataFrame(
@@ -72,10 +72,10 @@ class MapReduceParitySpec extends SparkSpec {
     n.zip(o).foreach { case (a, b) => assert(a == b, s"$clue: $a != $b") }
   }
 
-  private def assertParity(cfg: MapReduceConfig, model: TextModel,
+  private def assertParity(engine: Engine, model: TextModel,
       docs: DataFrame, what: String): Unit = {
-    val (pipe, legacy) = (new MapReducePipeline(cfg, model), new LegacyMapReduce(cfg, model))
-    val clue = s"$what/${cfg.format}"
+    val (pipe, legacy) = (engine.copy(model = model), new LegacyMapReduce(engine.config, model))
+    val clue = s"$what/${engine.format}"
     assertSame(pipe.answers(docs), legacy.answers(docs), s"$clue answers")
     assertSame(pipe.judgedAnswers(docs), legacy.judgedAnswers(docs), s"$clue judgedAnswers")
     assertSame(pipe.judged(docs), legacy.judged(docs), s"$clue judged")
@@ -85,31 +85,31 @@ class MapReduceParitySpec extends SparkSpec {
     val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
     val docs = graft.core.Tables.load(spark, sf01, "documents")
     formats.foreach(f =>
-      assertParity(MapReduceConfig(question = question, format = f),
+      assertParity(Engine(format = f, threshold = Some(1), question = question),
         ExtractiveModel, docs, "sf0.01"))
   }
 
   test("row-local answers equal the aggregate oracle on edge-case documents") {
     for (f <- formats; model <- Seq(ExtractiveModel, LongTokenModel))
       assertParity(small.copy(format = f), model, edgeDocs, model.getClass.getSimpleName)
-    val byId = rows(new MapReducePipeline(small).answers(edgeDocs))
+    val byId = rows(small.answers(edgeDocs))
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     // no token (empty, whitespace-only, null) => no answer row
     assert(byId.keySet == Set(3L, 5L, 6L, 7L, 8L, 9L, 10L, 11L, 12L))
     assert(byId(6L).getAs[Long]("chunks_before") == 1L)
     assert(byId(7L).getAs[Long]("chunks_before") == 2L)
-    assert(byId(8L).getAs[String]("llm_answer") == MapReducePipeline.NoAnswer)
+    assert(byId(8L).getAs[String]("llm_answer") == Engine.NoAnswer)
     assert(byId(9L).getAs[Long]("chunks_after") == 3L)
     // score ties go to the lowest chunk_idx
     assert(byId(10L).getAs[String]("llm_answer") == "spark query x y")
-    val json = rows(new MapReducePipeline(small.copy(format = QaFormat.Json))
+    val json = rows(small.copy(format = "json")
       .answers(edgeDocs.filter(col("doc_id") === 11L))).head
     assert(json.getAs[String]("reduce_input").contains("&amp;"), json)
   }
 
   test("answers on a parquet scan plan no shuffle and no aggregate") {
     val docs = graft.core.Tables.load(spark, sf, "documents")
-    val plan = new MapReducePipeline(MapReduceConfig()).answers(docs)
+    val plan = Engine(threshold = Some(1)).answers(docs)
       .queryExecution.sparkPlan
     assert(plan.collect { case s: ShuffleExchangeLike => s }.isEmpty, plan.treeString)
     assert(plan.collect { case a: BaseAggregateExec => a }.isEmpty, plan.treeString)
@@ -136,7 +136,7 @@ class MapReduceParitySpec extends SparkSpec {
 
   test("judged shuffles once, to number raw rows, and scores above that exchange") {
     val docs = graft.core.Tables.load(spark, sf, "documents")
-    assertRawRowsNumbered(new MapReducePipeline(MapReduceConfig()).judged(docs),
+    assertRawRowsNumbered(Engine(threshold = Some(1)).judged(docs),
       classOf[ChunkTokens])
   }
 

@@ -109,7 +109,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("lang"))
-    val batched = graft.pipeline.MapReducePipeline.positionalBatches(docs, col("doc_id"))
+    val batched = Engine.positionalBatches(docs, col("doc_id"))
     // contract: no task ever numbers the full dataset (reference needs a
     // total order, not a single-task sort — async_evaluation.py:389-404)
     val physical = batched.queryExecution.executedPlan.toString

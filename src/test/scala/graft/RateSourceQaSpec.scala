@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{MapReduceConfig, MapReducePipeline}
 import graft.streaming.StreamingOps
 
 /** The rate-source throttle analog ([[StreamingOps.rateThrottledQa]]):
@@ -15,7 +14,7 @@ import graft.streaming.StreamingOps
 class RateSourceQaSpec extends SparkSpec {
 
   test("rate source: per-batch admission metric is exactly the bucket size; scorer equals the batch pipeline") {
-    val cfg = MapReduceConfig(chunkSize = 64, overlap = 16, threshold = 1,
+    val engine = Engine(chunkSize = 64, overlap = 16, threshold = Some(1),
       question = "spark query join data")
     // size the drain off the corpus so routing is provably even: two
     // requests per document, four full admission buckets
@@ -23,7 +22,7 @@ class RateSourceQaSpec extends SparkSpec {
     val total = 2 * nDocs
     val bucket = total / 4
     val (result, perBatch) = StreamingOps.rateThrottledQa(spark, sf,
-      cfg.chunkSize, cfg.overlap, cfg.question.split(" ").toSeq,
+      engine.chunkSize, engine.overlap, engine.question.split(" ").toSeq,
       rowsPerBatch = bucket, totalRows = total)
 
     // throughput contract: every non-empty batch admitted exactly the
@@ -49,7 +48,7 @@ class RateSourceQaSpec extends SparkSpec {
     // scorer parity: the streaming column-HOF chunk scorer must equal
     // the batch pipeline's generator-based best_score per document
     val docs = graft.core.Tables.loadSpread(spark, sf, "documents")
-    val batch = new MapReducePipeline(cfg).answers(docs)
+    val batch = engine.answers(docs)
       .select(col("doc_id"), col("best_score").as("batch_best"))
     val joined = result.join(batch, "doc_id")
     assert(joined.count() == nDocs, "every doc must appear in both paths")
@@ -60,8 +59,8 @@ class RateSourceQaSpec extends SparkSpec {
 
     // every per-document row as the stream computed it with regex tokens
     // and its own copy of the hash-set score formula
-    val legacy = LegacyOracles.rateQaScores(docs, cfg.chunkSize, cfg.overlap,
-      cfg.question.split(" ").toSeq).collect().sortBy(_.getLong(0)).toSeq
+    val legacy = LegacyOracles.rateQaScores(docs, engine.chunkSize, engine.overlap,
+      engine.question.split(" ").toSeq).collect().sortBy(_.getLong(0)).toSeq
     val now = result.select("doc_id", "token_count", "n_chunks", "best_score")
       .collect().sortBy(_.getLong(0)).toSeq
     assert(now == legacy)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.{expr, lit, when}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{TruncationStrategies, TruncationStrategy}
-import graft.pipeline.{ExtractiveModel, MapReducePipeline, TextModel}
+import graft.pipeline.{ExtractiveModel, TextModel}
 import graft.sources.BinaryDocs
 
 /** §3.3: single-request service facade — upload-shaped input, prepared
@@ -147,6 +147,17 @@ class ServiceSpec extends SparkSpec {
     assert(svc.templateModes.keySet.forall(_._2 == "truncation"))
   }
 
+  test("an ask rejects an unknown pipelineType up front") {
+    val svc = new QaService(spark)
+    for (p <- Seq("map_reduce", "Truncation", "")) {
+      val e = intercept[IllegalArgumentException](
+        svc.ask("v.md", doc.getBytes("UTF-8"), "spark query", pipelineType = p))
+      assert(e.getMessage.contains(s"unknown pipelineType '$p'") &&
+        Engine.supportedPipelines.forall(e.getMessage.contains), e.getMessage)
+    }
+    assert(svc.templateModes.isEmpty)
+  }
+
   test("preview returns the parsed head without running the pipeline") {
     val svc = new QaService(spark)
     val p = svc.preview("report.md", doc.getBytes("UTF-8"))
@@ -177,6 +188,10 @@ class ServiceSpec extends SparkSpec {
     // format is accepted by the Engine dispatch
     assert(caps.formatTypes.contains("plain_text"))
     caps.formatTypes.foreach(f => Engine(format = f))
+    // the alias selects the same format; an unknown name lists the canonical ones
+    assert(Engine(format = "plain").config.format == Engine(format = "plain_text").config.format)
+    val bad = intercept[IllegalArgumentException](Engine(format = "xml"))
+    assert(bad.getMessage == "unknown format 'xml' (expected json | plain_text | hybrid)")
     // the registry is JVM-global and other suites register strategies, so
     // the listing is compared with the registry as it is now
     assert(caps.truncationStrategies == graft.operators.TruncationStrategies.available)
@@ -361,8 +376,8 @@ class ServiceSpec extends SparkSpec {
     val fromStart = ask()
     TruncationStrategies.register(keep("end"))
     val fromEnd = ask()
-    assert(fromStart.answer != MapReducePipeline.NoAnswer &&
-      fromEnd.answer == MapReducePipeline.NoAnswer,
+    assert(fromStart.answer != Engine.NoAnswer &&
+      fromEnd.answer == Engine.NoAnswer,
       (fromStart.answer.take(40), fromEnd.answer.take(40)))
     assert(svc.templateModes.keySet == Set(("hybrid", "truncation", "svc_swap")))
   }

@@ -1,13 +1,12 @@
 package graft
 
 import graft.core.{Schemas, TypedPipeline}
-import graft.pipeline.{MapReduceConfig, MapReducePipeline}
 
 class TypedSpec extends SparkSpec {
 
   test("pipeline stages conform to the typed schemas") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val pipe = new MapReducePipeline(MapReduceConfig())
+    val pipe = Engine(threshold = Some(1))
     // .as[T] validates column names/types at analysis time; collect a few
     val m = TypedPipeline.mapResults(pipe.mapped(docs)).head(3)
     assert(m.forall(r => r.token_count > 0 && r.score >= 0))
@@ -21,7 +20,7 @@ class TypedSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val pipe = new MapReducePipeline(MapReduceConfig())
+    val pipe = Engine(threshold = Some(1))
     val ds = TypedPipeline.answers(pipe.answers(docs))
     val byAnswered = ds.groupByKey(_.chunks_after > 0)
       .count().collect().toMap
